@@ -1448,14 +1448,7 @@ final class LakehouseTable(
     * planning involved.
     */
   def filesOverlapping(loUs: Long, hiUs: Long): Seq[DataFile] =
-    filesOverlappingIn(metadata.currentSnapshot, loUs, hiUs)
-
-  private def filesOverlappingIn(
-      snap: Option[Snapshot], loUs: Long, hiUs: Long): Seq[DataFile] =
-    snap.map { s =>
-      log.readManifests(log.readManifestList(s).filter(_.overlaps(loUs, hiUs)))
-        .flatten.filter(_.overlaps(loUs, hiUs))
-    }.getOrElse(Nil)
+    planFiles(FilePruning(timeRange = Some((loUs, hiUs))))
 
   /** The subset of `files` whose MANIFEST bloom ([[KeyBloom]], written
     * when `write.key-bloom.bits` is set) may contain ANY key of the
@@ -1631,434 +1624,159 @@ final class LakehouseTable(
     */
   def readRangeForKeys(loUs: Long, hiUs: Long, keysUs: DataFrame): DataFrame = {
     // one snapshot capture: files and deletes from the SAME state
-    val snap = metadata.currentSnapshot
-    val (kept, _) = bloomSurvivors(filesOverlappingIn(snap, loUs, hiUs), keysUs)
+    val meta = metadata
+    val snap = meta.currentSnapshot
+    val (kept, _) = bloomSurvivors(
+      planFiles(meta, snap, FilePruning(timeRange = Some((loUs, hiUs)))), keysUs)
     readWithDeletes(kept, snap.map(liveDeleteFiles).getOrElse(Nil))
   }
 
   /** Files that MAY contain at least one of the given point keys
-    * (epoch micros of the partition-source column) — three pruning
-    * levels, all metadata-side: manifest-list bounds, per-file bounds,
-    * then the parquet bloom filter written at commit time (a footer
-    * +bitset read per surviving file, no data pages). The bloom layer
-    * is what min/max cannot do: reject a key that falls INSIDE a
-    * file's range but is absent from it — the common case for sparse
-    * point lookups over interleaved writers.
+    * (epoch micros of the partition-source column) — [[planFiles]]
+    * over the key dimension alone.
     */
-  def filesContainingAnyKey(keysUs: Seq[Long]): Seq[DataFile] = {
-    val meta = metadata
-    filesContainingAnyKeyIn(meta, meta.currentSnapshot, keysUs)
-  }
-
-  private def filesContainingAnyKeyIn(
-      meta: TableMetadata, snap: Option[Snapshot], keysUs: Seq[Long]): Seq[DataFile] = {
-    if (keysUs.isEmpty) return Nil
-    val keyCol = meta.partitionTransform.getOrElse(
-      throw new IllegalStateException("point skipping needs a partition-source key column"))
-    val ranged = snap.map { s =>
-      log.readManifests(
-          log.readManifestList(s).filter(r => keysUs.exists(k => r.overlaps(k, k))))
-        .flatten.filter(f => keysUs.exists(k => f.overlaps(k, k)))
-    }.getOrElse(Nil)
-    // manifest bloom first (round 11): zero-I/O — rejects a
-    // within-bounds file from the already-parsed manifest entry before
-    // the footer+bitset read is even attempted. Files without a bloom
-    // (or a foreign probe count) fall through to the footer.
-    bloomPointSurvivors(ranged,
-      f => keysUs.filter(k => f.overlaps(k, k)), resolvedKeyBloom, keyCol)
-  }
+  def filesContainingAnyKey(keysUs: Seq[Long]): Seq[DataFile] =
+    planFiles(FilePruning(keyPoints = Some(keysUs)))
 
   /** Read only the rows matching the given point keys, scanning only
-    * bloom-surviving files. Files and deletes derive from ONE
-    * metadata read, so a concurrent commit (e.g. a compaction folding
-    * the delete set) cannot pair old files with a newer, emptier
-    * delete set and resurrect masked rows.
+    * bloom-surviving files.
     */
   def readPoints(keysUs: Seq[Long]): DataFrame = {
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    val keyCol = meta.partitionTransform.getOrElse(
+    val keyCol = metadata.partitionTransform.getOrElse(
       throw new IllegalStateException("point lookup needs a partition-source key column"))
-    readWithDeletes(filesContainingAnyKeyIn(meta, snap, keysUs),
-      snap.map(liveDeleteFiles).getOrElse(Nil))
+    readPlanned(FilePruning(keyPoints = Some(keysUs)))
       .filter(unix_micros(col(keyCol).cast(TimestampType)).isin(keysUs: _*))
   }
 
-  /** [[readPoints]] WITHOUT the final key filter: scans only the
-    * point-surviving files (manifest bounds → manifest bloom → parquet
-    * footer bloom) plus the live delete masks, returning a SUPERSET of
-    * the point rows. The SQL expansion rule splices this under the
-    * query's own exact predicate (which re-applies on top), so it must
-    * not guess the predicate's key encoding — and unlike [[readPoints]]
-    * it is correct for integral key columns too, where a timestamp
-    * cast would mangle the filter. Empty `keysUs` (a contradictory
-    * IN-list intersection) plans zero files.
-    */
-  def readPointsPruned(keysUs: Seq[Long]): DataFrame = {
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    // past the per-key driver-probe cap the planning pass would go
-    // O(files × keys); switch to the distributed shape instead of
-    // surrendering to bounds-only pruning (VERDICT r12 #7)
-    val files =
-      if (keysUs.size <= PredicateBounds.MaxPointKeys)
-        filesContainingAnyKeyIn(meta, snap, keysUs)
-      else filesContainingAnyKeyLarge(snap, keysUs)
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil))
-  }
-
-  /** [[readPointsPruned]] for a SECONDARY stats column (round 13,
-    * VERDICT r12 #3): scans only the files that may contain any of the
-    * given point keys in `column` (manifest-stats long encoding) plus
-    * the live delete masks, returning a SUPERSET of the point rows —
-    * the SQL expansion splices this under the query's exact predicate
-    * for =/IN lookups on declared `write.stats-columns`. Three pruning
-    * levels: the per-file [[ColumnBounds]] recorded at append time,
-    * the manifest/sidecar column bloom (`write.column-bloom.bits`),
-    * and the parquet footer bloom (INT64 physical columns only) —
-    * plus, since round 14, the manifest-LIST roll-ups
-    * ([[ManifestRef.columnBounds]]), which drop whole manifests
-    * UNOPENED before any of the per-file checks run.
-    * `timeRangeUs` composes the predicate's TIME-key bounds on top
-    * (`WHERE ts >= … AND uid = 5`): the key dimension prunes by the
-    * per-file key bounds it already has, so neither dimension's
-    * pruning is forfeited to the other. Past
-    * [[PredicateBounds.MaxPointKeys]] the per-key driver probe gives
-    * way to binary-searched bounds + the distributed column-bloom
-    * probe, exactly mirroring [[readPointsPruned]]'s large-IN path.
-    */
-  def readPointsOn(
-      column: String,
-      keysUs: Seq[Long],
-      timeRangeUs: Option[(Long, Long)] = None): DataFrame =
-    readPointsMulti(None, Seq(column -> keysUs), Nil, timeRangeUs)
-
-  /** [[readPointsOn]] for a STRING stats column (round 14, VERDICT
-    * r13 #1) — the commonest real secondary lookup (`WHERE url = '…'`,
-    * `WHERE doc_id IN ('a','b')`) gets the same three-level pruning:
-    * truncated per-file string bounds ([[ColumnBounds]]), the
-    * manifest/sidecar column bloom (xxhash64 over UTF-8 bytes), and
-    * the parquet footer bloom (BINARY/string physical columns). All
-    * comparisons are code-point order ≡ UTF-8 byte order — the order
-    * the footer stats were taken in.
-    */
-  def readPointsOnString(
-      column: String,
-      keys: Seq[String],
-      timeRangeUs: Option[(Long, Long)] = None): DataFrame =
-    readPointsMulti(None, Nil, Seq(column -> keys), timeRangeUs)
-
-  /** The COMPOSED point read (round 14, VERDICT r13 #3/#4): every
-    * pinned dimension of one predicate — the partition-source key
-    * (`keyPointsUs`), LONG/time secondary stats columns (`longDims`),
-    * STRING secondary stats columns (`strDims`) — prunes the SAME
-    * candidate file set, narrowed sequentially, so `WHERE ts IN (…)
-    * AND uid IN (…)` keeps only files surviving BOTH dimensions
-    * instead of forfeiting one to the other. Planning is
-    * metadata-first at every level:
-    *
-    *   1. manifest-LIST: key bounds, the per-manifest secondary
-    *      roll-ups ([[ManifestRef.columnBounds]]) and the time range
-    *      drop whole manifests UNOPENED — before round 14 a secondary
-    *      point lookup parsed every manifest because the list
-    *      summarized key bounds only (the full cold-parse term at
-    *      10⁶ files);
-    *   2. per-file bounds (key stats, [[ColumnBounds]] incl. truncated
-    *      string bounds);
-    *   3. manifest/sidecar blooms, then parquet footer blooms — via
-    *      the driver probe ladder up to
-    *      [[PredicateBounds.MaxPointKeys]] keys per dimension, the
-    *      binary-searched bounds + DISTRIBUTED bloom probe past it.
-    *
-    * Every level is an over-approximation of the file list only; the
-    * exact predicate re-applies above the splice. Returns a SUPERSET
-    * of the matching rows (live delete masks applied).
-    */
-  def readPointsMulti(
-      keyPointsUs: Option[Seq[Long]],
-      longDims: Seq[(String, Seq[Long])],
-      strDims: Seq[(String, Seq[String])],
-      timeRangeUs: Option[(Long, Long)] = None,
-      /** RANGE dims composed on top (round 14): `ts IN (…) AND uid >=
-        * 10` — bounds-only filters that ride the same candidate set,
-        * so a point dimension never forfeits a range dimension.
-        */
-      longRanges: Seq[(String, Long, Long)] = Nil,
-      strPrefixes: Seq[(String, String)] = Nil,
-      /** NULLNESS dims composed on top (round 15, VERDICT r14 #2):
-        * `ts IN (…) AND c IS [NOT] NULL` — before this, a point
-        * dimension forfeited the null-count pruning entirely (the
-        * all-null-file skip is exactly the case value probes cannot
-        * make on their own).
-        */
-      nullDims: Seq[(String, Boolean)] = Nil,
-      /** STRING range dims (round 15, VERDICT r14 #3): `uid_s BETWEEN
-        * 'a' AND 'b'` over the truncated string bounds — bounds
-        * carried as (column, lower, upper) with per-bound
-        * inclusiveness; see [[PredicateBounds.stringRangeBounds]].
-        */
-      strRanges: Seq[(String, Option[(String, Boolean)], Option[(String, Boolean)])] = Nil,
-      /** IDENTITY partition dims (round 15): (dir column, ESCAPED
-        * wanted dir values) — `WHERE symbol IN ('A','B')` on an
-        * identity-partitioned table prunes manifests through the
-        * partition-value summaries and files through their path
-        * segments, composing with every other dimension. Values must
-        * already be [[LakehouseTable.escapeDirValue]]-escaped.
-        */
-      idDims: Seq[(String, Set[String])] = Nil,
-      /** DOUBLE range dims (round 15): exact per-file double bounds
-        * compose with every pinned dimension too.
-        */
-      dblRanges: Seq[(String, Option[(Double, Boolean)], Option[(Double, Boolean)])] = Nil)
-      : DataFrame = {
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    val files = multiPointSurvivors(meta, snap, keyPointsUs, longDims, strDims,
-      timeRangeUs, longRanges, strPrefixes, nullDims, strRanges, idDims, dblRanges)
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil))
-  }
-
-  /** [[readPointsMulti]] against a PINNED snapshot (round 14): the
-    * identical pruning ladder over the snapshot's own files and live
-    * delete masks — `SELECT … VERSION AS OF v WHERE ts IN (…)`
-    * previously scanned the whole pinned state because the expansion
-    * rule skipped pruning for time travel entirely. Bounds/blooms ride
-    * per-file manifest entries, which are snapshot-specific by
-    * construction; a column renamed SINCE the snapshot just fails the
-    * bounds lookup by current name and keeps the file (conservative,
-    * same as current-snapshot reads of pre-rename files).
-    */
-  def readPointsMultiAt(
-      snapshotId: Long,
-      keyPointsUs: Option[Seq[Long]],
-      longDims: Seq[(String, Seq[Long])],
-      strDims: Seq[(String, Seq[String])],
-      timeRangeUs: Option[(Long, Long)] = None,
-      longRanges: Seq[(String, Long, Long)] = Nil,
-      strPrefixes: Seq[(String, String)] = Nil,
-      nullDims: Seq[(String, Boolean)] = Nil,
-      strRanges: Seq[(String, Option[(String, Boolean)], Option[(String, Boolean)])] = Nil,
-      idDims: Seq[(String, Set[String])] = Nil,
-      dblRanges: Seq[(String, Option[(Double, Boolean)], Option[(Double, Boolean)])] = Nil)
-      : DataFrame = {
-    val meta = metadata
-    val snap = Some(meta.snapshotById(snapshotId).getOrElse(
-      throw new NoSuchElementException(s"snapshot $snapshotId not found")))
-    val files = multiPointSurvivors(meta, snap, keyPointsUs, longDims, strDims,
-      timeRangeUs, longRanges, strPrefixes, nullDims, strRanges, idDims, dblRanges)
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil))
-  }
-
-  /** Metadata-only planning surface of the secondary point path: the
-    * files a `column IN (keysUs)` lookup keeps, through manifest-list
-    * roll-up bounds → per-file bounds → column blooms → footer blooms.
-    * No Spark planning involved — what specs and the planning bench
-    * measure.
+  /** Planning only: the files a `column IN (keysUs)` lookup on a
+    * secondary stats column keeps, optionally composed with a key
+    * range.
     */
   def filesForPointsOn(
       column: String,
       keysUs: Seq[Long],
-      timeRangeUs: Option[(Long, Long)] = None): Seq[DataFile] = {
-    val meta = metadata
-    multiPointSurvivors(
-      meta, meta.currentSnapshot, None, Seq(column -> keysUs), Nil, timeRangeUs, Nil, Nil)
-  }
+      timeRangeUs: Option[(Long, Long)] = None): Seq[DataFile] =
+    planFiles(FilePruning(timeRange = timeRangeUs, longPoints = Seq(column -> keysUs)))
 
-  /** Planning-only: the data files a DOUBLE-range probe keeps (round
-    * 16) — the [[filesForPointsOn]] analog for the exact double pair,
-    * consulted by the bench's typed planning datums and the provenance
-    * specs. Each bound is (value, inclusive); only PROVEN pairs skip
-    * (see [[ColumnBounds.dPv]]).
+  /** Planning only: the data files a DOUBLE-range probe keeps. Each
+    * bound is (value, inclusive); only PROVEN pairs skip (see
+    * [[ColumnBounds.dPv]]).
     */
   def filesInDoubleRange(
       column: String,
       lo: Option[(Double, Boolean)],
-      hi: Option[(Double, Boolean)]): Seq[DataFile] = {
+      hi: Option[(Double, Boolean)]): Seq[DataFile] =
+    planFiles(FilePruning(dblRanges = Seq((column, lo, hi))))
+
+  /** THE file planner: the data files of the current snapshot (or the
+    * pinned `snapshotId`) that may hold a row matching `pruning` —
+    * metadata only, no Spark planning. Three levels, each applying
+    * only the dimensions `pruning` carries:
+    *
+    *   1. manifest-LIST roll-ups (key bounds, column bounds, null
+    *      counts, partition-value summaries) drop whole manifests
+    *      UNOPENED;
+    *   2. per-file bounds (key stats, [[ColumnBounds]] incl. truncated
+    *      string bounds and exact doubles, null counts, identity dir
+    *      segments);
+    *   3. the point dimensions' bloom ladders: per key, manifest or
+    *      sidecar bloom, then the parquet footer bloom, up to
+    *      [[PredicateBounds.MaxPointKeys]] keys per dimension;
+    *      binary-searched bounds plus the DISTRIBUTED manifest-bloom
+    *      probe past it, so a pathological IN list never costs a
+    *      quadratic planning pass.
+    *
+    * Every level over-approximates the file list only; callers
+    * re-apply the exact predicate on top.
+    */
+  def planFiles(pruning: FilePruning, snapshotId: Option[Long] = None): Seq[DataFile] = {
     val meta = metadata
-    multiPointSurvivors(meta, meta.currentSnapshot, None, Nil, Nil, None, Nil, Nil,
-      dblRanges = Seq((column, lo, hi)))
+    planFiles(meta, snapshotAt(meta, snapshotId), pruning)
   }
 
-  private def multiPointSurvivors(
-      meta: TableMetadata,
-      snap: Option[Snapshot],
-      keyPointsUs: Option[Seq[Long]],
-      longDims: Seq[(String, Seq[Long])],
-      strDims: Seq[(String, Seq[String])],
-      timeRangeUs: Option[(Long, Long)],
-      longRanges: Seq[(String, Long, Long)],
-      strPrefixes: Seq[(String, String)],
-      nullDims: Seq[(String, Boolean)] = Nil,
-      strRanges: Seq[(String, Option[(String, Boolean)], Option[(String, Boolean)])] = Nil,
-      idDims: Seq[(String, Set[String])] = Nil,
-      dblRanges: Seq[(String, Option[(Double, Boolean)], Option[(Double, Boolean)])] = Nil)
-      : Seq[DataFile] = {
-    val frozen = StructType.fromDDL(meta.schemaDdl).fieldNames.toSet
-    (longDims.map(_._1) ++ strDims.map(_._1) ++
-      longRanges.map(_._1) ++ strPrefixes.map(_._1) ++
-      nullDims.map(_._1) ++ strRanges.map(_._1) ++ dblRanges.map(_._1)).foreach(c =>
-      require(frozen.contains(c), s"'$c' is not a table column"))
-    // an empty pinned set on any dimension is a contradiction
-    // (`k IN ()` after intersection): zero files, zero rows
-    if (keyPointsUs.exists(_.isEmpty) || longDims.exists(_._2.isEmpty) ||
-      strDims.exists(_._2.isEmpty) || idDims.exists(_._2.isEmpty))
-      return Nil
+  /** The files [[planFiles]] keeps, read with the live delete masks of
+    * the SAME snapshot — a SUPERSET of the matching rows (the SQL
+    * splice re-applies the exact predicate above it). Files and
+    * deletes derive from one metadata read, so a concurrent commit
+    * (e.g. a compaction folding the delete set) cannot pair old files
+    * with a newer, emptier delete set and resurrect masked rows.
+    */
+  def readPlanned(pruning: FilePruning, snapshotId: Option[Long] = None): DataFrame = {
+    val meta = metadata
+    val snap = snapshotAt(meta, snapshotId)
+    readWithDeletes(planFiles(meta, snap, pruning), snap.map(liveDeleteFiles).getOrElse(Nil))
+  }
 
-    val sortedKey = keyPointsUs.map(_.distinct.sorted.toArray)
-    val sortedLong = longDims.map { case (c, ks) => (c, ks.distinct.sorted.toArray) }
-    val sortedStr = strDims.map { case (c, ks) =>
-      val arr = ks.distinct.toArray
-      java.util.Arrays.sort(arr, ColumnBounds.cpCompare(_, _))
-      (c, arr)
+  private def snapshotAt(meta: TableMetadata, snapshotId: Option[Long]): Option[Snapshot] =
+    snapshotId match {
+      case Some(id) => Some(meta.snapshotById(id).getOrElse(
+        throw new NoSuchElementException(s"snapshot $id not found")))
+      case None => meta.currentSnapshot
     }
-    def keyAnyIn(minUs: Option[Long], maxUs: Option[Long]): Boolean =
-      sortedKey.forall { sorted =>
-        (minUs, maxUs) match {
-          case (Some(lo), Some(hi)) =>
-            val i = java.util.Arrays.binarySearch(sorted, lo)
-            val idx = if (i >= 0) i else -i - 1
-            idx < sorted.length && sorted(idx) <= hi
-          case _ => true
-        }
-      }
 
-    // 1. manifest-LIST pruning across EVERY pinned dimension
-    val refs = snap.map(log.readManifestList).getOrElse(Nil)
-      .filter(r => timeRangeUs.forall { case (lo, hi) => r.overlaps(lo, hi) })
-      .filter(r => keyAnyIn(r.minKeyUs, r.maxKeyUs))
-      .filter(r => sortedLong.forall { case (c, ks) => r.mayContainColumnLongs(c, ks) })
-      .filter(r => sortedStr.forall { case (c, ks) => r.mayContainColumnStrings(c, ks) })
-      .filter(r => longRanges.forall { case (c, lo, hi) => r.mayContainColumnRange(c, lo, hi) })
-      .filter(r => strPrefixes.forall { case (c, p) => r.mayContainColumnPrefix(c, p) })
-      .filter(r => nullDims.forall { case (c, w) => r.mayContainNullness(c, w) })
-      .filter(r => strRanges.forall { case (c, lo, hi) =>
-        r.mayContainColumnStringRange(c, lo, hi) })
-      .filter(r => dblRanges.forall { case (c, lo, hi) =>
-        r.mayContainColumnDoubleRange(c, lo, hi) })
-      .filter(r => idDims.forall { case (n, vs) =>
-        vs.exists(v => r.mayContainPartitionValue(n, v)) })
+  private def planFiles(
+      meta: TableMetadata, snap: Option[Snapshot], p: FilePruning): Seq[DataFile] = {
+    if (p.columns.nonEmpty) {
+      val frozen = StructType.fromDDL(meta.schemaDdl).fieldNames.toSet
+      p.columns.foreach(c => require(frozen.contains(c), s"'$c' is not a table column"))
+    }
+    if (p.contradicts) Nil
+    else planOpened(meta,
+      log.readManifests(p.keepManifests(snap.map(log.readManifestList).getOrElse(Nil))).flatten, p)
+  }
 
-    // 2. per-file bounds (cheap, all dims) on the opened manifests
-    var files = log.readManifests(refs).flatten
-      .filter(f => timeRangeUs.forall { case (lo, hi) => f.overlaps(lo, hi) })
-      .filter(f => keyAnyIn(f.minKeyUs, f.maxKeyUs))
-      .filter(f => longRanges.forall { case (c, lo, hi) => f.overlapsColumn(c, lo, hi) })
-      .filter(f => strPrefixes.forall { case (c, p) => f.mayContainColumnPrefix(c, p) })
-      .filter(f => nullDims.forall { case (c, w) => f.mayContainNullness(c, w) })
-      .filter(f => strRanges.forall { case (c, lo, hi) =>
-        f.mayContainColumnStringRange(c, lo, hi) })
-      .filter(f => dblRanges.forall { case (c, lo, hi) =>
-        f.mayContainColumnDoubleRange(c, lo, hi) })
-      .filter(f => idDims.forall { case (n, vs) =>
-        f.partitionSegments.get(n).forall(vs.contains) })
-
-    // 3. bloom ladders, sequentially narrowing — per-file decisions are
-    // independent, so filtering the running survivor set gives exactly
-    // the intersection of the per-dimension survivor sets
-    def longKeyFrame(sorted: Array[Long]): DataFrame = spark.createDataFrame(
-      spark.sparkContext.parallelize(sorted.toSeq.map(org.apache.spark.sql.Row(_)),
-        math.max(1, sorted.length / 65536 + 1)),
-      StructType(Seq(StructField("_k",
-        org.apache.spark.sql.types.LongType, nullable = false))))
-
-    sortedKey.foreach { sorted =>
+  /** Levels 2 and 3 of [[planFiles]] over already-opened manifest
+    * entries. The bloom ladders narrow the running survivor set one
+    * dimension after another — per-file decisions are independent, so
+    * this is exactly the intersection of the per-dimension sets.
+    */
+  private def planOpened(
+      meta: TableMetadata, opened: Seq[DataFile], p: FilePruning): Seq[DataFile] = {
+    if (p.contradicts) return Nil
+    def keyFrame(keys: Seq[Any], t: org.apache.spark.sql.types.DataType): DataFrame =
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(keys.map(org.apache.spark.sql.Row(_)),
+          math.max(1, keys.length / 65536 + 1)),
+        StructType(Seq(StructField("_k", t, nullable = false))))
+    val longT = org.apache.spark.sql.types.LongType
+    var files = p.keepFiles(opened)
+    p.sortedKey.foreach { sorted =>
       val keyCol = meta.partitionTransform.getOrElse(
         throw new IllegalStateException("point skipping needs a partition-source key column"))
       files =
         if (sorted.length > PredicateBounds.MaxPointKeys)
-          bloomSurvivors(files, longKeyFrame(sorted))._1
+          bloomSurvivors(files, keyFrame(sorted.toSeq, longT))._1
         else bloomPointSurvivors(files,
           f => sorted.toSeq.filter(k => f.overlaps(k, k)), resolvedKeyBloom, keyCol)
     }
-    sortedLong.foreach { case (c, sorted) =>
-      if (files.nonEmpty) {
-        files =
-          if (sorted.length > PredicateBounds.MaxPointKeys) {
-            // past the cap: binary-searched bounds + the DISTRIBUTED
-            // probe against the column blooms, footer blooms skipped
-            // (VERDICT r12 #7 rationale)
-            def anyIn(f: DataFile): Boolean =
-              f.extraBounds.flatMap(_.find(b => b.column == c && !b.isString)) match {
-                case Some(b) =>
-                  val i = java.util.Arrays.binarySearch(sorted, b.min)
-                  val idx = if (i >= 0) i else -i - 1
-                  idx < sorted.length && sorted(idx) <= b.max
-                case None => true
-              }
-            bloomSurvivorsBy(files.filter(anyIn), longKeyFrame(sorted),
-              resolvedColumnBloom(_, c))._1
-          } else bloomPointSurvivors(files,
-            f => sorted.toSeq.filter(k => f.overlapsColumn(c, k, k)),
-            resolvedColumnBloom(_, c), c)
-      }
+    // past the cap the footer blooms are skipped: at that cardinality
+    // most files contain some probed key, the manifest blooms already
+    // reject shared-nothing files for free, and a footer read per
+    // candidate would cost more I/O than it saves
+    p.sortedLong.foreach { case (c, sorted) =>
+      if (files.nonEmpty) files =
+        if (sorted.length > PredicateBounds.MaxPointKeys)
+          bloomSurvivorsBy(files.filter(f =>
+            f.extraBounds.flatMap(_.find(b => b.column == c && !b.isString))
+              .forall(b => FilePruning.anyIn(sorted, b.min, b.max))),
+            keyFrame(sorted.toSeq, longT), resolvedColumnBloom(_, c))._1
+        else bloomPointSurvivors(files,
+          f => sorted.toSeq.filter(k => f.overlapsColumn(c, k, k)),
+          resolvedColumnBloom(_, c), c)
     }
-    sortedStr.foreach { case (c, sorted) =>
-      if (files.nonEmpty) {
-        files =
-          if (sorted.length > PredicateBounds.MaxPointKeys) {
-            def anyIn(f: DataFile): Boolean =
-              f.extraBounds.flatMap(_.find(b => b.column == c && b.isString)) match {
-                case Some(b) =>
-                  var a = 0
-                  var z = sorted.length
-                  val lo = b.minS.get
-                  while (a < z) {
-                    val m = (a + z) >>> 1
-                    if (ColumnBounds.cpCompare(sorted(m), lo) < 0) a = m + 1 else z = m
-                  }
-                  a < sorted.length &&
-                    b.maxS.forall(hi => ColumnBounds.cpCompare(sorted(a), hi) <= 0)
-                case None => true
-              }
-            val keyDf = spark.createDataFrame(
-              spark.sparkContext.parallelize(sorted.toSeq.map(org.apache.spark.sql.Row(_)),
-                math.max(1, sorted.length / 65536 + 1)),
-              StructType(Seq(StructField("_k",
-                org.apache.spark.sql.types.StringType, nullable = false))))
-            bloomSurvivorsBy(files.filter(anyIn), keyDf, resolvedColumnBloom(_, c))._1
-          } else bloomPointSurvivorsStr(files,
-            f => sorted.toSeq.filter(k => f.mayContainColumnString(c, k)),
-            resolvedColumnBloom(_, c), c)
-      }
+    p.sortedStr.foreach { case (c, sorted) =>
+      if (files.nonEmpty) files =
+        if (sorted.length > PredicateBounds.MaxPointKeys)
+          bloomSurvivorsBy(files.filter(f =>
+            f.extraBounds.flatMap(_.find(b => b.column == c && b.isString))
+              .forall(FilePruning.anyIn(sorted, _))),
+            keyFrame(sorted.toSeq, org.apache.spark.sql.types.StringType),
+            resolvedColumnBloom(_, c))._1
+        else bloomPointSurvivorsStr(files,
+          f => sorted.toSeq.filter(k => f.mayContainColumnString(c, k)),
+          resolvedColumnBloom(_, c), c)
     }
     files
-  }
-
-  /** [[filesContainingAnyKeyIn]] for key sets past
-    * [[PredicateBounds.MaxPointKeys]]: bounds checks become a binary
-    * search over the sorted key array (O(files · log keys) instead of
-    * O(files · keys)), and the manifest-bloom layer runs as the
-    * DISTRIBUTED [[bloomSurvivors]] probe — the ingest-dedup shape:
-    * keys as a one-column frame, blooms broadcast, k codegen'd bit
-    * tests per (key, file), only hit file ids return to the driver.
-    * The per-file parquet FOOTER blooms are deliberately skipped here:
-    * at this cardinality most files contain some probed key, the
-    * manifest blooms already reject shared-nothing files for free, and
-    * the exact predicate re-applies above the splice — a footer read
-    * per surviving candidate would cost more I/O than it saves.
-    */
-  private def filesContainingAnyKeyLarge(
-      snap: Option[Snapshot], keysUs: Seq[Long]): Seq[DataFile] = {
-    if (keysUs.isEmpty) return Nil
-    val sorted = keysUs.distinct.sorted.toArray
-    def anyIn(minUs: Option[Long], maxUs: Option[Long]): Boolean = (minUs, maxUs) match {
-      case (Some(lo), Some(hi)) =>
-        val i = java.util.Arrays.binarySearch(sorted, lo)
-        val idx = if (i >= 0) i else -i - 1
-        idx < sorted.length && sorted(idx) <= hi
-      case _ => true // no stats ⇒ cannot skip
-    }
-    val ranged = snap.map { s =>
-      log.readManifests(
-          log.readManifestList(s).filter(r => anyIn(r.minKeyUs, r.maxKeyUs)))
-        .flatten.filter(f => anyIn(f.minKeyUs, f.maxKeyUs))
-    }.getOrElse(Nil)
-    val keyDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(sorted.toSeq.map(org.apache.spark.sql.Row(_)),
-        math.max(1, sorted.length / 65536 + 1)),
-      StructType(Seq(StructField("_k", org.apache.spark.sql.types.LongType, nullable = false))))
-    val (kept, _) = bloomSurvivors(ranged, keyDf)
-    kept
   }
 
   /** Equality-key read on a bucket[N]-partitioned table: each key's
@@ -2105,41 +1823,8 @@ final class LakehouseTable(
     */
   def filesForQuery(
       equalValues: Map[String, Any],
-      timeRangeUs: Option[(Long, Long)] = None): Seq[DataFile] = {
-    val meta = metadata
-    filesForQueryIn(meta, meta.currentSnapshot, equalValues, timeRangeUs)
-  }
-
-  private def filesForQueryIn(
-      meta: TableMetadata,
-      snap: Option[Snapshot],
-      equalValues: Map[String, Any],
-      timeRangeUs: Option[(Long, Long)]): Seq[DataFile] = {
-    val frozenCols = StructType.fromDDL(meta.schemaDdl).fieldNames.toSet
-    equalValues.keys.foreach(k =>
-      require(frozenCols.contains(k), s"'$k' is not a table column"))
-    val wanted = equalValues.map { case (k, v) =>
-      k -> LakehouseTable.dirRenderings(String.valueOf(v)) }
-    // manifest-LIST level first: time bounds AND per-manifest partition
-    // value summaries drop whole manifests unopened — at 10⁶ files the
-    // difference between touching one symbol's manifests and parsing
-    // every file path in the table
-    val opened = log.readManifests(
-      manifestsForQueryIn(snap, wanted, timeRangeUs)).flatten
-    // skip no-op per-entry passes: an unfiltered scan's answer IS the
-    // concatenated manifests, and at 10⁵ cached entries the trivially-
-    // true filter closures (and the path parse they force) were most of
-    // the warm planning time
-    val timed = timeRangeUs match {
-      case None => opened
-      case Some((lo, hi)) => opened.filter(_.overlaps(lo, hi))
-    }
-    if (wanted.isEmpty) timed
-    else timed.filter { f =>
-      val segs = f.partitionSegments
-      wanted.forall { case (k, vs) => segs.get(k).forall(vs.contains) }
-    }
-  }
+      timeRangeUs: Option[(Long, Long)] = None): Seq[DataFile] =
+    planFiles(FilePruning.partitionEquality(equalValues, timeRangeUs))
 
   /** Manifests of the current snapshot a [[filesForQuery]]-shaped query
     * would OPEN — exposed so specs (and operators) can see the
@@ -2148,53 +1833,29 @@ final class LakehouseTable(
   def manifestsForQuery(
       equalValues: Map[String, Any],
       timeRangeUs: Option[(Long, Long)] = None): Seq[ManifestRef] =
-    manifestsForQueryIn(metadata.currentSnapshot,
-      equalValues.map { case (k, v) => k -> LakehouseTable.dirRenderings(String.valueOf(v)) },
-      timeRangeUs)
-
-  private def manifestsForQueryIn(
-      snap: Option[Snapshot],
-      wanted: Map[String, Set[String]],
-      timeRangeUs: Option[(Long, Long)]): Seq[ManifestRef] =
-    snap.map(log.readManifestList).getOrElse(Nil)
-      .filter(r => timeRangeUs.forall { case (lo, hi) => r.overlaps(lo, hi) })
-      .filter(r => wanted.forall { case (k, vs) =>
-        vs.exists(r.mayContainPartitionValue(k, _)) })
+    FilePruning.partitionEquality(equalValues, timeRangeUs)
+      .keepManifests(metadata.currentSnapshot.map(log.readManifestList).getOrElse(Nil))
 
   /** Equality read over the identity dimension(s) of a composite spec:
     * plan only the partition dirs matching `equalValues`
-    * ([[filesForQuery]]), then apply the exact predicate. Files and
-    * deletes derive from one metadata read (see [[readPoints]]).
+    * ([[filesForQuery]]), then apply the exact predicate.
     */
   def readPartition(equalValues: Map[String, Any]): DataFrame = {
     require(equalValues.nonEmpty, "readPartition needs at least one constraint")
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    readWithDeletes(filesForQueryIn(meta, snap, equalValues, None),
-      snap.map(liveDeleteFiles).getOrElse(Nil))
+    readPlanned(FilePruning.partitionEquality(equalValues))
       .filter(equalValues.map { case (k, v) => col(k) === lit(v) }.reduce(_ && _))
   }
 
   /** [[readPartition]] over a VALUE SET: plan only the partition dirs
     * whose identity dimension matches ANY of `values` — the read an
     * inverted-list index probe wants ([[graft.ops.VectorIndex]]: probed
-    * list ids in, only those lists' files opened). Same two metadata
-    * pruning levels as [[filesForQuery]] (manifest partition-value
-    * summaries, then path segments), one exact `isin` after.
+    * list ids in, only those lists' files opened), one exact `isin`
+    * after.
     */
   def readPartitionIn(column: String, values: Seq[Any]): DataFrame = {
     require(values.nonEmpty, "readPartitionIn needs at least one value")
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    require(StructType.fromDDL(meta.schemaDdl).fieldNames.contains(column),
-      s"'$column' is not a table column")
-    val wanted = values.flatMap(v =>
-      LakehouseTable.dirRenderings(String.valueOf(v))).toSet
-    val manifests = snap.map(log.readManifestList).getOrElse(Nil)
-      .filter(r => wanted.exists(v => r.mayContainPartitionValue(column, v)))
-    val files = log.readManifests(manifests).flatten
-      .filter(f => f.partitionSegments.get(column).forall(wanted.contains))
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil))
+    readPlanned(FilePruning(idDirs = Seq(column ->
+      values.flatMap(v => LakehouseTable.dirRenderings(String.valueOf(v))).toSet)))
       .filter(col(column).isin(values: _*))
   }
 
@@ -2207,15 +1868,12 @@ final class LakehouseTable(
     */
   def readPartitionRange(
       equalValues: Map[String, Any], loUs: Long, hiUs: Long): DataFrame = {
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    val key = meta.statsSource.getOrElse(throw new IllegalStateException(
+    val key = metadata.statsSource.getOrElse(throw new IllegalStateException(
       "range read needs a declared time/stats source column"))
-    val files = filesForQueryIn(meta, snap, equalValues, Some((loUs, hiUs)))
     val timePred = unix_micros(col(key).cast(TimestampType)).between(loUs, hiUs)
     val pred = equalValues.map { case (k, v) => col(k) === lit(v) }
       .foldLeft(timePred)(_ && _)
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil)).filter(pred)
+    readPlanned(FilePruning.partitionEquality(equalValues, Some((loUs, hiUs)))).filter(pred)
   }
 
   /** METADATA INSPECTION TABLES (Iceberg's `table.snapshots` /
@@ -2646,13 +2304,8 @@ final class LakehouseTable(
     * files that contain that hour, no matter how many live in the
     * partition.
     */
-  def readRange(loUs: Long, hiUs: Long): DataFrame = {
-    // one snapshot capture: files and deletes must come from the SAME
-    // table state (see readPoints)
-    val snap = metadata.currentSnapshot
-    readWithDeletes(filesOverlappingIn(snap, loUs, hiUs),
-      snap.map(liveDeleteFiles).getOrElse(Nil))
-  }
+  def readRange(loUs: Long, hiUs: Long): DataFrame =
+    readPlanned(FilePruning(timeRange = Some((loUs, hiUs))))
 
   /** Schema as read back, including the derived partition column. */
   private def readSchema: StructType = {
@@ -4306,226 +3959,21 @@ final class LakehouseTable(
   }
 
   /** The files a COW delete/update's DISCOVERY scan must probe for
-    * `cond` — None ⇔ the condition constrains nothing extractable
-    * (scan everything). A finite point set on the key (`DELETE WHERE
-    * ts IN (…)` — the targeted-erasure shape) prunes through manifest
-    * bounds, manifest/sidecar key blooms, and parquet footer blooms,
-    * exactly like the read-side point path; a range prunes through
-    * bounds. Both are over-approximations — the exact predicate still
-    * decides the hit files — so a bloom false positive only costs
-    * scanning one extra candidate.
+    * `cond`: [[planFiles]]' levels over the manifests the caller
+    * already opened, so a point set (`DELETE WHERE user_id IN (…)`,
+    * the GDPR-erasure shape) prunes through bounds and blooms exactly
+    * like the read side. None ⇔ the condition constrains nothing
+    * extractable (scan everything). An over-approximation — the exact
+    * predicate still decides the hit files — so a bloom false positive
+    * only costs scanning one extra candidate.
     */
-  private[lake] def cowDiscoveryCandidates(
-      refsWithFiles: Seq[(ManifestRef, Seq[DataFile])],
-      cond: org.apache.spark.sql.catalyst.expressions.Expression,
-      timeCol: String): Option[Seq[DataFile]] = {
-    PredicateBounds.pointKeysUs(cond, timeCol) match {
-      case Some(keys) if keys.size <= PredicateBounds.MaxPointKeys =>
-        Some(bloomPointSurvivors(
-          refsWithFiles
-            .filter { case (r, _) => keys.exists(k => r.overlaps(k, k)) }
-            .flatMap(_._2),
-          f => keys.filter(k => f.overlaps(k, k)), resolvedKeyBloom, timeCol))
-      case _ =>
-        PredicateBounds.timeBounds(cond, timeCol) match {
-          case (lo, hi) if lo.isDefined || hi.isDefined =>
-            val (l, h) = (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
-            Some(refsWithFiles.filter(_._1.overlaps(l, h))
-              .flatMap(_._2.filter(_.overlaps(l, h))))
-          case _ => None
-        }
-    }
-  }
-
-  /** [[cowDiscoveryCandidates]] composed across EVERY extractable
-    * dimension of the predicate (round 14): the time key as before,
-    * PLUS the declared secondary stats columns — point sets (long and
-    * string: `DELETE WHERE user_id IN (…)` is the actual GDPR-erasure
-    * shape on a time-keyed table, and before this it scanned the whole
-    * table to find hit files) prune through bounds + column blooms +
-    * footer blooms; ranges prune through bounds; an over-cap point set
-    * degrades to its [min, max] envelope. Sequential narrowing, so
-    * `WHERE ts >= … AND user_id = 42` composes. None ⇔ no dimension
-    * extracted anything (scan everything).
-    */
-  private[lake] def cowDiscoveryCandidatesAll(
+  private[lake] def discoveryCandidates(
       meta: TableMetadata,
       refsWithFiles: Seq[(ManifestRef, Seq[DataFile])],
       cond: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[Seq[DataFile]] = {
-    var cur: Option[Seq[DataFile]] = meta.partitionTransform
-      .flatMap(tc => cowDiscoveryCandidates(refsWithFiles, cond, tc))
-    def universe: Seq[DataFile] = cur.getOrElse(refsWithFiles.flatMap(_._2))
-    val schema = StructType.fromDDL(meta.schemaDdl)
-    // IDENTITY partition dims (round 15): a finite pinned set on an
-    // identity source drops files by their dir segments — no footer
-    // open, no bloom. `DELETE WHERE symbol = 'A'` on a multi-symbol
-    // manifest previously probed every member file. String/integral
-    // sources only (a timestamp/double identity dir renders its value
-    // differently than the extracted literal); files from spec epochs
-    // lacking the dir are kept.
-    meta.specList.flatMap(_.fields).distinct
-      .filter(f => f.transform == "identity" && schema.fieldNames.contains(f.source))
-      .foreach { f =>
-        val pinned: Option[Seq[String]] = schema(f.source).dataType match {
-          case org.apache.spark.sql.types.StringType =>
-            PredicateBounds.pointKeyStrings(cond, f.source)
-          case org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.IntegerType =>
-            PredicateBounds.pointKeysUs(cond, f.source).map(_.map(String.valueOf))
-          case _ => None
-        }
-        pinned.foreach { vs =>
-          val wanted = vs.flatMap(LakehouseTable.dirRenderings).toSet
-          cur = Some(universe.filter(
-            _.partitionSegments.get(f.name).forall(wanted.contains)))
-        }
-      }
-    val statsCols = meta.props.get("write.stats-columns").toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-      .filterNot(meta.partitionTransform.contains)
-      .filter(schema.fieldNames.contains)
-    statsCols.foreach { c =>
-      if (schema(c).dataType == org.apache.spark.sql.types.StringType) {
-        PredicateBounds.pointKeyStrings(cond, c) match {
-          case Some(keys) if keys.size <= PredicateBounds.MaxPointKeys =>
-            cur = Some(bloomPointSurvivorsStr(universe,
-              f => keys.filter(k => f.mayContainColumnString(c, k)),
-              resolvedColumnBloom(_, c), c))
-          case Some(keys) =>
-            // over-cap: the [min, max] envelope in code-point order
-            // still bounds-prunes (no per-key probes)
-            val lo = keys.reduce((a, b) =>
-              if (ColumnBounds.cpCompare(a, b) <= 0) a else b)
-            val hi = keys.reduce((a, b) =>
-              if (ColumnBounds.cpCompare(a, b) >= 0) a else b)
-            cur = Some(universe.filter(f =>
-              f.extraBounds.flatMap(_.find(b => b.column == c && b.isString)).forall(b =>
-                ColumnBounds.cpCompare(hi, b.minS.get) >= 0 &&
-                  b.maxS.forall(mx => ColumnBounds.cpCompare(lo, mx) <= 0))))
-          case None =>
-            // no point set: string RANGES and LIKE-prefixes still
-            // bounds-prune (round 15 — `DELETE WHERE url >= '…'` /
-            // `url LIKE 'https://x/%'` discovery was a full scan)
-            PredicateBounds.stringRangeBounds(cond, c) match {
-              case (lo, hi) if lo.isDefined || hi.isDefined =>
-                cur = Some(universe.filter(
-                  _.mayContainColumnStringRange(c, lo, hi)))
-              case _ => ()
-            }
-            PredicateBounds.stringPrefix(cond, c).foreach(p =>
-              cur = Some(universe.filter(_.mayContainColumnPrefix(c, p))))
-        }
-      } else {
-        PredicateBounds.pointKeysUs(cond, c) match {
-          case Some(keys) if keys.size <= PredicateBounds.MaxPointKeys =>
-            cur = Some(bloomPointSurvivors(universe,
-              f => keys.filter(k => f.overlapsColumn(c, k, k)),
-              resolvedColumnBloom(_, c), c))
-          case Some(keys) => // over-cap: [min, max] envelope
-            cur = Some(universe.filter(_.overlapsColumn(c, keys.min, keys.max)))
-          case None =>
-            PredicateBounds.rangeBounds(cond, c) match {
-              case (lo, hi) if lo.isDefined || hi.isDefined =>
-                cur = Some(universe.filter(_.overlapsColumn(c,
-                  lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))))
-              case _ => ()
-            }
-            // DOUBLE ranges (round 15): `DELETE WHERE d BETWEEN 0.4
-            // AND 0.6` discovery prunes through the exact double
-            // bounds — the integer-space extraction above cannot
-            // decide sub-integer bounds
-            PredicateBounds.doubleRangeBounds(cond, c) match {
-              case (lo, hi) if lo.isDefined || hi.isDefined =>
-                cur = Some(universe.filter(
-                  _.mayContainColumnDoubleRange(c, lo, hi)))
-              case _ => ()
-            }
-        }
-      }
-    }
-    cur
-  }
-
-  /** Conservative manifest-LIST-level test: may ANY file of `r` hold a
-    * row matching `cond`? Composes every extractable dimension over the
-    * ref's roll-up stats — time-key points/ranges against the key
-    * bounds, finite sets on IDENTITY partition sources against the
-    * partition-value summaries, and declared stats columns against the
-    * column-bounds/null-count roll-ups (points, ranges, string ranges,
-    * prefixes, nullness). The COW-discovery analog of
-    * [[multiPointSurvivors]]'s step 1: a manifest this returns false
-    * for carries over UNOPENED (round 15 — at 10⁶ files the
-    * every-manifest cold parse was a targeted DELETE's dominant term).
-    * Any unextractable or unsummarized dimension answers true.
-    */
-  private def manifestMayMatch(
-      meta: TableMetadata, r: ManifestRef,
-      cond: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    val schema = StructType.fromDDL(meta.schemaDdl)
-    val keyOk = meta.partitionTransform.forall { tc =>
-      PredicateBounds.pointKeysUs(cond, tc) match {
-        case Some(keys) => keys.exists(k => r.overlaps(k, k))
-        case None =>
-          val (lo, hi) = PredicateBounds.timeBounds(cond, tc)
-          r.overlaps(lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
-      }
-    }
-    if (!keyOk) return false
-    // a finite pinned set on an identity partition SOURCE prunes via
-    // the per-manifest partition-value summaries (dir values are the
-    // escaped source values for identity fields)
-    val idOk = meta.specList.flatMap(_.fields).distinct
-      .filter(_.transform == "identity")
-      .forall { f =>
-        val pinned: Option[Seq[String]] =
-          if (schema.fieldNames.contains(f.source) &&
-            schema(f.source).dataType == org.apache.spark.sql.types.StringType)
-            PredicateBounds.pointKeyStrings(cond, f.source)
-          else PredicateBounds.pointKeysUs(cond, f.source).map(_.map(String.valueOf))
-        pinned match {
-          case Some(vs) => vs.exists(v =>
-            LakehouseTable.dirRenderings(v)
-              .exists(r.mayContainPartitionValue(f.name, _)))
-          case None => true
-        }
-      }
-    if (!idOk) return false
-    val statsCols = meta.props.get("write.stats-columns").toSeq
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-      .filter(schema.fieldNames.contains)
-    statsCols.forall { c =>
-      val nullOk = PredicateBounds.nullness(cond, c)
-        .forall(w => r.mayContainNullness(c, w))
-      val valOk =
-        if (schema(c).dataType == org.apache.spark.sql.types.StringType)
-          PredicateBounds.pointKeyStrings(cond, c) match {
-            case Some(keys) =>
-              val arr = keys.toArray
-              java.util.Arrays.sort(arr, ColumnBounds.cpCompare(_, _))
-              r.mayContainColumnStrings(c, arr)
-            case None =>
-              val (lo, hi) = PredicateBounds.stringRangeBounds(cond, c)
-              ((lo.isEmpty && hi.isEmpty) ||
-                r.mayContainColumnStringRange(c, lo, hi)) &&
-                PredicateBounds.stringPrefix(cond, c)
-                  .forall(p => r.mayContainColumnPrefix(c, p))
-          }
-        else
-          PredicateBounds.pointKeysUs(cond, c) match {
-            case Some(keys) =>
-              r.mayContainColumnLongs(c, keys.distinct.sorted.toArray)
-            case None =>
-              val (lo, hi) = PredicateBounds.rangeBounds(cond, c)
-              val (dLo, dHi) = PredicateBounds.doubleRangeBounds(cond, c)
-              ((lo.isEmpty && hi.isEmpty) || r.mayContainColumnRange(c,
-                lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))) &&
-                ((dLo.isEmpty && dHi.isEmpty) ||
-                  r.mayContainColumnDoubleRange(c, dLo, dHi))
-          }
-      nullOk && valOk
-    }
-  }
+      : Option[Seq[DataFile]] =
+    Some(FilePruning.of(meta, cond)).filterNot(_.isEmpty).map(p =>
+      planOpened(meta, refsWithFiles.collect { case (r, fs) if p.mayMatch(r) => fs }.flatten, p))
 
   private def cowRewriteTargets(
       meta: TableMetadata,
@@ -4544,10 +3992,8 @@ final class LakehouseTable(
     // and the exact predicate still decides the hits. Everything
     // derives from the caller's versioned `meta` — no second log read
     // to race a concurrent schema/spec commit, no manifest re-read.
-    val openFlags = cond match {
-      case Some(c) => refs.map(r => manifestMayMatch(meta, r, c))
-      case None => refs.map(_ => true)
-    }
+    val pruning = cond.map(FilePruning.of(meta, _))
+    val openFlags = refs.map(r => pruning.forall(_.mayMatch(r)))
     val opened = refs.zip(openFlags).collect { case (r, true) => r }
     val parsedByPath = opened.zip(log.readManifests(opened))
       .map { case (r, fs) => r.path -> fs }.toMap
@@ -4556,7 +4002,7 @@ final class LakehouseTable(
     }
     val refsWithFiles = pairs.collect { case (r, Some(fs)) => r -> fs }
     val candidates = cond
-      .flatMap(c => cowDiscoveryCandidatesAll(meta, refsWithFiles, c))
+      .flatMap(c => discoveryCandidates(meta, refsWithFiles, c))
       .getOrElse(refsWithFiles.flatMap(_._2))
     val hitPaths = readWithDeletes(candidates, liveDeleteFiles(current),
         Some("__graft_file"))
@@ -4974,15 +4420,8 @@ final class LakehouseTable(
     // point predicates prune through bounds + blooms, ranges through
     // bounds. Safe because a skipped file provably has no hit, so no
     // position of it could ever enter the mask.
-    val scanned = resolvePredicate(meta, predicate).flatMap { c =>
-      // manifest-LIST pre-prune first (round 15, like cowRewriteTargets):
-      // provably-disjoint manifests are never parsed, and a skipped
-      // manifest contributes no file to the mask scan by construction
-      val opened = log.readManifestList(current)
-        .filter(r => manifestMayMatch(meta, r, c))
-      val refsWithFiles = opened.zip(log.readManifests(opened))
-      cowDiscoveryCandidatesAll(meta, refsWithFiles, c)
-    }.getOrElse(dataFiles(current))
+    val scanned = resolvePredicate(meta, predicate).fold(dataFiles(current))(c =>
+      planFiles(meta, Some(current), FilePruning.of(meta, c)))
     val visible = readWithDeletes(scanned, liveDeleteFiles(current),
       keepPosColumns = Some((p, i)))
     val positions = visible.filter(predicate)
@@ -5370,83 +4809,15 @@ final class LakehouseTable(
     * correctness assumption.
     */
   def filesOverlappingColumn(column: String, lo: Long, hi: Long): Seq[DataFile] =
-    currentDataFiles.filter(_.overlapsColumn(column, lo, hi))
+    planFiles(FilePruning(longRanges = Seq((column, lo, hi))))
 
   /** Range read on a SECONDARY (non-time) numeric column: metadata
     * skipping via [[filesOverlappingColumn]], then the exact predicate.
     * The time key keeps its own finer path ([[readRange]]).
     */
-  def readColumnRange(column: String, lo: Long, hi: Long): DataFrame = {
-    // one snapshot capture: files and deletes from the same state
-    val snap = metadata.currentSnapshot
-    val files = snap.map(dataFiles).getOrElse(Nil).filter(_.overlapsColumn(column, lo, hi))
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil))
+  def readColumnRange(column: String, lo: Long, hi: Long): DataFrame =
+    readPlanned(FilePruning(longRanges = Seq((column, lo, hi))))
       .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
-  /** [[readColumnRange]] WITHOUT the exact filter, composed across
-    * dimensions (round 14): scans only the files whose bounds overlap
-    * EVERY given secondary range AND the optional time range — the
-    * splice under a `WHERE uid BETWEEN a AND b [AND ts >= …]` query,
-    * where the exact predicate re-applies on top. Manifest-list level
-    * first (key bounds + the secondary roll-ups drop manifests
-    * unopened), then per-file bounds. Returns a SUPERSET of the
-    * matching rows (live delete masks applied). Range pruning is
-    * bounds-only by nature — blooms answer membership, not ranges.
-    */
-  def readColumnRangesPruned(
-      dims: Seq[(String, Long, Long)],
-      timeRangeUs: Option[(Long, Long)] = None,
-      /** STRING-prefix dims (round 14): `url LIKE 'https://x/%'` —
-        * files whose string bounds cannot hold a prefixed value skip.
-        */
-      strPrefixes: Seq[(String, String)] = Nil,
-      /** NULLNESS dims (round 14): `(column, true)` keeps only files
-        * that may hold a NULL in the column, `(column, false)` only
-        * files with a non-null — `WHERE c IS [NOT] NULL` pruning via
-        * the per-file/per-manifest null counts.
-        */
-      nullDims: Seq[(String, Boolean)] = Nil,
-      /** STRING range dims (round 15): `uid_s BETWEEN 'a' AND 'b'` —
-        * bounds-only pruning over the truncated string bounds, each
-        * bound (value, inclusive); see
-        * [[ColumnBounds.mayContainStringRange]] for the truncation
-        * semantics.
-        */
-      strRanges: Seq[(String, Option[(String, Boolean)], Option[(String, Boolean)])] = Nil,
-      /** DOUBLE range dims (round 15): `d BETWEEN 0.4 AND 0.6` — exact
-        * per-file/per-manifest double bounds, each bound (value,
-        * inclusive); legacy long-widened entries keep (cannot decide a
-        * sub-integer range in either direction).
-        */
-      dblRanges: Seq[(String, Option[(Double, Boolean)], Option[(Double, Boolean)])] = Nil)
-      : DataFrame = {
-    val meta = metadata
-    val snap = meta.currentSnapshot
-    val frozen = StructType.fromDDL(meta.schemaDdl).fieldNames.toSet
-    (dims.map(_._1) ++ strPrefixes.map(_._1) ++ nullDims.map(_._1) ++
-      strRanges.map(_._1) ++ dblRanges.map(_._1)).foreach(c =>
-      require(frozen.contains(c), s"'$c' is not a table column"))
-    val refs = snap.map(log.readManifestList).getOrElse(Nil)
-      .filter(r => timeRangeUs.forall { case (lo, hi) => r.overlaps(lo, hi) })
-      .filter(r => dims.forall { case (c, lo, hi) => r.mayContainColumnRange(c, lo, hi) })
-      .filter(r => strPrefixes.forall { case (c, p) => r.mayContainColumnPrefix(c, p) })
-      .filter(r => nullDims.forall { case (c, w) => r.mayContainNullness(c, w) })
-      .filter(r => strRanges.forall { case (c, lo, hi) =>
-        r.mayContainColumnStringRange(c, lo, hi) })
-      .filter(r => dblRanges.forall { case (c, lo, hi) =>
-        r.mayContainColumnDoubleRange(c, lo, hi) })
-    val files = log.readManifests(refs).flatten
-      .filter(f => timeRangeUs.forall { case (lo, hi) => f.overlaps(lo, hi) })
-      .filter(f => dims.forall { case (c, lo, hi) => f.overlapsColumn(c, lo, hi) })
-      .filter(f => strPrefixes.forall { case (c, p) => f.mayContainColumnPrefix(c, p) })
-      .filter(f => nullDims.forall { case (c, w) => f.mayContainNullness(c, w) })
-      .filter(f => strRanges.forall { case (c, lo, hi) =>
-        f.mayContainColumnStringRange(c, lo, hi) })
-      .filter(f => dblRanges.forall { case (c, lo, hi) =>
-        f.mayContainColumnDoubleRange(c, lo, hi) })
-    readWithDeletes(files, snap.map(liveDeleteFiles).getOrElse(Nil))
-  }
 
   /** One-call table maintenance — the job a deployment schedules beside
     * a live ingest. In order:
@@ -5737,16 +5108,6 @@ final class LakehouseTable(
   private def footerStats(p: Path, keyCol: Option[String]): (Long, Option[Long], Option[Long]) = {
     val fi = footerInfo(p, keyCol, Nil)
     (fi.rows, fi.minKey, fi.maxKey)
-  }
-
-  /** Conservative long bounds of `cols` from a parquet footer (INT64 /
-    * INT32 exact; DOUBLE floored/ceiled outward; other types skipped).
-    * A column with no usable stats is omitted — absent bounds mean
-    * "cannot skip", never "empty".
-    */
-  private def footerColumnBounds(p: Path, cols: Seq[String]): Seq[ColumnBounds] = {
-    if (cols.isEmpty) return Nil
-    footerInfo(p, None, cols).bounds
   }
 
   /** One footer read's worth of manifest-entry inputs. `bloomCols` =

@@ -331,7 +331,7 @@ object PredicateBounds {
   /** Threshold between point-probe shapes: up to this many keys the
     * driver probes per-file manifest AND parquet-footer blooms
     * (O(files × keys), worth it for the exact footer-level skips); past
-    * it [[graft.lake.LakehouseTable.readPointsPruned]] switches to
+    * it [[graft.lake.LakehouseTable.planFiles]] switches to
     * binary-searched bounds plus the DISTRIBUTED manifest-bloom probe,
     * so a pathological IN list never costs a quadratic planning pass
     * but still prunes below the bounds-only candidate set.

@@ -769,13 +769,8 @@ final case class ManifestRef(
     */
   def mayContainColumnLongs(column: String, sortedKeys: Array[Long]): Boolean =
     !allNull(column) &&
-    (columnBounds.flatMap(_.find(b => b.column == column && !b.isString)) match {
-      case Some(b) =>
-        val i = java.util.Arrays.binarySearch(sortedKeys, b.min)
-        val idx = if (i >= 0) i else -i - 1
-        idx < sortedKeys.length && sortedKeys(idx) <= b.max
-      case None => true
-    })
+    columnBounds.flatMap(_.find(b => b.column == column && !b.isString))
+      .forall(b => FilePruning.anyIn(sortedKeys, b.min, b.max))
 
   /** May this manifest contain a file with a `column` value in
     * [lo, hi]? True when no roll-up was recorded (cannot skip).
@@ -825,20 +820,8 @@ final case class ManifestRef(
     */
   def mayContainColumnStrings(column: String, sortedKeys: Array[String]): Boolean =
     !allNull(column) &&
-    (columnBounds.flatMap(_.find(b => b.column == column && b.isString)) match {
-      case Some(b) =>
-        // smallest key ≥ minS; within bounds if ≤ maxS (absent ⇔ +∞)
-        var a = 0
-        var z = sortedKeys.length
-        val lo = b.minS.get
-        while (a < z) {
-          val m = (a + z) >>> 1
-          if (ColumnBounds.cpCompare(sortedKeys(m), lo) < 0) a = m + 1 else z = m
-        }
-        a < sortedKeys.length &&
-          b.maxS.forall(hi => ColumnBounds.cpCompare(sortedKeys(a), hi) <= 0)
-      case None => true
-    })
+    columnBounds.flatMap(_.find(b => b.column == column && b.isString))
+      .forall(FilePruning.anyIn(sortedKeys, _))
 }
 
 /** JSON envelope of a manifest file. */

@@ -29,10 +29,7 @@ import org.apache.spark.sql.functions._
 object BpeTokenizer {
 
   /** Learned model: merges in rank order (apply order = list order). */
-  final case class BpeModel(merges: Seq[(String, String)]) {
-    /** Every unit the encoder can emit beyond single codepoints. */
-    def mergedUnits: Seq[String] = merges.map { case (l, r) => l + r }.distinct
-  }
+  final case class BpeModel(merges: Seq[(String, String)])
 
   /** Persist a learned model as one crash-safe JSON file (train once,
     * encode from any later job): the standard `merges.txt` content —

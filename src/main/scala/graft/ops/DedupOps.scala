@@ -570,9 +570,6 @@ object DedupOps {
   def simHash(text: Column): Column =
     packVotes(voteVector(transform(TextAnalysis.tokens(text), t => xxhash64(t))))
 
-  /** Hamming distance between two simhashes (bit_count of xor). */
-  def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Connected components over an undirected near-dup pair list — the
     * canonicalization step of a dedup pipeline: pairs say "these two are
     * duplicates", components say "keep ONE doc per transitive group".
@@ -628,6 +625,11 @@ object DedupOps {
   def connectedComponents(
       edges: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxIter: Int = 25, reliable: Boolean = false): DataFrame = {
+    // parsed before any job runs: a bad value fails naming the setting
+    val localLimit = edges.sparkSession.conf.getOption("spark.graft.cc.localEdgeLimit")
+      .map(v => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"spark.graft.cc.localEdgeLimit must be a whole number of edges, got '$v'")))
+      .getOrElse(500000L)
     def ckpt(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     // Superseded rounds MUST release their blocks: localCheckpoint
@@ -684,9 +686,6 @@ object DedupOps {
     // default 500k edges ≈ tens of MB on the driver — the same size
     // class as a broadcast build side); past it, or for non-long node
     // ids, the loop below handles arbitrarily large graphs unchanged.
-    val localLimit = edges.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeLimit").map(_.toLong)
-      .getOrElse(500000L)
     val longIds = e.schema.fields.forall(_.dataType == LongType)
     if (!converged && longIds && sig0._1 <= localLimit) {
       val spark = edges.sparkSession

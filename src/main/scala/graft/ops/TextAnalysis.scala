@@ -271,14 +271,6 @@ object TextAnalysis {
       positions(size(shingleHashes) - (window - 1)),
       i => array_min(slice(shingleHashes, i, lit(window)))))
 
-  /** Single-Column convenience form of the winnowed fingerprint — ONLY
-    * for tiny inputs/tests: as one composed expression it hits the
-    * O(n²) re-evaluation described on [[winnowShingleHashes]]. Hot
-    * paths stage the two halves as separate projections.
-    */
-  def winnowFingerprints(text: Column, k: Int = 5, window: Int = 4): Column =
-    winnowMins(winnowShingleHashes(text, k), window)
-
   /** All per-document text analysis as one wide projection. */
   def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
     val cols = Seq(col("*")) ++

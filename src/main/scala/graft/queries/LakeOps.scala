@@ -1435,7 +1435,7 @@ object LakeOps {
     * dashboard point-lookup shape). The expansion rule must extract the
     * point keys from the predicate, prune the planned file list through
     * the per-file blooms ([[graft.lake.LakehouseTable
-    * .readPointsPruned]]), and still return exactly DuckDB's answer —
+    * .planFiles]]), and still return exactly DuckDB's answer —
     * a false-negative skip would drop rows from the aggregate. Plan
     * accounting rides as booleans: bounds alone keep every file,
     * and the files actually planned fall below that.
@@ -1648,8 +1648,8 @@ object LakeOps {
     val qr = s.sql(
       s"SELECT count(*) AS n_in_range FROM $cat.gold.nsk WHERE opt_uid >= 0")
     // COMPOSED probe (round 15, VERDICT r14 #2): `ts IN (…) AND
-    // opt_uid IS NOT NULL` — a point dimension previously took the
-    // readPointsMulti branch and FORFEITED the nullness pruning; the
+    // opt_uid IS NOT NULL` — a point dimension once took a point-only
+    // read path and FORFEITED the nullness pruning; the
     // ts bounds interleave across every residue file, so a scan below
     // `total` here is the null counts' doing
     val zone = java.time.ZoneId.of(s.sessionState.conf.sessionLocalTimeZone)

@@ -15,16 +15,24 @@ import java.time.{Duration, Instant, ZoneOffset, ZonedDateTime}
   * §2.10 T2) — this class exists for reference-parity of the standalone
   * mode.
   */
-final class DailyScheduler(atHourUtc: Int = 2, intervalHours: Long = 24) {
+final class DailyScheduler(
+    atHourUtc: Int = 2,
+    intervalHours: Long = 24,
+    /** The clock and sleep, injectable so the loop is testable
+      * without waiting for a real scheduled hour.
+      */
+    clock: () => Instant = () => Instant.now(),
+    sleepMs: Long => Unit = Thread.sleep) {
   @volatile private var lastRun: Option[Instant] = None
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  def markRan(now: Instant = Instant.now()): Unit = lastRun = Some(now)
+  def markRan(now: Instant = clock()): Unit = lastRun = Some(now)
 
   /** True when a scheduled run is due: we are in the scheduled hour AND
     * at least `intervalHours` passed since the last run. Never true
     * before the first markRan (reference `:71-72`).
     */
-  def shouldRun(now: Instant = Instant.now()): Boolean = lastRun match {
+  def shouldRun(now: Instant = clock()): Boolean = lastRun match {
     case None => false
     case Some(last) =>
       val hour = ZonedDateTime.ofInstant(now, ZoneOffset.UTC).getHour
@@ -33,7 +41,9 @@ final class DailyScheduler(atHourUtc: Int = 2, intervalHours: Long = 24) {
 
   /** Blocking scheduler loop with the reference's error backoff
     * (300 s after failures, `lakehouse_scheduler.py:134-135`); checks
-    * every `pollSeconds`. Runs until the thread is interrupted.
+    * every `pollSeconds`. Runs until the thread is interrupted. A
+    * failed job is logged with its exception and retried after the
+    * backoff; a fatal error (VM error, linkage error) propagates.
     */
   def loop(pollSeconds: Int = 60, backoffSeconds: Int = 300)(job: () => Unit): Unit = {
     markRan() // seed: the caller just ran (or deliberately skipped) startup work
@@ -42,11 +52,12 @@ final class DailyScheduler(atHourUtc: Int = 2, intervalHours: Long = 24) {
         if (shouldRun()) {
           try { job(); markRan() }
           catch {
-            case e: InterruptedException => throw e
-            case _: Throwable => Thread.sleep(backoffSeconds * 1000L)
+            case scala.util.control.NonFatal(e) =>
+              log.warn(s"scheduled job failed; retrying after ${backoffSeconds}s backoff", e)
+              sleepMs(backoffSeconds * 1000L)
           }
         }
-        Thread.sleep(pollSeconds * 1000L)
+        sleepMs(pollSeconds * 1000L)
       }
     } catch { case _: InterruptedException => () }
   }

@@ -140,17 +140,6 @@ object TableStream {
     }
     if (at.isEmpty) None else Some(buf.reverseIterator.toSeq)
   }
-
-  /** The newest deliverable snapshot at most `maxSnaps` commits past
-    * `from` on the main chain (newest-first walk, bounded by the
-    * chain's length — metadata-only).
-    */
-  private[stream] def boundedTo(
-      meta: TableMetadata, fromId: Long, curId: Long, maxSnaps: Int): Long = {
-    if (maxSnaps == Int.MaxValue) return curId
-    chainBack(meta, curId, fromId).getOrElse(return curId)
-      .take(maxSnaps).lastOption.getOrElse(curId)
-  }
 }
 
 /** Handle to a running [[TableStream]] query. */

@@ -285,8 +285,8 @@ class AddFilesSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val kept = table.filesInDoubleRange("px", Some((2.5, true)), Some((3.5, true)))
     assert(kept.size == 1, s"double range must prune to the one file: $kept")
-    assert(table.readColumnRangesPruned(Nil,
-      dblRanges = Seq(("px", Some((2.5, true)), Some((3.5, true)))))
+    assert(table.readPlanned(FilePruning(
+      dblRanges = Seq(("px", Some((2.5, true)), Some((3.5, true))))))
       .filter(col("px").between(2.5, 3.5)).count() == 1)
   }
 
@@ -405,8 +405,8 @@ class AddFilesSpec extends SparkSpec {
     // parquet row-group pushdown off: the doctored footer stats would
     // skip the NaN row at a layer below the one under test
     withSqlConf("spark.sql.parquet.filterPushdown" -> "false") {
-      assert(table.readColumnRangesPruned(Nil,
-        dblRanges = Seq(("px", Some((5.0, false)), None)))
+      assert(table.readPlanned(FilePruning(
+        dblRanges = Seq(("px", Some((5.0, false)), None))))
         .filter(col("px") > lit(5.0)).count() == 2L,
         "unproven pairs must be inert: NaN row + the native 7.0 row")
     }
@@ -422,8 +422,8 @@ class AddFilesSpec extends SparkSpec {
       .exists(b => b.isDouble && b.dProven)),
       "the native file's pair must be re-proven, not stripped")
     withSqlConf("spark.sql.parquet.filterPushdown" -> "false") {
-      assert(table.readColumnRangesPruned(Nil,
-        dblRanges = Seq(("px", Some((5.0, false)), None)))
+      assert(table.readPlanned(FilePruning(
+        dblRanges = Seq(("px", Some((5.0, false)), None))))
         .filter(col("px") > lit(5.0)).count() == 2L,
         "answers unchanged after the sweep")
     }

@@ -72,11 +72,11 @@ class ColumnEvolutionSpec extends SparkSpec {
     assert(files.exists(_.extraBounds.exists(_.exists(_.column == "event_id"))))
     // a range probe by the new name: the pre-rename file's bounds are
     // keyed by the old name — kept (conservative), never wrongly skipped
-    val df = table.readColumnRangesPruned(Seq(("event_id", 1000L, 1029L)))
+    val df = table.readPlanned(FilePruning(longRanges = Seq(("event_id", 1000L, 1029L))))
     assert(df.filter(org.apache.spark.sql.functions.col("event_id")
       .between(1000L, 1029L)).count() == 30)
     // and a probe entirely below the post-rename band skips that file
-    val low = table.readColumnRangesPruned(Seq(("event_id", 5000L, 6000L)))
+    val low = table.readPlanned(FilePruning(longRanges = Seq(("event_id", 5000L, 6000L))))
     assert(low.filter(org.apache.spark.sql.functions.col("event_id")
       .between(5000L, 6000L)).count() == 0)
   }

@@ -138,7 +138,7 @@ class FbColsBackfillSpec extends SparkSpec {
     // the all-null file skipped by its null count
     assert(t.filesForPointsOn("uid", Seq(0L)).size == 1,
       "long point lookup must plan exactly the one in-bounds file")
-    assert(plannedFiles(t.readPointsOnString("uid_s", Seq("u00000000"))) == 1,
+    assert(plannedFiles(t.readPlanned(FilePruning(strPoints = Seq("uid_s" -> Seq("u00000000"))))) == 1,
       "string point lookup must plan exactly the one in-bounds file")
   }
 

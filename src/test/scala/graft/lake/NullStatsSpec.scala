@@ -53,27 +53,27 @@ class NullStatsSpec extends SparkSpec {
     val t = mkTable("ns-val")
     // range probe inside the all-null batch's WOULD-BE value band:
     // before null counts the bounds-less file was always kept
-    val df = t.readColumnRangesPruned(Seq(("uid", 1000L, 1039L)))
+    val df = t.readPlanned(FilePruning(longRanges = Seq(("uid", 1000L, 1039L))))
     val plan = df.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(plan.map(_.relation.location.inputFiles.length).sum == 0,
       "the all-null file must skip the range probe; the zero-null file's bounds miss it")
     // point probe: same
-    assert(t.readPointsOn("uid", Seq(1005L)).count() == 0)
+    assert(t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(1005L)))).count() == 0)
     // and the superset contract holds where real values exist
-    assert(t.readPointsOn("uid", Seq(17L)).filter(col("uid") === 17L).count() == 1)
+    assert(t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(17L)))).filter(col("uid") === 17L).count() == 1)
   }
 
   test("IS NULL / IS NOT NULL prune manifests unopened") {
     val t = mkTable("ns-null")
     SnapshotLog.clearPlanningCache()
     val before = SnapshotLog.manifestParseCount.get()
-    val nulls = t.readColumnRangesPruned(Nil, None, Nil, Seq("uid" -> true))
+    val nulls = t.readPlanned(FilePruning(nulls = Seq("uid" -> true)))
     val parsed = SnapshotLog.manifestParseCount.get() - before
     assert(parsed <= 2, s"IS NULL must open only the all-null commit's manifest, got $parsed")
     assert(nulls.count() == 40 && nulls.filter(col("uid").isNull).count() == 40)
-    val notNulls = t.readColumnRangesPruned(Nil, None, Nil, Seq("uid" -> false))
+    val notNulls = t.readPlanned(FilePruning(nulls = Seq("uid" -> false)))
     assert(notNulls.count() == 40 && notNulls.filter(col("uid").isNotNull).count() == 40)
   }
 
@@ -105,26 +105,26 @@ class NullStatsSpec extends SparkSpec {
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime * 1000L
     val keys = Seq(base + 4, base + 5) // one in each file
     // ts alone keeps both files (round-14 behavior); composing IS NOT
-    // NULL drops the all-null file (VERDICT r14 #2: readPointsMulti
-    // previously forfeited the nullness dimension entirely)
-    assert(plannedFiles(t.readPointsMulti(Some(keys), Nil, Nil)) == 2)
-    val notNull = t.readPointsMulti(Some(keys), Nil, Nil,
-      nullDims = Seq("uid" -> false))
+    // NULL drops the all-null file (VERDICT r14 #2: the composed point
+    // read previously forfeited the nullness dimension entirely)
+    assert(plannedFiles(t.readPlanned(FilePruning(keyPoints = Some(keys)))) == 2)
+    val notNull = t.readPlanned(FilePruning(keyPoints = Some(keys),
+      nulls = Seq("uid" -> false)))
     assert(plannedFiles(notNull) == 1,
       "point + IS NOT NULL must drop the all-null file")
     assert(notNull.filter(col("uid").isNotNull &&
       unix_micros(col("ts")).isin(keys: _*)).count() == 1)
     // IS NULL composed: only the all-null file survives
-    assert(plannedFiles(t.readPointsMulti(Some(keys), Nil, Nil,
-      nullDims = Seq("uid" -> true))) == 1)
+    assert(plannedFiles(t.readPlanned(FilePruning(keyPoints = Some(keys),
+      nulls = Seq("uid" -> true)))) == 1)
 
     // TIME TRAVEL: pin, append a post-pin batch (non-null uids, later
     // ts) — the pinned ladder must exclude it AND keep pruning nullness
     val v1 = t.metadata.currentSnapshotId.get
     t.append(mk(0, off = 5000))
     val postPinKey = base + 5004
-    val pinned = t.readPointsMultiAt(v1, Some(keys :+ postPinKey), Nil, Nil,
-      nullDims = Seq("uid" -> false))
+    val pinned = t.readPlanned(FilePruning(keyPoints = Some(keys :+ postPinKey),
+      nulls = Seq("uid" -> false)), Some(v1))
     assert(plannedFiles(pinned) == 1,
       "pinned read must exclude the post-pin file and the all-null file")
     assert(pinned.filter(unix_micros(col("ts")) === postPinKey).count() == 0)
@@ -142,10 +142,10 @@ class NullStatsSpec extends SparkSpec {
     // counts without a declaration
     assert(t.currentDataFiles.forall(_.colNulls.forall(_.keySet == Set("ts"))))
     // no counts ⇒ BOTH files kept for IS NULL (superset: all 80 rows)
-    assert(t.readColumnRangesPruned(Nil, None, Nil, Seq("uid" -> true)).count() == 80)
+    assert(t.readPlanned(FilePruning(nulls = Seq("uid" -> true))).count() == 80)
     // and the all-null file is kept for value probes too — the exact
     // predicate on top still answers correctly
-    assert(t.readColumnRangesPruned(Seq(("uid", 1000L, 1039L)))
+    assert(t.readPlanned(FilePruning(longRanges = Seq(("uid", 1000L, 1039L))))
       .filter(col("uid").between(1000L, 1039L)).count() == 0)
     // conservative unit checks
     assert(ManifestRef("p", 1, 10, None, None).mayContainNullness("uid", wantNull = true))

@@ -94,7 +94,7 @@ class PredicateBoundsSpec extends SparkSpec {
     val snap = t.metadata.currentSnapshot.get
     val refsWithFiles = t.log.readManifestList(snap)
       .map(r => r -> t.log.readManifest(r.path))
-    val cands = t.cowDiscoveryCandidates(refsWithFiles, cond, "ts")
+    val cands = t.discoveryCandidates(t.metadata, refsWithFiles, cond)
       .getOrElse(fail("point predicate must constrain the discovery"))
     assert(cands.size < 8 && cands.size >= 1,
       s"expected bloom-pruned discovery below the 8 bounds-kept files, got ${cands.size}")

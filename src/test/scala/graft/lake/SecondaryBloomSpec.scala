@@ -56,7 +56,7 @@ class SecondaryBloomSpec extends SparkSpec {
     (0 until 4).foreach(r => t.append(residue(r)))
     // uid bounds interleave: every file's [r, 156+r] admits uid 6 and 10
     assert(t.filesOverlappingColumn("uid", 6L, 10L).size == 4)
-    val df = t.readPointsOn("uid", Seq(6L, 10L))
+    val df = t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(6L, 10L))))
     val scanned = df.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.map(_.relation.location.inputFiles.length).sum
@@ -80,7 +80,8 @@ class SecondaryBloomSpec extends SparkSpec {
     val ti = mkTable("sb3i", Some(4096))
     (0 until 4).foreach(r => ti.append(residue(r)))
     def kept(tt: LakehouseTable) =
-      tt.readPointsOn("uid", Seq(6L, 10L)).queryExecution.executedPlan.collect {
+      tt.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(6L, 10L))))
+        .queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.map(_.relation.location.inputFiles.length).sum
     assert(kept(t) == kept(ti), "sidecar and inline column blooms must agree")
@@ -91,7 +92,7 @@ class SecondaryBloomSpec extends SparkSpec {
     (0 until 4).foreach(r => t.append(residue(r)))
     assert(t.currentDataFiles.forall(_.colBlooms.isEmpty))
     // interleaved bounds keep everything; rows still exact
-    val uids = t.readPointsOn("uid", Seq(6L, 10L))
+    val uids = t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(6L, 10L))))
       .select("uid").as[Long].collect().toSet
     assert(uids.contains(6L) && uids.contains(10L))
   }
@@ -112,7 +113,8 @@ class SecondaryBloomSpec extends SparkSpec {
       t.append(rows.filter(second(col("ts")) === r).coalesce(1)))
     assert(t.currentDataFiles.size == 4)
     def planned(range: Option[(Long, Long)]): Int =
-      t.readPointsOn("uid", Seq(6L, 10L), range).queryExecution.executedPlan.collect {
+      t.readPlanned(FilePruning(timeRange = range, longPoints = Seq("uid" -> Seq(6L, 10L))))
+        .queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.map(_.relation.location.inputFiles.length).sum
     // uid 6 = 4·1+2, uid 10 = 4·2+2: both in the second-2 file; the
@@ -124,7 +126,8 @@ class SecondaryBloomSpec extends SparkSpec {
       "the time window must remove even a bloom-hit file")
     // window covering second 2: keeps it (and rows come back)
     assert(planned(Some((base, base + 2999999L))) == 1)
-    val uids = t.readPointsOn("uid", Seq(6L, 10L), Some((base, base + 2999999L)))
+    val uids = t.readPlanned(FilePruning(timeRange = Some((base, base + 2999999L)),
+      longPoints = Seq("uid" -> Seq(6L, 10L))))
       .select("uid").as[Long].collect().toSet
     assert(uids.contains(6L) && uids.contains(10L))
   }
@@ -140,7 +143,7 @@ class SecondaryBloomSpec extends SparkSpec {
     val fillers = (200L until 1300L)
     val keys = real ++ fillers
     assert(keys.size > PredicateBounds.MaxPointKeys)
-    val df = t.readPointsOn("uid", keys)
+    val df = t.readPlanned(FilePruning(longPoints = Seq("uid" -> keys)))
     val scanned = df.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.map(_.relation.location.inputFiles.length).sum
@@ -153,7 +156,8 @@ class SecondaryBloomSpec extends SparkSpec {
   test("readPointsOn with no keys plans zero files; unknown column refuses") {
     val t = mkTable("sb5", Some(4096))
     t.append(residue(0))
-    assert(t.readPointsOn("uid", Nil).count() == 0L)
-    intercept[IllegalArgumentException](t.readPointsOn("nope", Seq(1L)))
+    assert(t.readPlanned(FilePruning(longPoints = Seq("uid" -> Nil))).count() == 0L)
+    intercept[IllegalArgumentException](
+      t.readPlanned(FilePruning(longPoints = Seq("nope" -> Seq(1L)))))
   }
 }

@@ -11,7 +11,7 @@ import java.sql.Timestamp
   * roll-ups — bounds-only by nature (blooms answer membership, not
   * ranges). Pins the literal-fold algebra of
   * [[PredicateBounds.rangeBounds]] and the zero-lost-rows contract of
-  * [[LakehouseTable.readColumnRangesPruned]].
+  * [[LakehouseTable.planFiles]].
   */
 class SecondaryRangeSpec extends SparkSpec {
   import spark.implicits._
@@ -69,7 +69,7 @@ class SecondaryRangeSpec extends SparkSpec {
     val t = mkTable("sr-e2e")
     SnapshotLog.clearPlanningCache()
     val before = SnapshotLog.manifestParseCount.get()
-    val df = t.readColumnRangesPruned(Seq(("uid", 2010L, 2025L)))
+    val df = t.readPlanned(FilePruning(longRanges = Seq(("uid", 2010L, 2025L))))
     val parsed = SnapshotLog.manifestParseCount.get() - before
     assert(parsed <= 2, s"expected ≤ 2 metadata parses (list + 1 manifest), got $parsed")
     assert(plannedFiles(df) == 1, "only the covering band's file plans")
@@ -79,7 +79,7 @@ class SecondaryRangeSpec extends SparkSpec {
       .select("uid").as[Long].collect().sorted.toSeq
     assert(inRange == (2010L to 2025L))
     // a range between bands plans zero files
-    assert(t.readColumnRangesPruned(Seq(("uid", 500L, 900L))).count() == 0)
+    assert(t.readPlanned(FilePruning(longRanges = Seq(("uid", 500L, 900L)))).count() == 0)
   }
 
   test("COW discovery prunes on secondary point and range dimensions") {
@@ -90,7 +90,7 @@ class SecondaryRangeSpec extends SparkSpec {
       .getOrElse(Nil)
     val probe = Seq((Timestamp.valueOf("2024-01-01 00:00:00"), 0L, 0.0))
       .toDF("ts", "uid", "value")
-    def cands(sql: String) = t.cowDiscoveryCandidatesAll(
+    def cands(sql: String) = t.discoveryCandidates(
       t.metadata, refsWithFiles, resolved(probe, sql))
     // a point set on the secondary column focuses discovery to the
     // covering band — the GDPR delete-by-user shape
@@ -125,7 +125,7 @@ class SecondaryRangeSpec extends SparkSpec {
       .getOrElse(Nil)
     val probe = Seq((Timestamp.valueOf("2024-01-01 00:00:00"), 0L, 0.0))
       .toDF("ts", "uid", "d")
-    def cands(sql: String) = t.cowDiscoveryCandidatesAll(
+    def cands(sql: String) = t.discoveryCandidates(
       t.metadata, refsWithFiles, resolved(probe, sql))
     assert(cands("d BETWEEN 4.5 AND 7.5").map(_.size).contains(1),
       "a band inside one file's exact double range keeps only it")
@@ -157,7 +157,7 @@ class SecondaryRangeSpec extends SparkSpec {
       .getOrElse(Nil)
     val probe = Seq((Timestamp.valueOf("2024-01-01 00:00:00"), "x", 0.0))
       .toDF("ts", "uid_s", "value")
-    def cands(sql: String) = t.cowDiscoveryCandidatesAll(
+    def cands(sql: String) = t.discoveryCandidates(
       t.metadata, refsWithFiles, resolved(probe, sql))
     // a string BETWEEN band inside file 3's range keeps exactly it
     assert(cands("uid_s >= 'u00000085' AND uid_s <= 'u00000100'")
@@ -198,7 +198,7 @@ class SecondaryRangeSpec extends SparkSpec {
       .getOrElse(Nil)
     val probe = Seq(("x", Timestamp.valueOf("2024-01-01 00:00:00"), 0.0))
       .toDF("sym", "ts", "value")
-    def cands(sql: String) = t.cowDiscoveryCandidatesAll(
+    def cands(sql: String) = t.discoveryCandidates(
       t.metadata, refsWithFiles, resolved(probe, sql))
     assert(cands("sym = 's2'").map(_.size).contains(1))
     assert(cands("sym IN ('s1', 's3')").map(_.size).contains(2))
@@ -214,7 +214,7 @@ class SecondaryRangeSpec extends SparkSpec {
     // pushing the query's own filters into the scan (PushedFilters),
     // or every surviving file would read all its row groups
     val t = mkTable("sr-push")
-    val df = t.readColumnRangesPruned(Seq(("uid", 2010L, 2025L)))
+    val df = t.readPlanned(FilePruning(longRanges = Seq(("uid", 2010L, 2025L))))
       .filter(col("uid").between(2010L, 2025L))
     val scans = df.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -231,10 +231,10 @@ class SecondaryRangeSpec extends SparkSpec {
     // empty (row u lands at base + u MICROSECONDS)
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime * 1000L
     val trBand1 = Some((base + 1000L, base + 1039L))
-    assert(t.readColumnRangesPruned(Seq(("uid", 3000L, 3039L)), trBand1).count() == 0)
+    assert(t.readPlanned(FilePruning(longRanges = Seq(("uid", 3000L, 3039L)), timeRange = trBand1)).count() == 0)
     // matching composition keeps exactly the band
     val trBand3 = Some((base + 3000L, base + 3039L))
-    val df = t.readColumnRangesPruned(Seq(("uid", 3000L, 3039L)), trBand3)
+    val df = t.readPlanned(FilePruning(longRanges = Seq(("uid", 3000L, 3039L)), timeRange = trBand3))
     assert(plannedFiles(df) == 1 && df.count() == 40)
   }
 }

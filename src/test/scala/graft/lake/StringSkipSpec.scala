@@ -22,7 +22,7 @@ import java.sql.Timestamp
   *     string is never skipped, in both inline and sidecar modes;
   *   - the manifest-LIST roll-up ([[ManifestRef.columnBounds]], r13 #3)
   *     drops whole manifests unopened for clustered secondary lookups;
-  *   - [[LakehouseTable.readPointsMulti]] (r13 #4) intersects pinned
+  *   - [[LakehouseTable.planFiles]] (r13 #4) intersects pinned
   *     dimensions: both-pinned plans strictly fewer files than either
   *     dimension alone on a grid layout.
   */
@@ -159,14 +159,14 @@ class StringSkipSpec extends SparkSpec {
       val keys = Seq("u00000001", "u00000005", "u00000009")
       assert(files.forall(f => keys.exists(k => f.mayContainColumnString("uid_s", k))),
         "fixture: bounds alone must keep every file")
-      val df = t.readPointsOnString("uid_s", keys)
+      val df = t.readPlanned(FilePruning(strPoints = Seq("uid_s" -> keys)))
       val got = df.filter(col("uid_s").isin(keys: _*))
         .select("uid_s").as[String].collect().sorted.toSeq
       assert(got == keys.sorted, s"lost rows through $sidecar-mode string skipping")
       assert(plannedFiles(df) < 4,
         s"string blooms must prune interleaved keyless files (sidecar=$sidecar)")
       // a key nobody holds plans zero rows (bounds admit, blooms reject)
-      assert(t.readPointsOnString("uid_s", Seq("u00000002x")).count() == 0)
+      assert(t.readPlanned(FilePruning(strPoints = Seq("uid_s" -> Seq("u00000002x")))).count() == 0)
     }
   }
 
@@ -174,7 +174,7 @@ class StringSkipSpec extends SparkSpec {
     val t = mkTable("ss-large", sidecar = false)
     // > MaxPointKeys keys, all residue 1 — plus misses
     val keys = (0 until PredicateBounds.MaxPointKeys + 50).map(i => f"u${4 * i + 1}%08d")
-    val df = t.readPointsOnString("uid_s", keys)
+    val df = t.readPlanned(FilePruning(strPoints = Seq("uid_s" -> keys)))
     val present = (0 until 40).map(i => f"u${4 * i + 1}%08d")
     val got = df.filter(col("uid_s").isin(keys: _*))
       .select("uid_s").as[String].collect().sorted.toSeq
@@ -205,7 +205,7 @@ class StringSkipSpec extends SparkSpec {
     // manifest (plus the list): the other three prune from the roll-up
     SnapshotLog.clearPlanningCache()
     val before = SnapshotLog.manifestParseCount.get()
-    val df = t.readPointsOnString("uid_s", Seq("u00002017"))
+    val df = t.readPlanned(FilePruning(strPoints = Seq("uid_s" -> Seq("u00002017"))))
     val parsed = SnapshotLog.manifestParseCount.get() - before
     assert(parsed <= 2, s"expected ≤ 2 metadata parses (list + 1 manifest), got $parsed")
     assert(df.filter(col("uid_s") === "u00002017").count() == 1)
@@ -226,7 +226,7 @@ class StringSkipSpec extends SparkSpec {
     }
     SnapshotLog.clearPlanningCache()
     val before = SnapshotLog.manifestParseCount.get()
-    val df = t.readPointsOn("uid", Seq(2017L))
+    val df = t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(2017L))))
     val parsed = SnapshotLog.manifestParseCount.get() - before
     assert(parsed <= 2, s"expected ≤ 2 metadata parses (list + 1 manifest), got $parsed")
     assert(df.filter(col("uid") === 2017L).count() == 1)
@@ -264,15 +264,17 @@ class StringSkipSpec extends SparkSpec {
     // each dimension alone keeps its 3-cell grid line
     val tsKeys = Seq(usOf(1, 17L), usOf(1, 21L), usOf(1, 29L))
     val uids = Seq(20L, 38L, 55L)
-    val dfTs = t.readPointsMulti(Some(tsKeys), Nil, Nil)
-    val dfUid = t.readPointsMulti(None, Seq("uid" -> uids), Nil)
-    val dfBoth = t.readPointsMulti(Some(tsKeys), Seq("uid" -> uids), Nil)
+    val dfTs = t.readPlanned(FilePruning(keyPoints = Some(tsKeys)))
+    val dfUid = t.readPlanned(FilePruning(longPoints = Seq("uid" -> uids)))
+    val dfBoth = t.readPlanned(
+      FilePruning(keyPoints = Some(tsKeys), longPoints = Seq("uid" -> uids)))
     val (pTs, pUid, pBoth) = (plannedFiles(dfTs), plannedFiles(dfUid), plannedFiles(dfBoth))
     assert(pTs >= 1 && pUid >= 1)
     assert(pBoth < pTs, s"intersection ($pBoth) must beat the key dim alone ($pTs)")
     assert(pBoth < pUid, s"intersection ($pBoth) must beat the secondary dim alone ($pUid)")
     // and the superset contract still holds for a genuinely matching pair
-    val hit = t.readPointsMulti(Some(Seq(usOf(1, 17L))), Seq("uid" -> Seq(17L)), Nil)
+    val hit = t.readPlanned(FilePruning(keyPoints = Some(Seq(usOf(1, 17L))),
+      longPoints = Seq("uid" -> Seq(17L))))
     assert(hit.filter(col("uid") === 17L).count() >= 1)
   }
 
@@ -351,11 +353,11 @@ class StringSkipSpec extends SparkSpec {
       "truncated bounds must keep every candidate for a longer-than-cap prefix")
     // point probes through the truncated bounds stay exact end-to-end
     val probeUrl = "https://example.com/docs/0087/page"
-    val got = t.readPointsOnString("url", Seq(probeUrl))
+    val got = t.readPlanned(FilePruning(strPoints = Seq("url" -> Seq(probeUrl))))
       .filter(col("url") === probeUrl).count()
     assert(got == 1)
     // prefix read: superset with every matching row present
-    val df = t.readColumnRangesPruned(Nil, None, Seq("url" -> deep))
+    val df = t.readPlanned(FilePruning(strPrefixes = Seq("url" -> deep)))
     assert(df.filter(col("url").startsWith(deep)).count() == 10)
   }
 
@@ -401,7 +403,7 @@ class StringSkipSpec extends SparkSpec {
     }
     assert(t.currentDataFiles.size == 4)
     def band(lo: Option[(String, Boolean)], hi: Option[(String, Boolean)]) =
-      t.readColumnRangesPruned(Nil, None, Nil, Nil, Seq(("uid_s", lo, hi)))
+      t.readPlanned(FilePruning(strRanges = Seq(("uid_s", lo, hi))))
     // a band inside file 3's range plans exactly that file
     val df = band(Some(("u00000085", true)), Some(("u00000100", true)))
     assert(plannedFiles(df) == 1)
@@ -421,14 +423,14 @@ class StringSkipSpec extends SparkSpec {
     assert(SnapshotLog.manifestParseCount.get() - before <= 2,
       "expected ≤ 2 metadata parses (list + 1 manifest)")
     // and the composed point+range path prunes the same way
-    val composed = t.readPointsMulti(None, Nil, Nil, None,
-      strRanges = Seq(("uid_s", Some(("u00000085", true)), Some(("u00000100", true)))))
+    val composed = t.readPlanned(FilePruning(
+      strRanges = Seq(("uid_s", Some(("u00000085", true)), Some(("u00000100", true))))))
     assert(plannedFiles(composed) == 1)
   }
 
   test("contradictory pinned sets plan zero files") {
     val t = mkTable("ss-empty", sidecar = false)
-    assert(t.readPointsOnString("uid_s", Nil).count() == 0)
-    assert(t.readPointsMulti(Some(Nil), Nil, Nil).count() == 0)
+    assert(t.readPlanned(FilePruning(strPoints = Seq("uid_s" -> Nil))).count() == 0)
+    assert(t.readPlanned(FilePruning(keyPoints = Some(Nil))).count() == 0)
   }
 }

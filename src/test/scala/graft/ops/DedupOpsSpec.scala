@@ -112,6 +112,16 @@ class DedupOpsSpec extends SparkSpec {
     (0L until 10L).foreach(i => assert(surviving.contains(i)))
   }
 
+  test("a malformed spark.graft.cc.localEdgeLimit fails naming the setting and value") {
+    val edges = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    spark.conf.set("spark.graft.cc.localEdgeLimit", "500k")
+    try {
+      val e = intercept[IllegalArgumentException](DedupOps.connectedComponents(edges))
+      assert(e.getMessage.contains("spark.graft.cc.localEdgeLimit"))
+      assert(e.getMessage.contains("'500k'"))
+    } finally spark.conf.unset("spark.graft.cc.localEdgeLimit")
+  }
+
   test("dedupByPairs drops non-canonical members across transitive chains") {
     val docs3 = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
       .toDF("doc_id", "text")

@@ -127,7 +127,7 @@ class SqlPointSkipSpec extends SparkSpec {
 
   test("a 4096-key IN list routes through the distributed probe and still bloom-prunes") {
     // past MaxPointKeys (1024) the driver-side per-key probe would go
-    // O(files × keys); readPointsPruned switches to binary-searched
+    // O(files × keys); planFiles switches to binary-searched
     // bounds + the distributed manifest-bloom probe (VERDICT r12 #7).
     // Fixture: 4096 rows in 8 key-disjoint fully time-interleaved files
     // (file r holds ids ≡ r mod 8). The probe set = the 512 real keys of
