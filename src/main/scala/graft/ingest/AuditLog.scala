@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.json4s._
 import org.json4s.jackson.Serialization
 
+import scala.util.control.NonFatal
+
 /** Run audit trail — the reference's `audit_log.json` array of run
   * summaries (`/root/reference/lakehouse_pipeline.py:70, 97-107,
   * 289-297, 407-417`): run id, per-table append/reject counts, files
@@ -14,8 +16,9 @@ import org.json4s.jackson.Serialization
   * writes O(1) (the new record only), never re-serializing history —
   * the same fix the snapshot log got for its manifests. readAll()
   * replays files in sequence order; a torn file from a crashed writer
-  * fails to parse and is skipped (the run it described didn't finish
-  * auditing anyway). Single writer per warehouse (pipeline lock).
+  * fails to parse and is skipped with a WARN naming it (the run it
+  * described didn't finish auditing anyway). Single writer per
+  * warehouse (pipeline lock).
   */
 final case class TableAudit(
     table: String,
@@ -38,6 +41,7 @@ final case class RunSummary(
 
 final class AuditLog(auditFile: Path, fs: FileSystem) {
   private implicit val fmts: Formats = DefaultFormats
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val runDir = new Path(
     auditFile.getParent, auditFile.getName.stripSuffix(".json") + ".d")
 
@@ -51,7 +55,11 @@ final class AuditLog(auditFile: Path, fs: FileSystem) {
     runFiles().flatMap { p =>
       val in = new java.io.InputStreamReader(fs.open(p), java.nio.charset.StandardCharsets.UTF_8)
       try Some(Serialization.read[RunSummary](in))
-      catch { case _: Throwable => None } // torn write from a crashed run
+      catch {
+        case NonFatal(e) => // torn write from a crashed run
+          log.warn(s"audit: skipping unreadable run file $p (${e.getMessage})")
+          None
+      }
       finally in.close()
     }
 

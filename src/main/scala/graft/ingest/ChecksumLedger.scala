@@ -7,6 +7,7 @@ import org.json4s.jackson.Serialization
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+import scala.util.control.NonFatal
 
 /** Exactly-once file ingestion ledger — the reference's
   * `{file_path: md5}` map (`/root/reference/lakehouse_pipeline.py:71,
@@ -74,9 +75,9 @@ final class ChecksumLedger(ledgerBase: Path, fs: FileSystem, compactThreshold: I
             val rec = Serialization.read[Map[String, String]](line)
             for (f <- rec.get("f"); s <- rec.get("md5")) m += (f -> s)
           } catch {
-            case _: Throwable if next == null =>
+            case NonFatal(_) if next == null =>
               () // torn segment tail from a crashed writer — expected, skip silently
-            case _: Throwable =>
+            case NonFatal(_) =>
               corruptLinesAtLoad += 1
               log.warn(
                 s"ledger corruption: unparseable line $lineNo of segment $p " +

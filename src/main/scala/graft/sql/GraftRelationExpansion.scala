@@ -1,12 +1,15 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, SubqueryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualTo, EvalMode, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, HyperLogLogPlusPlus, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, OneRowRelation, Project, SubqueryAlias, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+
+import MetadataAggCore.{Ask, GroupDim}
 
 /** Expands every [[GraftSqlTable]] relation into the table's NATIVE read
   * plan (view-expansion style): the plan [[graft.lake.LakehouseTable
@@ -46,7 +49,7 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     * the aggregate) still pays the scan, like any other chain that
     * transforms first.
     */
-  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+  override def apply(plan: LogicalPlan): LogicalPlan =
     // escape hatch (round 17): with the expansion off, every graft
     // relation stays a DSv2 relation end to end — reads flow through
     // [[GraftScanBuilder]] (aggregate pushdown + the mask-aware V1
@@ -54,10 +57,19 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     // path. READ paths only: DML (DELETE/UPDATE/MERGE) and the
     // metadata rewrites need the rule — used by specs to exercise the
     // DSv2 surface through Spark's own optimizer.
-    case _ if !session.conf
-      .get("spark.graft.sql.expansion-enabled", "true").toBoolean => plan
-    case Aliased(_) => plan
-    case _ => expand(plan)
+    if (!boolConf("spark.graft.sql.expansion-enabled")) plan
+    else plan match {
+      case Aliased(_) => plan
+      case _ => expand(plan, boolConf("spark.graft.sql.metadata-aggregates"))
+    }
+
+  /** A boolean `spark.graft.sql.*` switch (default on), read once per
+    * rule application; a malformed value fails naming the setting.
+    */
+  private def boolConf(key: String): Boolean = {
+    val v = session.conf.get(key, "true")
+    v.trim.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be true or false, got '$v'"))
   }
 
   /** Peel SubqueryAlias wrappers (they keep the child's attribute ids). */
@@ -109,19 +121,23 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     }
   }
 
-  private def expand(plan: LogicalPlan): LogicalPlan = {
+  /** `metaAggs`: the metadata-aggregate rewrites are on
+    * (`spark.graft.sql.metadata-aggregates`).
+    */
+  private def expand(plan: LogicalPlan, metaAggs: Boolean): LogicalPlan = {
+    def recur(p: LogicalPlan): LogicalPlan = expand(p, metaAggs)
     val expanded = plan match {
       case w: V2WriteCommand =>
         // the write TARGET stays a relation (its V1 write path needs it);
         // the source query leg still expands (INSERT INTO t SELECT FROM t)
-        w.withNewChildren(w.children.map(c => if (c eq w.table) c else expand(c)))
+        w.withNewChildren(w.children.map(c => if (c eq w.table) c else recur(c)))
       case m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
           if Aliased.unapply(m.targetTable).isDefined =>
         // MERGE INTO (upsert shape) → the native merge-on-read upsert;
         // the SOURCE leg may reference graft tables and expands here
         GraftMergeCommand(
           Aliased.unapply(m.targetTable).get.table.asInstanceOf[GraftSqlTable],
-          expand(m.sourceTable), m.mergeCondition,
+          recur(m.sourceTable), m.mergeCondition,
           m.matchedActions, m.notMatchedActions, m.notMatchedBySourceActions)
       case org.apache.spark.sql.catalyst.plans.logical.UpdateTable(Aliased(r), assignments, cond) =>
         // UPDATE ... SET ... WHERE → the native copy-on-write
@@ -135,8 +151,7 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
         // the whole row-level write on the engine's own commit protocol.
         GraftDeleteCommand(r.table.asInstanceOf[GraftSqlTable], cond)
       case agg @ Aggregate(_, _, BareRelation(r), _)
-          if r.table.isInstanceOf[GraftSqlTable] &&
-            session.conf.get("spark.graft.sql.metadata-aggregates", "true").toBoolean =>
+          if r.table.isInstanceOf[GraftSqlTable] && metaAggs =>
         // unfiltered whole-table aggregate: answered from manifest
         // stats alone when provable (Iceberg metadata-count analog) —
         // at 100 TB, `SELECT count(*) FROM t` becomes one manifest-list
@@ -148,11 +163,10 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
           val gt = r.table.asInstanceOf[GraftSqlTable]
           (if (agg.groupingExpressions.isEmpty) metadataAggregate(agg, gt)
            else metadataGroupAggregate(agg, gt))
-            .getOrElse(agg.mapChildren(expand))
+            .getOrElse(agg.mapChildren(recur))
         }
       case agg @ Aggregate(_, _, FilteredBare(cond, r), _)
-          if r.table.isInstanceOf[GraftSqlTable] &&
-            session.conf.get("spark.graft.sql.metadata-aggregates", "true").toBoolean =>
+          if r.table.isInstanceOf[GraftSqlTable] && metaAggs =>
         // aggregate under a PURE identity-partition restriction
         // (`WHERE sym = 'A'` / `sym IN (…)`): the identity invariant
         // makes the file subset EXACT — a dir's files hold exactly the
@@ -166,34 +180,30 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
           val gt = r.table.asInstanceOf[GraftSqlTable]
           splitRestriction(cond, gt).flatMap {
             case (ids, None) if ids.nonEmpty =>
-              if (agg.groupingExpressions.isEmpty)
-                metadataAggregate(agg, gt, Some(ids))
-              else metadataGroupAggregate(agg, gt, Some(ids))
+              if (agg.groupingExpressions.isEmpty) metadataAggregate(agg, gt, ids)
+              else metadataGroupAggregate(agg, gt, ids)
             case (ids, Some(range)) if agg.groupingExpressions.isEmpty =>
               hybridRangeCount(agg, gt, r, cond, ids, range)
             case (ids, Some(range)) =>
               // grouped counts/sums under a range: metadata-only when
               // every overlapping file is bounds-interior; straddlers
               // scan through the grouped hybrid (round 17)
-              metadataGroupAggregate(agg, gt,
-                Some(ids).filter(_.nonEmpty), Some(range),
+              metadataGroupAggregate(agg, gt, ids, Some(range),
                 boundaryCtx = Some((r, cond)))
-          }.getOrElse(agg.mapChildren(expand))
+          }.getOrElse(agg.mapChildren(recur))
         }
       case d @ org.apache.spark.sql.catalyst.plans.logical.Distinct(child @ BareRelation(r))
-          if r.table.isInstanceOf[GraftSqlTable] &&
-            session.conf.get("spark.graft.sql.metadata-aggregates", "true").toBoolean =>
+          if r.table.isInstanceOf[GraftSqlTable] && metaAggs =>
         // SELECT DISTINCT k is still `Distinct` at analysis time
         // (ReplaceDistinctWithAggregate is an optimizer rule) — treat
         // it as the GROUP BY it will become
         metadataGroupAggregate(
           Aggregate(child.output, child.output, child),
           r.table.asInstanceOf[GraftSqlTable])
-          .getOrElse(d.mapChildren(expand))
+          .getOrElse(d.mapChildren(recur))
       case d @ org.apache.spark.sql.catalyst.plans.logical.Distinct(
           child @ FilteredBare(cond, r))
-          if r.table.isInstanceOf[GraftSqlTable] &&
-            session.conf.get("spark.graft.sql.metadata-aggregates", "true").toBoolean =>
+          if r.table.isInstanceOf[GraftSqlTable] && metaAggs =>
         // DISTINCT under a pure identity restriction (`SELECT DISTINCT
         // sym FROM t WHERE region = 'x'`) — the restricted file subset
         // is exact, so the distinct dir values of that subset are the
@@ -202,14 +212,13 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
           val gt = r.table.asInstanceOf[GraftSqlTable]
           identityRestriction(cond, gt).flatMap(rs =>
             metadataGroupAggregate(
-              Aggregate(child.output, child.output, child), gt, Some(rs)))
-            .getOrElse(d.mapChildren(expand))
+              Aggregate(child.output, child.output, child), gt, rs))
+            .getOrElse(d.mapChildren(recur))
         }
       case d @ org.apache.spark.sql.catalyst.plans.logical.Deduplicate(
           keys, child @ BareRelation(r))
           if r.table.isInstanceOf[GraftSqlTable] &&
-            keys.map(_.exprId).toSet == child.output.map(_.exprId).toSet &&
-            session.conf.get("spark.graft.sql.metadata-aggregates", "true").toBoolean =>
+            keys.map(_.exprId).toSet == child.output.map(_.exprId).toSet && metaAggs =>
         // the DataFrame spelling of DISTINCT: `df.select(k).distinct()`
         // / `df.dropDuplicates()` analyze to Deduplicate over ALL
         // output columns, which is exactly the GROUP BY it would
@@ -219,7 +228,7 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
         metadataGroupAggregate(
           Aggregate(child.output, child.output, child),
           r.table.asInstanceOf[GraftSqlTable])
-          .getOrElse(d.mapChildren(expand))
+          .getOrElse(d.mapChildren(recur))
       // DataFrame-API chains reach these rewrites since round 16: the
       // bare `spark.table(t)` shape is left unexpanded (see [[apply]]),
       // so the FIRST operator added to it analyzes directly over the
@@ -235,11 +244,11 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
         f.copy(child = expandRelation(r, Some(cond)))
       case Readable(r) =>
         expandRelation(r, filter = None)
-      case other => other.mapChildren(expand)
+      case other => other.mapChildren(recur)
     }
     // subquery plans live inside expressions, not children
     expanded.transformExpressionsDown {
-      case se: SubqueryExpression => se.withNewPlan(expand(se.plan))
+      case se: SubqueryExpression => se.withNewPlan(recur(se.plan))
     }
   }
 
@@ -379,9 +388,10 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
       range: (Long, Long)): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.{Add, Greatest, Least}
     val (lo, hi) = range
-    val meta = g.lt.metadata
+    val core = new MetadataAggCore(g)
+    val meta = core.meta
     val keyCol = meta.statsSource.getOrElse(return None)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(meta.schemaDdl)
+    val schema = core.schema
     val keyDt = if (schema.fieldNames.contains(keyCol)) schema(keyCol).dataType
       else return None
     def keyLit(v: Long): Literal = keyDt match {
@@ -479,11 +489,7 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     val valueCols: Seq[String] = (sumCols ++ avgCols).distinct
     def sumNeedsProof(c: String): Boolean =
       sumShapes.exists(s => s.col == c && s.needProof)
-    val entries0 = g.lt.metadataFileEntries(g.pinnedSnapshot,
-      dirRestrict = idParts, keyRangeUs = Some((lo, hi))).getOrElse(return None)
-    val entries =
-      if (idParts.isEmpty) entries0
-      else restrictEntries(entries0, idParts).getOrElse(return None)
+    val entries = core.entries(idParts, Some((lo, hi))).getOrElse(return None)
     var interior = 0L
     var anyInterior = false
     var intMin: Option[Long] = None
@@ -599,14 +605,10 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     }
     if (!anyInterior)
       return None // nothing interior: the hybrid degenerates to the plain scan
-    val child0 = g.lt.readFilesSubset(boundary.toSeq).queryExecution.analyzed
-    // re-alias the subset scan to the relation's attribute ids so the
+    // the subset scan under the relation's attribute ids, so the
     // ORIGINAL condition (and nothing else) applies verbatim on top
-    val reProj = Project(
-      r.output.map { target =>
-        val src = child0.output.find(_.name == target.name).getOrElse(return None)
-        Alias(src, target.name)(exprId = target.exprId)
-      }, child0)
+    val reProj = reAliased(r,
+      g.lt.readFilesSubset(boundary.toSeq).queryExecution.analyzed).getOrElse(return None)
     val keyAttr = r.output.find(_.name == keyCol).getOrElse(return None)
     val baseAliases: Map[RShape, Alias] = shapes.iterator.collect {
       case RCount => (RCount: RShape) ->
@@ -707,190 +709,91 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     Some(Project(rewritten, inner))
   }
 
-  /** Data-independent answerability of every aggregate in the list —
-    * checked BEFORE any metadata is read, so an unanswerable SHAPE
-    * (FILTER clauses, count DISTINCT, non-attribute args) costs zero
-    * manifest parses on its way to the normal expansion.
-    * Data-dependent facts (roll-up completeness) still bail later.
+  /** The Catalyst aggregate as the core's ask ([[MetadataAggCore.Ask]])
+    * — None ⇔ a shape the metadata can never answer (a FILTER clause,
+    * DISTINCT sum/avg, non-attribute arguments, any other function).
+    * Needs no data, so both rewrites translate BEFORE reading any
+    * metadata: an unanswerable shape costs zero manifest reads.
     */
-  private def aggShapesSupported(agg: Aggregate): Boolean =
-    !agg.aggregateExpressions.exists(_.exists {
-      case ae: AggregateExpression =>
-        ae.filter.isDefined || (ae.aggregateFunction match {
-          case Count(Seq(l: Literal)) => l.value == null || ae.isDistinct
-          // count(DISTINCT c) is SHAPE-answerable since round 18
-          // (VERDICT r17 #4) — whether c is an identity partition
-          // column is a data question, decided at the answer site
-          case Count(Seq(_: AttributeReference)) => false
-          case Min(_: AttributeReference) | Max(_: AttributeReference) => false
-          // sum(col) is answerable since round 16 (per-file exact sums
-          // under `write.sum-columns`), avg(col) since round 17 (the
-          // same facts under the 2⁵³ determinism proof); the DISTINCT
-          // forms never are
-          case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-            _: AttributeReference, _) => ae.isDistinct
-          case org.apache.spark.sql.catalyst.expressions.aggregate.Average(
-            _: AttributeReference, _) => ae.isDistinct
-          // approx_count_distinct(col) is SHAPE-answerable since round
-          // 18 (`write.ndv-columns` sketches); DISTINCT is immaterial
-          // for a set-semantics aggregate
-          case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-            .HyperLogLogPlusPlus => !hll.child.isInstanceOf[AttributeReference]
-          case _ => true
-        })
-      case _ => false
-    })
-
-  /** The entries surviving an identity restriction — None when any
-    * entry LACKS a restricted dir level (a pre-evolution file's rows
-    * carry unknown values, so the subset would not be provably exact).
-    */
-  private def restrictEntries(
-      entries: Seq[graft.lake.DataFile],
-      restrict: Seq[(String, Set[String])]): Option[Seq[graft.lake.DataFile]] =
-    Some(entries.filter { f =>
-      restrict.forall { case (field, vals) =>
-        f.partitionSegments.get(field) match {
-          case Some(seg) => vals.contains(seg)
-          case None => return None
-        }
+  private def askOf(ae: AggregateExpression): Option[Ask] =
+    if (ae.filter.isDefined) None
+    else ae.aggregateFunction match {
+      case Count(Seq(l: Literal)) if l.value != null && !ae.isDistinct => Some(Ask.CountStar)
+      // count of a non-nullable column IS count(*) — the optimizer's
+      // NullPropagation folds it so before the DSv2 pushdown sees it
+      case Count(Seq(a: AttributeReference)) if !ae.isDistinct && !a.nullable =>
+        Some(Ask.CountStar)
+      case Count(Seq(a: AttributeReference)) =>
+        Some(if (ae.isDistinct) Ask.CountDistinct(a.name) else Ask.CountCol(a.name))
+      // min(DISTINCT x) ≡ min(x): isDistinct is irrelevant for extremes
+      case Min(a: AttributeReference) => Some(Ask.Extreme(a.name, wantMin = true))
+      case Max(a: AttributeReference) => Some(Ask.Extreme(a.name, wantMin = false))
+      // LEGACY wraps, and the exact Long-fitting total IS the wrapped
+      // answer; ANSI/TRY may throw/NULL on an intermediate overflow
+      case Sum(a: AttributeReference, ctx) if !ae.isDistinct =>
+        Some(Ask.SumCol(a.name, requireNoOverflowProof = ctx.evalMode != EvalMode.LEGACY))
+      case avg @ Average(a: AttributeReference, _) if !ae.isDistinct =>
+        Some(Ask.AvgCol(a.name, Some(avg)))
+      // approx_count_distinct: DISTINCT is immaterial (set semantics)
+      case hll: HyperLogLogPlusPlus => hll.child match {
+        case a: AttributeReference =>
+          graft.lake.NdvSketch.pOf(hll.hllppHelper).map(Ask.Ndv(a.name, _))
+        case _ => None
       }
-    })
+      case _ => None
+    }
 
-  /** `SELECT count(*) / min(k) / max(k) / count(c) / min(c) / max(c)
+  /** The plan's semantically distinct aggregate expressions, each with
+    * its ask — None ⇔ any one is untranslatable.
+    */
+  private def asksOf(agg: Aggregate): Option[Seq[(AggregateExpression, Ask)]] = {
+    val aggFns = scala.collection.mutable.ArrayBuffer.empty[AggregateExpression]
+    agg.aggregateExpressions.foreach(_.foreach {
+      case ae: AggregateExpression => if (!aggFns.exists(_.semanticEquals(ae))) aggFns += ae
+      case _ => ()
+    })
+    Some(aggFns.toSeq.map(ae => ae -> askOf(ae).getOrElse(return None)))
+  }
+
+  /** `agg`'s output list with every aggregate expression replaced by
+    * `answer(i)`, `i` its index in `aggFns`.
+    */
+  private def replaceAggs(agg: Aggregate, aggFns: Seq[AggregateExpression])(
+      answer: Int => Expression): Seq[NamedExpression] =
+    agg.aggregateExpressions.map(_.transformUp {
+      case ae: AggregateExpression => answer(aggFns.indexWhere(_.semanticEquals(ae)))
+    }.asInstanceOf[NamedExpression])
+
+  /** `SELECT count(*) / min / max / count(c) / sum / avg / approx_count_distinct
     * FROM t [VERSION AS OF v] [WHERE <pure identity restriction>]`
-    * answered from manifest stats alone (round 15 — the Iceberg
-    * metadata-aggregate analog). Every [[AggregateExpression]] in the
-    * list must be provable or the whole plan is left for the normal
-    * scan expansion — correctness never depends on this rewrite, it
-    * only removes the scan when the roll-ups already hold the answer.
-    * Provable means: no live merge-on-read masks (a mask can remove
-    * any row, including an extreme), no FILTER clause, count of a
-    * non-null literal (= `count(*)`) or of a stats column with
-    * complete null roll-ups, and min/max of the partition-source key,
-    * of an integral/timestamp stats column with complete long
-    * roll-ups, or of a DOUBLE stats column with complete EXACT double
-    * roll-ups (the floor/ceil-widened longs are never served as
-    * extremes). Strings are excluded (their manifest bounds are
-    * TRUNCATED — a prefix is not the extreme); renamed columns are
-    * excluded (pre-rename manifest entries carry the historical name,
-    * so the current name's roll-up is incomplete). Disabled by setting
-    * `spark.graft.sql.metadata-aggregates=false`.
+    * answered from manifest stats alone (the Iceberg metadata-aggregate
+    * analog) by [[MetadataAggCore.answer]]. Every aggregate must be
+    * provable or the whole plan is left for the normal scan expansion
+    * — correctness never depends on this rewrite, it only removes the
+    * scan when the roll-ups already hold the answer. Disabled by
+    * setting `spark.graft.sql.metadata-aggregates=false`.
     */
   private def metadataAggregate(
       agg: Aggregate, g: GraftSqlTable,
-      restrict: Option[Seq[(String, Set[String])]] = None): Option[LogicalPlan] = {
-    if (!aggShapesSupported(agg)) return None
-    val info = restrict match {
-      case None => g.lt.metadataAggInfo(g.pinnedSnapshot).getOrElse(return None)
-      case Some(rs) =>
-        val entries = g.lt.metadataFileEntries(g.pinnedSnapshot, dirRestrict = rs)
-          .getOrElse(return None)
-        graft.lake.MetadataAggInfo.ofFiles(
-          restrictEntries(entries, rs).getOrElse(return None))
-    }
-    val meta = g.lt.metadata
-    // typed answers come from the shared core ([[MetadataAggFacts]]),
-    // so the DSv2 pushdown serves byte-identical values
-    val facts = new MetadataAggFacts(info, meta)
-    // file entries, fetched only when a count(DISTINCT identity) asks
-    // (round 18, VERDICT r17 #4) — same restriction discipline as the
-    // info itself
-    lazy val distinctEntries: Option[Seq[graft.lake.DataFile]] =
-      restrict match {
-        case None => g.lt.metadataFileEntries(g.pinnedSnapshot)
-        case Some(rs) =>
-          g.lt.metadataFileEntries(g.pinnedSnapshot, dirRestrict = rs)
-            .flatMap(restrictEntries(_, rs))
-      }
-    val schemaT = org.apache.spark.sql.types.StructType.fromDDL(meta.schemaDdl)
-    def answer(ae: AggregateExpression): Option[Expression] = {
-      if (ae.filter.isDefined) return None
-      ae.aggregateFunction match {
-        case Count(Seq(l: Literal)) if l.value != null && !ae.isDistinct =>
-          Some(Literal(facts.countStar))
-        // count(DISTINCT identity-dim) (round 18): distinct decoded dir
-        // values — the sentinel-ambiguity and canonical-rendering gates
-        // live in the shared core
-        case Count(Seq(a: AttributeReference)) if ae.isDistinct =>
-          distinctEntries.flatMap(MetadataGroupFacts.countDistinctIdentity(
-            meta, schemaT, a.name, _)).map(Literal(_))
-        case Count(Seq(a: AttributeReference)) if !ae.isDistinct =>
-          facts.countCol(a.name).map(Literal(_))
-        // min(DISTINCT x) ≡ min(x): isDistinct is irrelevant for extremes
-        case Min(a: AttributeReference) => facts.extreme(a.name, wantMin = true)
-        case Max(a: AttributeReference) => facts.extreme(a.name, wantMin = false)
-        // ANSI/TRY sums may THROW/NULL on intermediate overflow where
-        // the exact total would not — the facts layer demands the
-        // sign-uniformity proof for those modes (LEGACY wraps, and the
-        // exact Long-fitting total IS the wrapped answer)
-        case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-            a: AttributeReference, ctx) if !ae.isDistinct =>
-          facts.sumCol(a.name, requireNoOverflowProof =
-            ctx.evalMode != org.apache.spark.sql.catalyst.expressions.EvalMode.LEGACY)
-        // avg (round 17, VERDICT r16 #5): mode-independent — the 2⁵³
-        // proof inside avgCol makes the double accumulation exact and
-        // overflow-free in every mode; the live instance rides along
-        // so decimal avg (round 18) folds through ITS evaluate
-        // expression
-        case avgFn @ org.apache.spark.sql.catalyst.expressions.aggregate
-            .Average(a: AttributeReference, _) if !ae.isDistinct =>
-          facts.avgCol(a.name, Some(avgFn))
-        // approx_count_distinct (round 18): the merged per-file HLL++
-        // register state equals the scan's, so the estimate is served
-        // bit-for-bit ([[MetadataAggFacts.ndvCol]] — precision and
-        // write-time-type gated). DISTINCT is immaterial (set
-        // semantics).
-        case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-            .HyperLogLogPlusPlus =>
-          hll.child match {
-            case a: AttributeReference =>
-              graft.lake.NdvSketch.pOf(hll.hllppHelper)
-                .flatMap(facts.ndvCol(a.name, _))
-            case _ => None
-          }
-        case _ => None
-      }
-    }
-    var ok = true
-    val rewritten = agg.aggregateExpressions.map { ne =>
-      ne.transformUp {
-        case ae: AggregateExpression =>
-          answer(ae) match {
-            case Some(lit) => lit
-            case None => ok = false; ae
-          }
-      }.asInstanceOf[NamedExpression]
-    }
-    if (ok) Some(Project(rewritten, OneRowRelation())) else None
+      restrict: Seq[(String, Set[String])] = Nil): Option[LogicalPlan] = {
+    val aggs = asksOf(agg).getOrElse(return None)
+    val lits = new MetadataAggCore(g).answer(aggs.map(_._2), restrict).getOrElse(return None)
+    Some(Project(replaceAggs(agg, aggs.map(_._1))(lits), OneRowRelation()))
   }
 
-  /** `SELECT k…, count(*) / count(c) / min / max FROM t GROUP BY k…`
-    * where every `k` is an IDENTITY partition column OR a supported
-    * time derivation of the partition-source key (`year(ts)`,
-    * `month(ts)`, `day(ts)`, `hour(ts)`, `CAST(ts AS DATE)` over a
-    * compatible dir granularity) — answered from per-file manifest
-    * entries grouped by their partition-dir segments (one cached
-    * manifest parse, zero data I/O, no shuffle). Covers `SELECT
-    * DISTINCT k` too (it analyzes to the same Aggregate). The identity
-    * invariant is what makes this exact: every row of a file carries
-    * the file's own dir value — and for time dirs, every row's
-    * derivation equals the dir int, which is strictly finer than any
-    * coarser requested derivation. Bails (→ normal scan) whenever that
-    * proof fails: live merge-on-read masks, an unsupported grouping
-    * shape/type, a renamed column, a file missing the dir level
-    * (pre-evolution spec), the null-sentinel dir
-    * (`__HIVE_DEFAULT_PARTITION__` cannot round-trip the value), an
-    * undecodable `%` escape or non-canonical dir rendering, a
-    * TimestampType derivation in a non-UTC session (dir ints are
-    * derived in the writer's session zone; the engine pins UTC), or
-    * any per-group aggregate whose bounds/null roll-ups are
-    * incomplete. Zero-row groups (a group of empty files) are
-    * dropped — a real GROUP BY emits no row for them.
+  /** `SELECT k…, <aggregates> FROM t GROUP BY k…` where every `k` is an
+    * IDENTITY partition column OR a supported time derivation of the
+    * partition-source key (`year(ts)`, `month(ts)`, `day(ts)`,
+    * `hour(ts)`, `CAST(ts AS DATE)` over a compatible dir granularity)
+    * — answered by [[MetadataAggCore.answerGrouped]] from per-file
+    * manifest entries grouped by their partition-dir segments (one
+    * cached manifest parse, zero data I/O, no shuffle). Covers `SELECT
+    * DISTINCT k` too (it analyzes to the same Aggregate). Bails (→
+    * normal scan) whenever the core cannot prove a group or an answer.
     */
   private def metadataGroupAggregate(
       agg: Aggregate, g: GraftSqlTable,
-      restrict: Option[Seq[(String, Set[String])]] = None,
+      restrict: Seq[(String, Set[String])] = Nil,
       /** A closed key-micros range conjunct (round 15): group
         * counts/extremes/sums stay metadata-only when EVERY overlapping
         * file is bounds-interior with the needed roll-ups — each
@@ -910,162 +813,82 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
         */
       boundaryCtx: Option[(DataSourceV2Relation, Expression)] = None)
       : Option[LogicalPlan] = {
-    if (!aggShapesSupported(agg)) return None
-    import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
-    val meta = g.lt.metadata
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(meta.schemaDdl)
-    val keyCol = meta.statsSource
-    val fields = meta.specList.flatMap(_.fields).distinct
-    /** One grouping dimension: the original grouping expression, the
-      * output attribute the rewritten plan exposes for it, the dir
-      * level it reads, the decode of a dir segment into the group's
-      * typed INTERNAL value, and (identity dims only) the bare column
-      * attribute — min/max/count of THAT column inside the group are
-      * the group value itself.
-      */
-    final case class GroupDim(
-        expr: Expression,
-        out: org.apache.spark.sql.catalyst.expressions.Attribute,
-        segName: String,
-        internal: String => Option[Any],
-        identityAttr: Option[AttributeReference])
-    def identityDim(a: AttributeReference): Option[GroupDim] = {
-      if (meta.aliasMap.contains(a.name)) return None
-      val f = fields.find(f => f.transform == "identity" && f.source == a.name)
-        .getOrElse(return None)
-      // shared decode ([[MetadataGroupFacts]]): the DSv2 grouped
-      // pushdown must key groups byte-identically
-      val conv = MetadataGroupFacts.identityDecode(a.dataType).getOrElse(return None)
-      Some(GroupDim(a, a, f.name, conv, Some(a)))
+    import org.apache.spark.sql.catalyst.expressions.{Cast, DayOfMonth, Hour, Month, Year}
+    import org.apache.spark.sql.types.DateType
+    val aggs = asksOf(agg).getOrElse(return None)
+    val aggFns = aggs.map(_._1)
+    val asks = aggs.map(_._2)
+    val core = new MetadataAggCore(g)
+    val keyCol = core.meta.statsSource
+    val tz = session.sessionState.conf.sessionLocalTimeZone
+    // `year(ts)` over a timestamp analyzes to Year(Cast(ts, DATE)) —
+    // peel the implicit date cast (its zone is the session zone, the
+    // one the time-dim admission's UTC gate pins)
+    object TsAttr {
+      def unapply(e: Expression): Option[String] = e match {
+        case a: AttributeReference => Some(a.name)
+        case Cast(a: AttributeReference, DateType, _, _) => Some(a.name)
+        case _ => None
+      }
     }
-    // time derivations over the partition source: the dir int is the
-    // writer-session-local (year, month, day[, hour]) tuple, strictly
-    // finer than (or equal to) every supported derivation. The engine's
-    // own sessions all pin UTC; a TimestampType derivation in any other
-    // session zone could disagree with the dirs, so it bails (NTZ is
-    // wall-clock on both sides — always consistent).
-    def timeDim(e: Expression, i: Int): Option[GroupDim] = {
-      import org.apache.spark.sql.catalyst.expressions.{Cast, DayOfMonth, Hour, Month, Year}
-      // `year(ts)` over a timestamp analyzes to Year(Cast(ts, DATE)) —
-      // peel the implicit date cast (its zone is the session zone, the
-      // same one the UTC gate below pins)
-      object TsAttr {
-        def unapply(e2: Expression): Option[AttributeReference] = e2 match {
-          case a: AttributeReference => Some(a)
-          case Cast(a: AttributeReference, DateType, _, _) => Some(a)
-          case _ => None
-        }
-      }
-      val (a, kind): (AttributeReference, String) = e match {
-        case Year(TsAttr(a0)) => (a0, "year")
-        case Month(TsAttr(a0)) => (a0, "month")
-        case DayOfMonth(TsAttr(a0)) => (a0, "day")
-        case Hour(TsAttr(a0), _) => (a0, "hour")
-        case Cast(a0: AttributeReference, DateType, _, _) => (a0, "date")
-        case _ => return None
-      }
-      // the FULL admission is shared ([[MetadataGroupFacts
-      // .timeDimAdmit]], round 18): alias/schema/tz/granularity gates
-      // and the dir-int-validated decode come from one implementation
-      // for this rule and the DSv2 Extract grouping — zero drift (the
-      // ADVICE r15 phantom-group validation included)
-      val (segName, conv) = MetadataGroupFacts.timeDimAdmit(
-        meta, schema, session.sessionState.conf.sessionLocalTimeZone,
-        kind, a.name).getOrElse(return None)
-      Some(GroupDim(e,
-        AttributeReference(s"_meta_grp_$i", e.dataType, nullable = false)(),
-        segName, conv, None))
+    val dims: Seq[GroupDim] = core.dims(agg.groupingExpressions) {
+      case a: AttributeReference => core.identityDim(a.name)
+      case Year(TsAttr(c)) => core.timeDim("year", c, tz)
+      case Month(TsAttr(c)) => core.timeDim("month", c, tz)
+      case DayOfMonth(TsAttr(c)) => core.timeDim("day", c, tz)
+      case Hour(TsAttr(c), _) => core.timeDim("hour", c, tz)
+      case Cast(a: AttributeReference, DateType, _, _) => core.timeDim("date", a.name, tz)
+      case _ => None
+    }.getOrElse(return None)
+    // the rewritten plan's column per grouping expression (an identity
+    // dim keeps the relation's own attribute)
+    val dimOuts: Seq[Attribute] = agg.groupingExpressions.zipWithIndex.map {
+      case (a: AttributeReference, _) => a
+      case (e, i) => AttributeReference(s"_meta_grp_$i", e.dataType, nullable = false)()
     }
-    val dims: Seq[GroupDim] = agg.groupingExpressions.zipWithIndex.map {
-      case (a: AttributeReference, _) => identityDim(a).getOrElse(return None)
-      case (e, i) => timeDim(e, i).getOrElse(return None)
+    // under a range an ndv aggregate's synthetic column carries the
+    // register-WORDS partial (binary), not the Long estimate — the
+    // HllMergeEstimate finisher is applied in the rewrite on both the
+    // pure and the hybrid path
+    def rangeNdvP(i: Int): Option[Int] = (keyRangeUs, asks(i)) match {
+      case (Some(_), Ask.Ndv(_, p)) => Some(p)
+      case _ => None
     }
-    if (dims.isEmpty ||
-      dims.map(_.expr.canonicalized).distinct.size != dims.size)
-      return None
-    val entries0 = g.lt.metadataFileEntries(
-      g.pinnedSnapshot, dirRestrict = restrict.getOrElse(Nil),
-      keyRangeUs = keyRangeUs).getOrElse(return None)
-    val entries1 = restrict match {
-      case None => entries0
-      case Some(rs) => restrictEntries(entries0, rs).getOrElse(return None)
-    }
-    // sum columns requested under a range (round 17, VERDICT r16 #6):
-    // an interior file serving a sum must have ZERO null keys (its
-    // recorded sum includes rows the predicate excludes) plus the sum
-    // and null roll-ups — files missing any of that demote to the
-    // boundary scan instead of bailing
-    val rangeSumCols: Seq[String] =
-      if (keyRangeUs.isEmpty) Nil
-      else {
-        val cols = scala.collection.mutable.LinkedHashSet.empty[String]
-        agg.aggregateExpressions.foreach(_.foreach {
-          case ae: AggregateExpression => ae.aggregateFunction match {
-            case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-              a: AttributeReference, _) => cols += a.name
-            case _ => ()
-          }
-          case _ => ()
-        })
-        cols.toSeq
-      }
-    // ndv shapes requested under a range (round 18, the grouped
-    // hybrid): an interior file serving registers must have ZERO null
-    // keys (a null-key row's value is in the recorded registers but
-    // fails the predicate, and registers cannot subtract) plus a
-    // sketch at the QUERY's precision hashed at the CURRENT read type
-    // — files missing any of that demote to the boundary scan
-    val rangeNdvShapes: Seq[(String, Int)] =
-      if (keyRangeUs.isEmpty) Nil
-      else {
-        val shapes = scala.collection.mutable.LinkedHashSet.empty[(String, Int)]
-        agg.aggregateExpressions.foreach(_.foreach {
-          case ae: AggregateExpression => ae.aggregateFunction match {
-            case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-                .HyperLogLogPlusPlus => hll.child match {
-              case a: AttributeReference =>
-                graft.lake.NdvSketch.pOf(hll.hllppHelper)
-                  .foreach(p => shapes += ((a.name, p)))
-              case _ => ()
-            }
-            case _ => ()
-          }
-          case _ => ()
-        })
-        shapes.toSeq
-      }
-    def fileNdvOk(f: graft.lake.DataFile): Boolean =
-      rangeNdvShapes.forall { case (c, p) =>
-        schema.fieldNames.contains(c) && !meta.aliasMap.contains(c) &&
-          f.colNdv.flatMap(_.get(c))
-            .flatMap(graft.lake.NdvSketch.decode)
-            .exists(d => d._1 == p && d._2 ==
-              graft.lake.NdvSketch.typeTag(schema(c).dataType))
-      }
-    // under a range: drop provably-outside files, keep interior ones
-    // with their EFFECTIVE row count (rows − keyNulls: null-key rows
-    // fail the range predicate); a straddler or roll-up-incomplete
-    // interior file demotes to the boundary scan when the hybrid is
-    // available, else bails the rewrite
-    val keyName = keyCol.getOrElse("")
     val boundaryFiles = scala.collection.mutable.ArrayBuffer.empty[graft.lake.DataFile]
-    val entries: Seq[(graft.lake.DataFile, Long)] = keyRangeUs match {
-      case None => entries1.map(f => (f, f.rows))
-      case Some(_) if keyCol.isEmpty => return None
+    val data: Seq[InternalRow] = keyRangeUs match {
+      case None => core.answerGrouped(dims, asks, restrict).getOrElse(return None)
       case Some((lo, hi)) =>
-        val keep = scala.collection.mutable.ArrayBuffer.empty[(graft.lake.DataFile, Long)]
-        entries1.foreach { f =>
+        val keyName = keyCol.getOrElse(return None)
+        // an interior file serving a sum or an ndv must have ZERO null
+        // keys (its recorded sum / registers include rows the predicate
+        // excludes) plus the column's roll-ups at the query's precision
+        // and current type — files missing any of that demote to the
+        // boundary scan instead of bailing
+        val sumCols = asks.collect { case Ask.SumCol(c, _) => c }.distinct
+        val ndvShapes = asks.collect { case Ask.Ndv(c, p) => (c, p) }.distinct
+        def valuesOk(f: graft.lake.DataFile, keyNulls: Option[Long]): Boolean =
+          (sumCols.isEmpty && ndvShapes.isEmpty) || keyNulls.contains(0L) && {
+            sumCols.forall(c => f.colSums.exists(_.contains(c)) && f.colNulls.exists(_.contains(c))) &&
+              ndvShapes.forall { case (c, p) =>
+                core.schema.fieldNames.contains(c) && !core.meta.aliasMap.contains(c) &&
+                  f.colNdv.flatMap(_.get(c)).flatMap(graft.lake.NdvSketch.decode)
+                    .exists(d => d._1 == p &&
+                      d._2 == graft.lake.NdvSketch.typeTag(core.schema(c).dataType))
+              }
+          }
+        // drop provably-outside files, keep interior ones with their
+        // EFFECTIVE row count (rows − keyNulls: null-key rows fail the
+        // range predicate); a straddler or roll-up-incomplete interior
+        // file demotes to the boundary scan when the hybrid is
+        // available, else bails the rewrite
+        val interior = scala.collection.mutable.ArrayBuffer.empty[(graft.lake.DataFile, Long)]
+        core.entries(restrict, keyRangeUs).getOrElse(return None).foreach { f =>
           (f.minKeyUs, f.maxKeyUs) match {
             case (Some(mn), Some(mx)) if mx < lo || mn > hi => () // outside
             case (Some(mn), Some(mx)) if mn >= lo && mx <= hi =>
               val keyNulls = f.colNulls.flatMap(_.get(keyName))
-              val sumsOk = rangeSumCols.forall(c =>
-                keyNulls.contains(0L) && f.colSums.exists(_.contains(c)) &&
-                  f.colNulls.exists(_.contains(c)))
-              val ndvOk = rangeNdvShapes.isEmpty ||
-                (keyNulls.contains(0L) && fileNdvOk(f))
               keyNulls match {
-                case Some(n) if sumsOk && ndvOk => keep += ((f, f.rows - n))
+                case Some(n) if valuesOk(f, keyNulls) => interior += ((f, f.rows - n))
                 case _ if boundaryCtx.isDefined => boundaryFiles += f
                 case _ => return None
               }
@@ -1073,221 +896,59 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
             case _ => return None
           }
         }
-        keep.toSeq
+        // under a RANGE only facts that cannot belong to an excluded row
+        // survive: count(*) (effective rows), the KEY's own extremes
+        // (interior bounds are real in-range non-null-key values), a
+        // grouping identity value (every in-range row of the group
+        // carries it), and sums over the interiors classified above —
+        // TRY bails (its overflow-NULL would be indistinguishable from
+        // an empty-NULL in the hybrid combine). An ndv's interior
+        // partial is the group's merged register WORDS.
+        core.grouped(dims, interior.toSeq) { (key, files, rows) =>
+          aggs.map { case (ae, ask) =>
+            (ae.aggregateFunction, ask) match {
+              case (_, Ask.CountStar) => core.groupAnswer(dims, ask, key, files, rows)
+              case (_, Ask.Extreme(c, _)) if keyCol.contains(c) ||
+                  dims.exists(d => d.isIdentity && d.column == c) =>
+                core.groupAnswer(dims, ask, key, files, rows)
+              case (Sum(_, ctx), _: Ask.SumCol) if ctx.evalMode != EvalMode.TRY =>
+                core.groupAnswer(dims, ask, key, files, rows)
+              case (_, Ask.Ndv(c, _)) =>
+                val encs = files.map(_.colNdv.flatMap(_.get(c)))
+                if (encs.exists(_.isEmpty)) None
+                else graft.lake.NdvSketch.mergeEncoded(encs.flatten)
+                  .flatMap(graft.lake.NdvSketch.decode)
+                  .map(d => graft.lake.NdvSketch.wordsToPackedBytes(d._3))
+              case _ => None
+            }
+          }
+        }.getOrElse(return None)
     }
-    // group key = the DERIVED internal values (not the raw segments: a
-    // coarser derivation like month(ts) over day dirs must MERGE the
-    // dirs that share a derived value)
-    val keyed: Seq[(Seq[Any], (graft.lake.DataFile, Long))] = entries.map {
-      case (f, eff) =>
-        val key = dims.map { d =>
-          val seg = f.partitionSegments.getOrElse(d.segName, return None)
-          if (seg == graft.lake.LakehouseTable.HiveDefaultPartition) return None
-          d.internal(seg).getOrElse(return None)
-        }
-        (key, (f, eff))
-    }
-    def identityIdx(name: String): Option[Int] =
-      dims.indexWhere(_.identityAttr.exists(_.name == name)) match {
-        case -1 => None
-        case i => Some(i)
-      }
-    // a time dim on source `c` proves every grouped row has c non-null
-    // (a null c row would have landed in the sentinel dir)
-    def timeDimOnSource(name: String): Boolean =
-      dims.exists(d => d.identityAttr.isEmpty && (d.expr match {
-        case _ if d.segName.isEmpty => false
-        case e => e.references.exists(_.name == name)
-      }))
-    // per-group min/max from per-file bounds, complete-or-bail —
-    // shared with the DSv2 grouped pushdown ([[MetadataGroupFacts]])
-    def internalMinMax(
-        name: String, files: Seq[graft.lake.DataFile],
-        wantMin: Boolean): Option[Any] =
-      MetadataGroupFacts.groupMinMax(meta, schema, keyCol, name, files, wantMin)
-    def answerFor(
-        ae: AggregateExpression, key: Seq[Any],
-        group: Seq[(graft.lake.DataFile, Long)]): Option[Any] = {
-      if (ae.filter.isDefined) return None
-      val files = group.map(_._1)
-      val rows = group.map(_._2).sum
-      ae.aggregateFunction match {
-        case Count(Seq(l: Literal)) if l.value != null && !ae.isDistinct =>
-          Some(java.lang.Long.valueOf(rows))
-        // under a RANGE, only facts that cannot belong to an excluded
-        // row survive: count(*) (effective rows), the KEY's own
-        // extremes (interior bounds are real in-range non-null-key
-        // values), and a grouping identity value (every in-range row
-        // of the group carries it); anything else bails
-        case Min(a: AttributeReference)
-            if keyRangeUs.isDefined && keyCol.contains(a.name) =>
-          internalMinMax(a.name, files, wantMin = true)
-        case Max(a: AttributeReference)
-            if keyRangeUs.isDefined && keyCol.contains(a.name) =>
-          internalMinMax(a.name, files, wantMin = false)
-        case Min(a: AttributeReference)
-            if keyRangeUs.isDefined && identityIdx(a.name).isDefined =>
-          Some(key(identityIdx(a.name).get))
-        case Max(a: AttributeReference)
-            if keyRangeUs.isDefined && identityIdx(a.name).isDefined =>
-          Some(key(identityIdx(a.name).get))
-        // grouped range sums (round 17, VERDICT r16 #6): interior files
-        // were classified with zero null keys + recorded sums for every
-        // requested sum column, so the group's interior Σ is exact for
-        // the in-range rows; TRY bails (its overflow-NULL would be
-        // indistinguishable from an empty-NULL in the hybrid combine)
-        case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-            a: AttributeReference, ctx)
-            if keyRangeUs.isDefined && !ae.isDistinct &&
-              ctx.evalMode !=
-                org.apache.spark.sql.catalyst.expressions.EvalMode.TRY =>
-          MetadataGroupFacts.groupSum(meta, schema, a.name, files,
-            requireNoOverflowProof = ctx.evalMode !=
-              org.apache.spark.sql.catalyst.expressions.EvalMode.LEGACY)
-        // grouped range ndv (round 18): interior files passed the
-        // per-file gates at classification (zero null keys, sketch at
-        // the query's p and current type), so the group's interior
-        // PARTIAL is the merged register WORDS — binary, finished by
-        // HllMergeEstimate in the rewrite (pure path) or merged with
-        // the boundary leg first (hybrid)
-        case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-            .HyperLogLogPlusPlus if keyRangeUs.isDefined =>
-          hll.child match {
-            case a: AttributeReference =>
-              val encs = files.map(_.colNdv.flatMap(_.get(a.name)))
-              if (encs.exists(_.isEmpty)) None
-              else for {
-                p <- graft.lake.NdvSketch.pOf(hll.hllppHelper)
-                if rangeNdvShapes.contains((a.name, p))
-                merged <- graft.lake.NdvSketch.mergeEncoded(encs.flatten)
-                d <- graft.lake.NdvSketch.decode(merged)
-              } yield graft.lake.NdvSketch.wordsToPackedBytes(d._3)
-            case _ => None
-          }
-        case _ if keyRangeUs.isDefined => None
-        // count(DISTINCT identity-dim) per group (round 18, VERDICT
-        // r17 #4): distinct decoded dir values among the group's files
-        // — a grouping identity column itself is constant-per-group
-        // (answers 1 through the same helper); sentinel/canonical
-        // gates in the shared core
-        case Count(Seq(a: AttributeReference)) if ae.isDistinct =>
-          MetadataGroupFacts.countDistinctIdentity(meta, schema, a.name, files)
-            .map(java.lang.Long.valueOf(_))
-        case Count(Seq(a: AttributeReference)) if !ae.isDistinct =>
-          // non-null throughout the group: an identity grouping column
-          // (null lands in the sentinel dir), or the source of a time
-          // grouping dim (same argument); else the null roll-ups
-          // (shared with the DSv2 grouped pushdown)
-          if (identityIdx(a.name).isDefined || timeDimOnSource(a.name))
-            Some(java.lang.Long.valueOf(rows))
-          else MetadataGroupFacts.groupCountCol(meta, a.name, files, rows)
-            .map(java.lang.Long.valueOf(_))
-        case Min(a: AttributeReference) =>
-          identityIdx(a.name) match {
-            case Some(i) => Some(key(i))
-            case None => internalMinMax(a.name, files, wantMin = true)
-          }
-        case Max(a: AttributeReference) =>
-          identityIdx(a.name) match {
-            case Some(i) => Some(key(i))
-            case None => internalMinMax(a.name, files, wantMin = false)
-          }
-        // grouped sum (round 16): Σ of the group's exact per-file sums
-        // — same complete-or-bail and mode gates as the ungrouped path
-        // ([[MetadataAggFacts.sumCol]] rationale), shared with the DSv2
-        // grouped pushdown since round 17; keyRangeUs already bailed
-        // above (an excluded row's value would be in the sum)
-        case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-            a: AttributeReference, ctx) if !ae.isDistinct =>
-          MetadataGroupFacts.groupSum(meta, schema, a.name, files,
-            requireNoOverflowProof = ctx.evalMode !=
-              org.apache.spark.sql.catalyst.expressions.EvalMode.LEGACY)
-        // grouped avg (round 17, VERDICT r16 #5): the group's exact
-        // sum + null roll-ups under the 2⁵³ partial-bound determinism
-        // proof ([[MetadataAggFacts.avgCol]] rationale); the live
-        // instance rides along for decimal avg (round 18)
-        case avgFn @ org.apache.spark.sql.catalyst.expressions.aggregate
-            .Average(a: AttributeReference, _) if !ae.isDistinct =>
-          MetadataGroupFacts.groupAvg(meta, schema, a.name, files, Some(avgFn))
-        // grouped approx_count_distinct (round 18): the group's merged
-        // per-file sketches — keyRangeUs already bailed above (an
-        // excluded row's value would be in the registers)
-        case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-            .HyperLogLogPlusPlus =>
-          hll.child match {
-            case a: AttributeReference =>
-              graft.lake.NdvSketch.pOf(hll.hllppHelper).flatMap(p =>
-                MetadataGroupFacts.groupNdv(meta, schema, a.name, files, p))
-            case _ => None
-          }
-        case _ => None
-      }
-    }
-    val groups = keyed.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-      .filter { case (_, fs) => fs.map(_._2).sum > 0 }
-      .sortBy(_._1.map(String.valueOf(_: Any)).mkString("\u0000"))
-    // every DISTINCT aggregate expression becomes one synthetic column
-    // of the local relation; grouping refs resolve to the dims' output
-    // attributes (identity dims reuse the relation's own attribute)
-    val aggFns = scala.collection.mutable.ArrayBuffer.empty[AggregateExpression]
-    agg.aggregateExpressions.foreach(_.foreach {
-      case ae: AggregateExpression =>
-        if (!aggFns.exists(_.semanticEquals(ae))) aggFns += ae
-      case _ => ()
-    })
-    // under a range an ndv aggregate's synthetic column carries the
-    // register-WORDS partial (binary), not the Long estimate — the
-    // HllMergeEstimate finisher is applied in the rewrite on both the
-    // pure and the hybrid path
-    def rangeNdvOf(ae: AggregateExpression): Option[(String, Int)] =
-      if (keyRangeUs.isEmpty) None
-      else ae.aggregateFunction match {
-        case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-            .HyperLogLogPlusPlus => hll.child match {
-          case a: AttributeReference =>
-            graft.lake.NdvSketch.pOf(hll.hllppHelper).map(p => (a.name, p))
-          case _ => None
-        }
-        case _ => None
-      }
+    // one synthetic column of the local relation per aggregate
     val synth = aggFns.zipWithIndex.map { case (ae, i) =>
       AttributeReference(s"_meta_agg_$i",
-        if (rangeNdvOf(ae).isDefined) org.apache.spark.sql.types.BinaryType
-        else ae.dataType,
+        if (rangeNdvP(i).isDefined) org.apache.spark.sql.types.BinaryType else ae.dataType,
         ae.nullable)()
-    }.toSeq
+    }
     def ndvFinish(e: Expression, p: Int): Expression =
       graft.functions.HllMergeEstimate(e,
         graft.lake.NdvSketch.wordsToPackedBytes(
           graft.lake.NdvSketch.emptyWords(p)), p)
-    val data: Seq[org.apache.spark.sql.catalyst.InternalRow] =
-      groups.map { case (k, fs) =>
-        val aggVals = aggFns.map(ae => answerFor(ae, k, fs).getOrElse(return None))
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          (k ++ aggVals).toArray[Any])
-      }
+    // grouping expressions resolve to `outs`, AFTER the aggregates were
+    // replaced (a grouping expression inside an aggregate's argument
+    // would otherwise break the aggregate lookup)
+    def regroup(e: NamedExpression, outs: Seq[Attribute]): NamedExpression =
+      e.transformUp {
+        case x if agg.groupingExpressions.exists(_.semanticEquals(x)) =>
+          outs(agg.groupingExpressions.indexWhere(_.semanticEquals(x)))
+      }.asInstanceOf[NamedExpression]
+    val interiorRel = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      dimOuts ++ synth, data)
     if (boundaryFiles.isEmpty) {
-      // pure-metadata answer — two passes, aggregates FIRST: replacing
-      // a grouping expression inside an aggregate's argument
-      // (min(year(ts)) under GROUP BY year(ts)) would otherwise break
-      // the aggFns lookup
-      val rewritten = agg.aggregateExpressions.map { ne =>
-        val aggsReplaced = ne.transformUp {
-          case ae: AggregateExpression =>
-            val i = aggFns.indexWhere(_.semanticEquals(ae))
-            rangeNdvOf(aggFns(i)) match {
-              case Some((_, p)) => ndvFinish(synth(i), p)
-              case None => synth(i)
-            }
-        }
-        aggsReplaced.transformUp {
-          case e if dims.exists(_.expr.semanticEquals(e)) =>
-            dims.find(_.expr.semanticEquals(e)).get.out
-        }.asInstanceOf[NamedExpression]
-      }
-      return Some(Project(rewritten,
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-          dims.map(_.out) ++ synth, data)))
+      val rewritten = replaceAggs(agg, aggFns) { i =>
+        rangeNdvP(i).fold[Expression](synth(i))(ndvFinish(synth(i), _))
+      }.map(regroup(_, dimOuts))
+      return Some(Project(rewritten, interiorRel))
     }
     // GROUPED HYBRID (round 17, VERDICT r16 #6): interior groups ride
     // as LocalRelation partial rows; ONLY the straddlers scan, with
@@ -1296,71 +957,52 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     // merges the two partial sets per group — groups present on only
     // one side pass through the merge unchanged. Nothing interior ⇒
     // the hybrid degenerates to the plain scan, bail.
-    if (groups.isEmpty) return None
+    if (data.isEmpty) return None
     // DECIMAL sums must not enter the hybrid combine (round 18): the
     // combining Sum over DECIMAL(p+10) partials widens to p+20, so it
     // could not throw/NULL where the scan it replaces would on a
     // final-precision overflow. Interior-only decimal range sums
     // (no straddlers) already served above; straddling ones bail.
-    if (aggFns.exists(_.aggregateFunction match {
-      case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-          a: AttributeReference, _) =>
-        schema.fieldNames.contains(a.name) &&
-          schema(a.name).dataType
-            .isInstanceOf[org.apache.spark.sql.types.DecimalType]
+    if (asks.exists {
+      case Ask.SumCol(c, _) => core.schema.fields.exists(f =>
+        f.name == c && f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
       case _ => false
-    })) return None
+    }) return None
     val (rel, cond) = boundaryCtx.get
-    val child0 = g.lt.readFilesSubset(boundaryFiles.toSeq).queryExecution.analyzed
-    // re-alias the subset scan to the relation's attribute ids so the
+    // the subset scan under the relation's attribute ids, so the
     // ORIGINAL condition and grouping expressions apply verbatim
-    val reProj = Project(
-      rel.output.map { target =>
-        val src = child0.output.find(_.name == target.name).getOrElse(return None)
-        Alias(src, target.name)(exprId = target.exprId)
-      }, child0)
+    val reProj = reAliased(rel,
+      g.lt.readFilesSubset(boundaryFiles.toSeq).queryExecution.analyzed).getOrElse(return None)
     def relAttr(name: String): Option[AttributeReference] =
       rel.output.collectFirst {
         case a: AttributeReference if a.name == name => a
       }
-    // per-aggFn boundary partial over the straddlers' filtered rows
-    val bPartials: Seq[NamedExpression] = aggFns.toSeq.zipWithIndex.map {
-      case (ae, i) =>
-        val fn = ae.aggregateFunction match {
-          case Count(Seq(l: Literal)) if l.value != null =>
-            Count(Literal(1)).toAggregateExpression()
-          case Min(a: AttributeReference) =>
+    // per-aggregate boundary partial over the straddlers' filtered rows
+    val bPartials: Seq[NamedExpression] = aggs.zipWithIndex.map {
+      case ((ae, ask), i) =>
+        val fn = (ask, ae.aggregateFunction) match {
+          case (Ask.CountStar, _) => Count(Literal(1)).toAggregateExpression()
+          case (_, Min(a: AttributeReference)) =>
             Min(relAttr(a.name).getOrElse(return None)).toAggregateExpression()
-          case Max(a: AttributeReference) =>
+          case (_, Max(a: AttributeReference)) =>
             Max(relAttr(a.name).getOrElse(return None)).toAggregateExpression()
-          case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(
-              a: AttributeReference, ctx) =>
-            org.apache.spark.sql.catalyst.expressions.aggregate
-              .Sum(relAttr(a.name).getOrElse(return None), ctx)
-              .toAggregateExpression()
+          case (_, Sum(a: AttributeReference, ctx)) =>
+            Sum(relAttr(a.name).getOrElse(return None), ctx).toAggregateExpression()
           // ndv boundary leg (round 18): the straddlers' own register
           // words, computed with the SAME update code that recorded
           // the interiors' sketches
-          case hll: org.apache.spark.sql.catalyst.expressions.aggregate
-              .HyperLogLogPlusPlus =>
-            (hll.child, rangeNdvOf(ae)) match {
-              case (a: AttributeReference, Some((_, p))) =>
-                graft.functions.HllppWords(
-                  relAttr(a.name).getOrElse(return None), p)
-                  .toAggregateExpression()
-              case _ => return None
-            }
+          case (Ask.Ndv(c, p), _) =>
+            graft.functions.HllppWords(relAttr(c).getOrElse(return None), p)
+              .toAggregateExpression()
           case _ => return None
         }
         Alias(fn, s"_graft_bagg_$i")()
     }
-    val bGroups: Seq[NamedExpression] = dims.zipWithIndex.map { case (d, i) =>
-      Alias(d.expr, s"_graft_bgrp_$i")()
+    val bGroups: Seq[NamedExpression] = agg.groupingExpressions.zipWithIndex.map {
+      case (e, i) => Alias(e, s"_graft_bgrp_$i")()
     }
     val boundaryAgg = Aggregate(
-      dims.map(_.expr), bGroups ++ bPartials, Filter(cond, reProj))
-    val interiorRel = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-      dims.map(_.out) ++ synth, data)
+      agg.groupingExpressions, bGroups ++ bPartials, Filter(cond, reProj))
     val union = org.apache.spark.sql.catalyst.plans.logical.Union(
       Seq(interiorRel, boundaryAgg), byName = false, allowMissingCol = false)
     val uOut = union.output
@@ -1371,53 +1013,45 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     // nothing); extremes take the null-skipping min/max of partials.
     // Sum partials combine under the ORIGINAL eval context, so an ANSI
     // overflow of the true per-group total still throws exactly where
-    // the scan it replaces would have.
-    def combined(i: Int): AggregateExpression = aggFns(i).aggregateFunction match {
-      case Count(_) =>
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .Sum(pAttrs(i)).toAggregateExpression()
-      case Min(_) => Min(pAttrs(i)).toAggregateExpression()
-      case Max(_) => Max(pAttrs(i)).toAggregateExpression()
-      case org.apache.spark.sql.catalyst.expressions.aggregate.Sum(_, ctx) =>
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .Sum(pAttrs(i), ctx).toAggregateExpression()
-      // ndv partials merge by register max (round 18) — set-union
-      // semantics, a row counted by both sides can never double-count
-      case _: org.apache.spark.sql.catalyst.expressions.aggregate
-          .HyperLogLogPlusPlus =>
-        graft.functions.HllppMergeWords(pAttrs(i),
-          rangeNdvOf(aggFns(i)).get._2).toAggregateExpression()
-      // unreachable: answerFor (interior rows) and bPartials both
-      // already refused every other shape under a range
-      case other => throw new IllegalStateException(
-        s"uncombinable hybrid aggregate $other")
-    }
-    val rewritten = agg.aggregateExpressions.map { ne =>
-      val aggsReplaced = ne.transformUp {
-        case ae: AggregateExpression =>
-          val idx = aggFns.indexWhere(_.semanticEquals(ae))
-          // a count's sum-of-partials is nullable LongType where
-          // count(*) is non-null — both sides always emit a partial
-          // row per group, so the sum is never null; re-assert the
-          // count's type contract with a null-safe coalesce
-          aggFns(idx).aggregateFunction match {
-            case Count(_) => org.apache.spark.sql.catalyst.expressions
-              .Coalesce(Seq(combined(idx), Literal(0L)))
-            // the merged words finish through the estimator (the
-            // all-zero empty interior is the merge identity)
-            case _: org.apache.spark.sql.catalyst.expressions.aggregate
-                .HyperLogLogPlusPlus =>
-              ndvFinish(combined(idx), rangeNdvOf(aggFns(idx)).get._2)
-            case _ => combined(idx)
-          }
+    // the scan it replaces would have. A count's sum-of-partials is
+    // nullable where count(*) is not — both sides always emit a partial
+    // row per group, so the sum is never null; the coalesce re-asserts
+    // the count's type contract. Ndv partials merge by register max
+    // (set-union semantics: a row counted by both sides can never
+    // double-count) and finish through the estimator.
+    val rewritten = replaceAggs(agg, aggFns) { i =>
+      aggFns(i).aggregateFunction match {
+        case Count(_) => org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
+          Sum(pAttrs(i)).toAggregateExpression(), Literal(0L)))
+        case Min(_) => Min(pAttrs(i)).toAggregateExpression()
+        case Max(_) => Max(pAttrs(i)).toAggregateExpression()
+        case Sum(_, ctx) => Sum(pAttrs(i), ctx).toAggregateExpression()
+        case _: HyperLogLogPlusPlus =>
+          val p = rangeNdvP(i).get
+          ndvFinish(graft.functions.HllppMergeWords(pAttrs(i), p).toAggregateExpression(), p)
+        // unreachable: the interior answers and bPartials both already
+        // refused every other shape under a range
+        case other => throw new IllegalStateException(
+          s"uncombinable hybrid aggregate $other")
       }
-      aggsReplaced.transformUp {
-        case e if dims.exists(_.expr.semanticEquals(e)) =>
-          gAttrs(dims.indexWhere(_.expr.semanticEquals(e)))
-      }.asInstanceOf[NamedExpression]
-    }
+    }.map(regroup(_, gAttrs))
     Some(Aggregate(gAttrs, rewritten, union))
   }
+
+  /** `child` projected BY NAME onto the relation's attribute ids, so
+    * references above the relation (and a re-applied original
+    * condition) resolve against it verbatim — None ⇔ a relation column
+    * is missing from `child`. Columns `child` carries beyond the
+    * relation's (the derived partition-layout columns the SQL schema
+    * hides) are simply not selected, and Catalyst prunes them away.
+    */
+  private def reAliased(r: DataSourceV2Relation, child: LogicalPlan): Option[Project] =
+    Some(Project(
+      r.output.map { target =>
+        val src = child.output.find(_.name == target.name).getOrElse(return None)
+        Alias(src, target.name)(exprId = target.exprId)
+      },
+      child))
 
   private def expandRelation(
       r: DataSourceV2Relation, filter: Option[Expression]): LogicalPlan = {
@@ -1427,19 +1061,9 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
       case other => throw new IllegalStateException(s"unexpected graft table $other")
     }
     val child = df.queryExecution.analyzed
-    // project BY NAME onto the relation's attribute ids: the native
-    // plan also carries derived partition-layout columns, which the
-    // SQL schema hides (Iceberg-style hidden partitioning) — they are
-    // simply not selected here, and Catalyst prunes them away
-    Project(
-      r.output.map { target =>
-        val src = child.output.find(_.name == target.name).getOrElse(
-          throw new IllegalStateException(
-            s"expansion schema drift: '${target.name}' missing from " +
-              s"native plan columns ${child.output.map(_.name).mkString(", ")}"))
-        Alias(src, target.name)(exprId = target.exprId)
-      },
-      child)
+    reAliased(r, child).getOrElse(throw new IllegalStateException(
+      s"expansion schema drift: '${r.output.map(_.name).find(n => !child.output.exists(_.name == n)).get}' " +
+        s"missing from native plan columns ${child.output.map(_.name).mkString(", ")}"))
   }
 }
 

@@ -3,13 +3,12 @@ package graft.sql
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
 
-/** Typed-answer core shared by the TWO metadata-aggregate surfaces —
-  * [[GraftRelationExpansion]]'s analysis-time rewrite (SQL text and,
-  * since round 16, DataFrame chains over the bare relation) and the
-  * DSv2 `SupportsPushDownAggregates` path on [[GraftScanBuilder]]
-  * (catalog users without the extension rule). Both serve
-  * count/min/max from the SAME [[graft.lake.MetadataAggInfo]] roll-ups
-  * with the SAME provable-or-bail typing:
+/** Ungrouped typed-answer gates behind [[MetadataAggCore]], the one
+  * answerer both metadata-aggregate surfaces translate into —
+  * [[GraftRelationExpansion]]'s analysis-time rewrite and the DSv2
+  * `SupportsPushDownAggregates` path on [[GraftScanBuilder]]. Answers
+  * come from the [[graft.lake.MetadataAggInfo]] roll-ups with
+  * provable-or-bail typing:
   *
   *   - `count(*)` ⇔ the roll-up row total (the info itself is None —
   *     caller bails — under live merge-on-read masks or missing key
@@ -217,14 +216,11 @@ private[sql] final class MetadataAggFacts(
   }
 }
 
-/** PER-GROUP answer core shared by the grouped metadata-aggregate
-  * surfaces — [[GraftRelationExpansion.metadataGroupAggregate]]'s
-  * analysis-time rewrite and (round 17, VERDICT r16 #3) the DSv2
-  * grouped pushdown on [[GraftScanBuilder]]. One implementation of the
-  * provable-or-bail gates per fact, so the two surfaces can never
-  * drift: answers are Catalyst-INTERNAL values (UTF8String for
-  * strings, boxed Long/Int/Double otherwise; SQL NULL is a Scala
-  * `null` inside `Some`), ready for a [[LocalRelation]] row or a
+/** PER-GROUP provable-or-bail gates behind [[MetadataAggCore]]'s
+  * grouped answer (and the rule's range-only grouped branch): answers
+  * are Catalyst-INTERNAL values (UTF8String for strings, boxed
+  * Long/Int/Double otherwise; SQL NULL is a Scala `null` inside
+  * `Some`), ready for a [[LocalRelation]] row or a
   * [[org.apache.spark.sql.connector.read.LocalScan]] row alike.
   */
 private[sql] object MetadataGroupFacts {
@@ -432,12 +428,10 @@ private[sql] object MetadataGroupFacts {
     } yield java.lang.Long.valueOf(est)
   }
 
-  // ---- shared time-derivation decode (round 18, VERDICT r17 #3) ----
-  // One implementation for BOTH grouped surfaces: the SQL rule's
-  // `GROUP BY year(ts)` rewrite and the DSv2 connector's
-  // Extract("YEAR", ts) grouping — same granularity admission, same
-  // dir-int validation, same derived internal values, so the two
-  // can never drift. Kinds: "year" | "month" | "day" | "hour" |
+  // ---- time-derivation decode (round 18, VERDICT r17 #3) ----
+  // Behind [[MetadataAggCore.timeDim]], which both grouped surfaces
+  // use: the SQL rule's `GROUP BY year(ts)` and the DSv2 connector's
+  // Extract("YEAR", ts). Kinds: "year" | "month" | "day" | "hour" |
   // "date" (the implicit `CAST(ts AS DATE)` grouping).
 
   /** Dir granularities (partition transforms) a derivation of `kind`
@@ -514,10 +508,8 @@ private[sql] object MetadataGroupFacts {
     seg => canonLong(seg).filter(validDirInt(transform, _))
       .flatMap(v => scala.util.Try(timeDerive(kind, v, transform)).toOption)
 
-  /** The FULL time-dim admission both grouped surfaces share (review
-    * r18: the gates were duplicated, only the decode was shared —
-    * exactly the drift the refactor set out to prevent): renamed
-    * column, schema membership, timestamp-zone soundness (NTZ is
+  /** The FULL time-dim admission: renamed column, schema
+    * membership, timestamp-zone soundness (NTZ is
     * wall-clock on both sides; a ZONED derivation serves only under a
     * UTC session — the engine's own writers pin UTC, so the dir ints
     * agree), dir granularity at least as fine as the derivation.

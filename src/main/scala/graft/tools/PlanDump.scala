@@ -9,6 +9,14 @@ import org.apache.spark.sql.SparkSession
   * plans (extensions, shuffle partitions, NTZ shim).
   */
 object PlanDump {
+  /** The `noop` format's write target (its table is private to Spark). */
+  private def isNoopSink(t: org.apache.spark.sql.catalyst.analysis.NamedRelation): Boolean =
+    t match {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.table.name() == "noop-table"
+      case _ => false
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query>...")
     val outDir = java.nio.file.Paths.get(args(0))
@@ -33,12 +41,18 @@ object PlanDump {
     // are visible; the static initial plan cannot show them.
     val exec = sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")
     // the noop save runs its OWN QueryExecution (the original df's stays
-    // unexecuted) — capture the executed one via a listener
+    // unexecuted) — capture the executed one via a listener. Only the
+    // noop write itself is accepted: a query's internal commit writes
+    // report to the same listener and may arrive after the reset.
     @volatile var lastQe: Option[org.apache.spark.sql.execution.QueryExecution] = None
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        lastQe = Some(qe)
+        qe.analyzed match {
+          case w: org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+              if isNoopSink(w.table) => lastQe = Some(qe)
+          case _ => ()
+        }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }

@@ -1349,4 +1349,26 @@ class MetadataAggSpec extends SparkSpec {
     t.morDeleteKeys(Seq(ts(3)).toDF("ts"), "ts")
     assert(t.metadataAggInfo().isEmpty, "live masks make nothing provable")
   }
+
+  test("a malformed spark.graft.sql.metadata-aggregates fails naming the key and value") {
+    val (cat, wh) = freshCatalog()
+    mkTable(cat, wh, "tconf1")
+    withSqlConf("spark.graft.sql.metadata-aggregates" -> "yes") {
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT count(*) AS n FROM $cat.gold.tconf1"))
+      assert(e.getMessage.contains("spark.graft.sql.metadata-aggregates") &&
+        e.getMessage.contains("'yes'"), e.getMessage)
+    }
+  }
+
+  test("a malformed spark.graft.sql.expansion-enabled fails naming the key and value") {
+    val (cat, wh) = freshCatalog()
+    mkTable(cat, wh, "tconf2")
+    withSqlConf("spark.graft.sql.expansion-enabled" -> "yes") {
+      val e = intercept[IllegalArgumentException](
+        spark.sql(s"SELECT count(*) AS n FROM $cat.gold.tconf2"))
+      assert(e.getMessage.contains("spark.graft.sql.expansion-enabled") &&
+        e.getMessage.contains("'yes'"), e.getMessage)
+    }
+  }
 }
