@@ -646,11 +646,13 @@ object Bench {
     // BENCH_r17's one-line JSON was lost to the driver's 2000-char
     // console-tail truncation, erasing a whole round-over-round
     // comparison — a file copy makes the record truncation-proof
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_HEADLINE", "bench_headline.json")),
+    val headlinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEADLINE", "bench_headline.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(headlinePath),
       (headline + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass)
+        .warn(s"could not write the headline sidecar $headlinePath: ${e.getMessage}")
+    }
     println(headline)
     spark.stop()
   }

@@ -365,10 +365,12 @@ final class LakehouseTable(
     * encoding (micros for timestamps, raw for integrals — doubles are
     * floor/ceil-widened at record time, so callers must not serve
     * them as exact extremes; the SQL rule type-guards). `colNulls`
-    * carries only columns every ref counts.
+    * carries only columns every ref counts. `meta`: the version a
+    * caller already read, so one query answers from one version.
     */
-  def metadataAggInfo(pinnedSnapshot: Option[Long] = None): Option[MetadataAggInfo] = {
-    val meta = metadata
+  def metadataAggInfo(
+      pinnedSnapshot: Option[Long] = None,
+      meta: TableMetadata = metadata): Option[MetadataAggInfo] = {
     val snapOpt = pinnedSnapshot match {
       case Some(id) => Some(meta.snapshotById(id).getOrElse(return None))
       case None => meta.currentSnapshot
@@ -403,8 +405,9 @@ final class LakehouseTable(
         * CLOSED key-micros range are dropped before parsing — they hold
         * no row the range aggregate could count or scan.
         */
-      keyRangeUs: Option[(Long, Long)] = None): Option[Seq[DataFile]] = {
-    val meta = metadata
+      keyRangeUs: Option[(Long, Long)] = None,
+      /** The version the caller already read, as in [[metadataAggInfo]]. */
+      meta: TableMetadata = metadata): Option[Seq[DataFile]] = {
     val snapOpt = pinnedSnapshot match {
       case Some(id) => Some(meta.snapshotById(id).getOrElse(return None))
       case None => meta.currentSnapshot
@@ -430,8 +433,8 @@ final class LakehouseTable(
     * live (the metadata range aggregate gates on exactly that before
     * scanning only its boundary files).
     */
-  private[graft] def readFilesSubset(files: Seq[DataFile]): DataFrame =
-    readWithDeletes(files, Nil)
+  private[graft] def readFilesSubset(files: Seq[DataFile], meta: TableMetadata): DataFrame =
+    readWithDeletes(files, Nil, meta = meta)
 
   /** Memoized sorted image list for [[imageFilesAt]]: a chunked
     * consumer calls it 2-3× per trigger across thousands of triggers
@@ -926,7 +929,9 @@ final class LakehouseTable(
         * handful of surviving rows instead of the whole scan
         * ([[deletePreImages]]'s new-key semi-join, VERDICT r10 #4).
         */
-      preFilter: Option[DataFrame => DataFrame] = None): DataFrame = {
+      preFilter: Option[DataFrame => DataFrame] = None,
+      /** The version the file list was planned from. */
+      meta: TableMetadata = metadata): DataFrame = {
     // positional deletes bind to exact files, not sequences: the
     // helper columns ride every raw scan (metadata columns resolve
     // only there) but the mask itself applies ONCE over the final
@@ -936,7 +941,7 @@ final class LakehouseTable(
     val posNames = keepPosColumns.getOrElse(("__graft_pos_path", "__graft_pos_idx"))
     val needPos = posDels.nonEmpty || keepPosColumns.isDefined
     def raw(fs: Seq[DataFile]): DataFrame = {
-      val base = readFiles(fs, tagFileColumn, if (needPos) Some(posNames) else None)
+      val base = readFiles(fs, tagFileColumn, if (needPos) Some(posNames) else None, meta)
       preFilter.map(_(base)).getOrElse(base)
     }
     def finish(unioned: DataFrame): DataFrame = {
@@ -958,14 +963,14 @@ final class LakehouseTable(
       val delSeqs = eqDels.map(_.seq).distinct.sorted
       // reverse alias map: a delete file written before a rename stores
       // the then-current (now historical) column name
-      val toCurrent: Map[String, String] = metadata.aliasMap.flatMap {
+      val toCurrent: Map[String, String] = meta.aliasMap.flatMap {
         case (cur, hist) => hist.map(_ -> cur)
       }
       // a delete file written before widenColumn stores the then-narrow
       // key type; cast to the current type so the anti-join compares
       // like-for-like (int→long / float→double are value-preserving)
       val curTypes: Map[String, org.apache.spark.sql.types.DataType] =
-        StructType.fromDDL(metadata.schemaDdl).fields
+        StructType.fromDDL(meta.schemaDdl).fields
           .map(f => f.name -> f.dataType).toMap
       files.groupBy(f => delSeqs.count(_ > f.seqOrMin)).toSeq.sortBy(_._1)
         .map { case (nApplicable, group) =>
@@ -1035,11 +1040,12 @@ final class LakehouseTable(
         * masking and the morDeleteWhere write side read through them.
         * The MASK itself is the caller's job ([[readWithDeletes]]).
         */
-      posColumns: Option[(String, String)] = None): DataFrame =
+      posColumns: Option[(String, String)] = None,
+      meta: TableMetadata = metadata): DataFrame =
     if (files.isEmpty) {
       // empty table: preserve schema + partition columns
       var empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema(meta))
       tagColumn.foreach(c => empty = empty.withColumn(c, input_file_name()))
       posColumns.foreach { case (p, i) =>
         empty = empty
@@ -1048,8 +1054,7 @@ final class LakehouseTable(
       }
       empty
     } else {
-      val meta = metadata
-      val outCols = readSchema.fieldNames.toIndexedSeq.map(col) ++ tagColumn.map(col) ++
+      val outCols = readSchema(meta).fieldNames.toIndexedSeq.map(col) ++ tagColumn.map(col) ++
         posColumns.toSeq.flatMap { case (p, i) => Seq(col(p), col(i)) }
       files.groupBy(_.specIdOrZero).toSeq.sortBy(_._1)
         .map { case (sid, fs) =>
@@ -1700,11 +1705,15 @@ final class LakehouseTable(
     * deletes derive from one metadata read, so a concurrent commit
     * (e.g. a compaction folding the delete set) cannot pair old files
     * with a newer, emptier delete set and resurrect masked rows.
+    * `meta`: the version a caller already planned against (the SQL
+    * relation's one read), so no step of one query sees a newer one.
     */
-  def readPlanned(pruning: FilePruning, snapshotId: Option[Long] = None): DataFrame = {
-    val meta = metadata
+  def readPlanned(
+      pruning: FilePruning, snapshotId: Option[Long] = None,
+      meta: TableMetadata = metadata): DataFrame = {
     val snap = snapshotAt(meta, snapshotId)
-    readWithDeletes(planFiles(meta, snap, pruning), snap.map(liveDeleteFiles).getOrElse(Nil))
+    readWithDeletes(planFiles(meta, snap, pruning), snap.map(liveDeleteFiles).getOrElse(Nil),
+      meta = meta)
   }
 
   private def snapshotAt(meta: TableMetadata, snapshotId: Option[Long]): Option[Snapshot] =
@@ -2308,8 +2317,7 @@ final class LakehouseTable(
     readPlanned(FilePruning(timeRange = Some((loUs, hiUs))))
 
   /** Schema as read back, including the derived partition column. */
-  private def readSchema: StructType = {
-    val m = metadata
+  private def readSchema(m: TableMetadata): StructType = {
     val base = StructType.fromDDL(m.schemaDdl)
     m.partitionColumns.foldLeft(base)((s, c) =>
       if (s.fieldNames.contains(c)) s else s.add(c, "int", nullable = true))
@@ -4747,7 +4755,7 @@ final class LakehouseTable(
     val (version, meta) = versionedMeta
     val current = meta.currentSnapshot.getOrElse(
       throw new IllegalStateException("cannot compact an empty table"))
-    val schemaByName = readSchema.fields.map(f => f.name -> f.dataType).toMap
+    val schemaByName = readSchema(meta).fields.map(f => f.name -> f.dataType).toMap
     zCols.foreach(c => require(schemaByName.contains(c),
       s"z-order column '$c' is not a table column"))
     val currentFiles = dataFiles(current)

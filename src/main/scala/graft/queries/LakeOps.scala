@@ -30,7 +30,8 @@ object LakeOps {
   // every q_lake_* run gets a throwaway warehouse; a JVM-exit hook reaps
   // them all so repeated verify/bench invocations don't leak table copies
   // under /tmp (the returned DataFrame is lazy, so we can't delete before
-  // the caller materializes it)
+  // the caller materializes it). The hook reports to stderr, not the
+  // logger: logging may already be shut down when it runs
   private val tempWarehouses = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     tempWarehouses.foreach { root =>
@@ -38,7 +39,9 @@ object LakeOps {
         import scala.jdk.CollectionConverters._
         Files.walk(root).iterator().asScala.toSeq.reverseIterator
           .foreach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"WARN could not remove temp warehouse $root: ${e.getMessage}")
+      }
     }))
 
   private[queries] def freshWarehouse(prefix: String): String = {

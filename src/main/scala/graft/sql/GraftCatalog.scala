@@ -1,6 +1,6 @@
 package graft.sql
 
-import graft.lake.LakehouseTable
+import graft.lake.{LakehouseTable, TableMetadata}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
@@ -410,11 +410,19 @@ final case class GraftSqlTable(
     true
   }
 
-  override def readDF(): DataFrame =
-    pinnedSnapshot.map(lt.timeTravel).getOrElse(lt.read())
+  /** The table's metadata, read once per relation: the name, schema,
+    * partitioning and properties Spark asks for, the expansion's
+    * pruning and native read, the metadata-aggregate answers and the
+    * fallback scan's statistics all plan against this one version, so
+    * a query pays one version-file read and a commit landing mid-plan
+    * cannot split it across two versions.
+    */
+  lazy val meta: TableMetadata = lt.metadata
+
+  override def readDF(): DataFrame = GraftNativeRead.nativeDF(this, filter = None)
 
   override def name(): String =
-    lt.metadata.name + pinnedSnapshot.map(v => s"@v$v").getOrElse("")
+    meta.name + pinnedSnapshot.map(v => s"@v$v").getOrElse("")
 
   /** HIDDEN PARTITIONING (Iceberg semantics): the SQL schema is the
     * frozen logical schema only — derived partition columns (`ts_day`,
@@ -424,13 +432,13 @@ final case class GraftSqlTable(
     * data columns and stay visible.)
     */
   override lazy val schema: StructType =
-    StructType.fromDDL(lt.metadata.schemaDdl)
+    StructType.fromDDL(meta.schemaDdl)
 
   override def partitioning(): Array[Transform] =
-    lt.metadata.defaultSpec.fields
+    meta.defaultSpec.fields
       .map(f => GraftCatalog.toTransform(f.source, f.transform)).toArray
 
-  override def properties(): util.Map[String, String] = lt.properties.asJava
+  override def properties(): util.Map[String, String] = meta.props.asJava
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,

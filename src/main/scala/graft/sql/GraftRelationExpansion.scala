@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualTo, EvalMode, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NamedExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, HyperLogLogPlusPlus, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, OneRowRelation, Project, SubqueryAlias, V2WriteCommand}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -267,8 +267,8 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
   private def splitRestriction(cond: Expression, g: GraftSqlTable)
       : Option[(Seq[(String, Set[String])], Option[(Long, Long)])] = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val meta = g.lt.metadata
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(meta.schemaDdl)
+    val meta = g.meta
+    val schema = g.schema
     val idFields = meta.specList.flatMap(_.fields).distinct.filter(_.transform == "identity")
     val keyCol = meta.statsSource
       .filterNot(meta.aliasMap.contains)
@@ -375,10 +375,11 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     * boundary-straddling files are scanned with the exact predicate.
     * At day-partitioned 100 TB that is two boundary days of I/O
     * instead of the whole range. Composes with an identity restriction
-    * (`WHERE sym='A' AND ts >= …`). Emits a pure-metadata one-row plan
-    * when no boundary file exists; declines (normal pruned scan) when
-    * nothing is interior — the hybrid would then be the same scan with
-    * extra plan machinery. count(*) only: an extreme or a non-key
+    * (`WHERE sym='A' AND ts >= …`). Emits a pure-metadata one-row
+    * local relation ([[localAnswer]], no Spark job) when no boundary
+    * file exists; declines (normal pruned scan) when nothing is
+    * interior — the hybrid would then be the same scan with extra plan
+    * machinery. count(*) only: an extreme or a non-key
     * count inside a range needs row-level information metadata cannot
     * subset.
     */
@@ -601,14 +602,14 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
       val rewritten = agg.aggregateExpressions.map(_.transformUp {
         case ae: AggregateExpression => interiorAnswer(ae)
       }.asInstanceOf[NamedExpression])
-      return Some(Project(rewritten, OneRowRelation()))
+      return Some(localAnswer(rewritten))
     }
     if (!anyInterior)
       return None // nothing interior: the hybrid degenerates to the plain scan
     // the subset scan under the relation's attribute ids, so the
     // ORIGINAL condition (and nothing else) applies verbatim on top
     val reProj = reAliased(r,
-      g.lt.readFilesSubset(boundary.toSeq).queryExecution.analyzed).getOrElse(return None)
+      g.lt.readFilesSubset(boundary.toSeq, meta).queryExecution.analyzed).getOrElse(return None)
     val keyAttr = r.output.find(_.name == keyCol).getOrElse(return None)
     val baseAliases: Map[RShape, Alias] = shapes.iterator.collect {
       case RCount => (RCount: RShape) ->
@@ -767,10 +768,12 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
   /** `SELECT count(*) / min / max / count(c) / sum / avg / approx_count_distinct
     * FROM t [VERSION AS OF v] [WHERE <pure identity restriction>]`
     * answered from manifest stats alone (the Iceberg metadata-aggregate
-    * analog) by [[MetadataAggCore.answer]]. Every aggregate must be
-    * provable or the whole plan is left for the normal scan expansion
-    * — correctness never depends on this rewrite, it only removes the
-    * scan when the roll-ups already hold the answer. Disabled by
+    * analog) by [[MetadataAggCore.answer]], planned as a one-row local
+    * relation that collects on the driver with no Spark job
+    * ([[localAnswer]]). Every aggregate must be provable or the whole
+    * plan is left for the normal scan expansion — correctness never
+    * depends on this rewrite, it only removes the scan when the
+    * roll-ups already hold the answer. Disabled by
     * setting `spark.graft.sql.metadata-aggregates=false`.
     */
   private def metadataAggregate(
@@ -778,8 +781,17 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
       restrict: Seq[(String, Set[String])] = Nil): Option[LogicalPlan] = {
     val aggs = asksOf(agg).getOrElse(return None)
     val lits = new MetadataAggCore(g).answer(aggs.map(_._2), restrict).getOrElse(return None)
-    Some(Project(replaceAggs(agg, aggs.map(_._1))(lits), OneRowRelation()))
+    Some(localAnswer(replaceAggs(agg, aggs.map(_._1))(lits)))
   }
+
+  /** A served ungrouped answer: its literal output list over one empty
+    * row of a [[LocalRelation]]. Spark's `ConvertToLocalRelation` folds
+    * the Project away, so the query collects a bare `LocalTableScan`
+    * on the driver and runs no Spark job (over `OneRowRelation` the
+    * same Project would run a one-task job).
+    */
+  private def localAnswer(answers: Seq[NamedExpression]): LogicalPlan =
+    Project(answers, LocalRelation(Nil, Seq(InternalRow.empty)))
 
   /** `SELECT k…, <aggregates> FROM t GROUP BY k…` where every `k` is an
     * IDENTITY partition column OR a supported time derivation of the
@@ -942,8 +954,7 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
         case x if agg.groupingExpressions.exists(_.semanticEquals(x)) =>
           outs(agg.groupingExpressions.indexWhere(_.semanticEquals(x)))
       }.asInstanceOf[NamedExpression]
-    val interiorRel = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-      dimOuts ++ synth, data)
+    val interiorRel = LocalRelation(dimOuts ++ synth, data)
     if (boundaryFiles.isEmpty) {
       val rewritten = replaceAggs(agg, aggFns) { i =>
         rangeNdvP(i).fold[Expression](synth(i))(ndvFinish(synth(i), _))
@@ -972,7 +983,8 @@ case class GraftRelationExpansion(session: SparkSession) extends Rule[LogicalPla
     // the subset scan under the relation's attribute ids, so the
     // ORIGINAL condition and grouping expressions apply verbatim
     val reProj = reAliased(rel,
-      g.lt.readFilesSubset(boundaryFiles.toSeq).queryExecution.analyzed).getOrElse(return None)
+      g.lt.readFilesSubset(boundaryFiles.toSeq, core.meta).queryExecution.analyzed)
+        .getOrElse(return None)
     def relAttr(name: String): Option[AttributeReference] =
       rel.output.collectFirst {
         case a: AttributeReference if a.name == name => a
@@ -1263,6 +1275,6 @@ private[sql] object GraftNativeRead {
     */
   def nativeDF(g: GraftSqlTable, filter: Option[Expression]): DataFrame =
     g.lt.readPlanned(
-      filter.fold(graft.lake.FilePruning.All)(graft.lake.FilePruning.of(g.lt.metadata, _)),
-      g.pinnedSnapshot)
+      filter.fold(graft.lake.FilePruning.All)(graft.lake.FilePruning.of(g.meta, _)),
+      g.pinnedSnapshot, g.meta)
 }

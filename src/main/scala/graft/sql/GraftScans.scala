@@ -149,7 +149,7 @@ final class GraftScanBuilder(table: GraftReadableTable)
 
   /** The precomputed metadata answer, or None ⇔ not provable. Runs at
     * PLANNING time: ungrouped it costs one manifest-LIST read, grouped
-    * one cached manifest parse — no Spark job runs at all. The scan's
+    * one cached manifest parse — no data file is read. The scan's
     * row layout is Spark's complete-pushdown contract: grouping
     * columns FIRST (in pushed order), then one column per aggregate.
     */
@@ -194,8 +194,10 @@ final class GraftScanBuilder(table: GraftReadableTable)
 }
 
 /** The pushed-aggregate answer as a driver-local scan: Spark plans it
-  * as a LocalTableScan — no file, no task, no shuffle. Statistics are
-  * the literal truth: the rows are already materialized.
+  * as a LocalTableScan — no file, no shuffle. Spark keeps an alias
+  * Project above it, so collecting the answer still runs one Spark
+  * job (the SQL rule's local-relation answer runs none). Statistics
+  * are the literal truth: the rows are already materialized.
   */
 final class GraftMetadataAggScan(
     schema: StructType, rowData: Array[InternalRow]) extends LocalScan
@@ -279,7 +281,7 @@ final class GraftV1FallbackScan(
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     table match {
       case g: GraftSqlTable =>
-        val meta = g.lt.metadata
+        val meta = g.meta
         val snapOpt = g.pinnedSnapshot match {
           case Some(id) => meta.snapshotById(id)
           case None => meta.currentSnapshot

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, DoubleType, 
 private[sql] final class MetadataAggCore(g: GraftSqlTable) {
   import MetadataAggCore._
 
-  val meta: TableMetadata = g.lt.metadata
-  val schema: StructType = StructType.fromDDL(meta.schemaDdl)
+  val meta: TableMetadata = g.meta
+  val schema: StructType = g.schema
 
   /** An IDENTITY partition column as a grouping dim — None for a
     * renamed, unknown or non-identity column or an undecodable type.
@@ -63,7 +63,7 @@ private[sql] final class MetadataAggCore(g: GraftSqlTable) {
       restrict: Seq[(String, Set[String])] = Nil,
       keyRangeUs: Option[(Long, Long)] = None): Option[Seq[DataFile]] = {
     val fs = g.lt.metadataFileEntries(g.pinnedSnapshot, dirRestrict = restrict,
-      keyRangeUs = keyRangeUs).getOrElse(return None)
+      keyRangeUs = keyRangeUs, meta = meta).getOrElse(return None)
     Some(fs.filter(f => restrict.forall { case (field, vals) =>
       vals.contains(f.partitionSegments.getOrElse(field, return None))
     }))
@@ -75,7 +75,7 @@ private[sql] final class MetadataAggCore(g: GraftSqlTable) {
     */
   def answer(asks: Seq[Ask], restrict: Seq[(String, Set[String])] = Nil): Option[Seq[Literal]] = {
     val info =
-      if (restrict.isEmpty) g.lt.metadataAggInfo(g.pinnedSnapshot)
+      if (restrict.isEmpty) g.lt.metadataAggInfo(g.pinnedSnapshot, meta)
       else entries(restrict).map(MetadataAggInfo.ofFiles)
     val facts = new MetadataAggFacts(info.getOrElse(return None), meta)
     lazy val distinctEntries = entries(restrict)

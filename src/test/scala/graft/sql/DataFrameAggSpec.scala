@@ -179,9 +179,10 @@ class DataFrameAggSpec extends SparkSpec {
     import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Sum => CSum}
     val (cat, wh) = freshCatalog()
     val t = mkTable(cat, wh, "t8")
-    val sqlTable = GraftSqlTable(t, pinnedSnapshot = None)
+    // a fresh relation per push, as the catalog loads one per query: a
+    // relation answers from the metadata version it first read
     def push(a: Aggregation): Boolean =
-      new GraftScanBuilder(sqlTable).supportCompletePushDown(a)
+      new GraftScanBuilder(GraftSqlTable(t, pinnedSnapshot = None)).supportCompletePushDown(a)
     // uid is NOT an identity partition column — grouping on it bails
     assert(!push(new Aggregation(Array(new CountStar()), Array(E.column("uid")))))
     // grouping on the identity col IS provable
@@ -328,8 +329,9 @@ class DataFrameAggSpec extends SparkSpec {
     import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
     val (cat, wh) = freshCatalog()
     val t = mkTable(cat, wh, "t5")
-    val sqlTable = GraftSqlTable(t, pinnedSnapshot = None)
-    def builder() = new GraftScanBuilder(sqlTable)
+    // a fresh relation per builder, as the catalog loads one per query:
+    // a relation answers from the metadata version it first read
+    def builder() = new GraftScanBuilder(GraftSqlTable(t, pinnedSnapshot = None))
     // provable: count(*), count(uid), min(ts), max(uid)
     val ok = new Aggregation(Array(
       new CountStar(),

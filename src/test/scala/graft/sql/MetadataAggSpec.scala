@@ -3,12 +3,16 @@ package graft.sql
 import graft.SparkSpec
 import graft.lake.LakehouseTable
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Metadata-only aggregate pushdown (round 15 — Iceberg's
   * metadata-count analog): an unfiltered `count(*) / count(col) /
@@ -1370,5 +1374,105 @@ class MetadataAggSpec extends SparkSpec {
       assert(e.getMessage.contains("spark.graft.sql.expansion-enabled") &&
         e.getMessage.contains("'yes'"), e.getMessage)
     }
+  }
+
+  /** The Spark jobs `body` starts. A marker job before and after it
+    * brackets the window: the listener bus delivers job starts in
+    * submission order, so once the closing marker's start is seen,
+    * every job `body` started has been counted.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val markerKey = "graft.test.jobs-marker"
+    val started = new AtomicInteger
+    val opened = new CountDownLatch(1)
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(markerKey))) match {
+          case Some("open") => opened.countDown()
+          case Some("close") => closed.countDown()
+          case _ => if (opened.getCount == 0 && closed.getCount == 1) started.incrementAndGet()
+        }
+    }
+    def marker(name: String, latch: CountDownLatch): Unit = {
+      spark.sparkContext.setLocalProperty(markerKey, name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(markerKey, null)
+      assert(latch.await(30, TimeUnit.SECONDS), s"the $name marker job was never seen")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("open", opened)
+      val out = body
+      marker("close", closed)
+      (out, started.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("served answers collect a bare LocalTableScan and launch no Spark job") {
+    val (cat, wh) = freshCatalog()
+    val t = mkTable(cat, wh, "z1")
+    val vPre = t.metadata.currentSnapshotId.get
+    spark.sql(s"DELETE FROM $cat.gold.z1 WHERE uid >= 150")
+    mkIdTable(cat, wh, "z2")
+    mkDayTable(cat, wh, "z3")
+    val cases = Seq(
+      "plain" -> s"SELECT count(*) AS n, min(ts) AS mn, max(uid) AS mx FROM $cat.gold.z1",
+      "VERSION AS OF" ->
+        s"SELECT count(*) AS n, max(uid) AS mx FROM $cat.gold.z1 VERSION AS OF $vPre",
+      "identity WHERE" ->
+        s"SELECT count(*) AS n, max(uid) AS mx FROM $cat.gold.z2 WHERE sym = 'a:b'",
+      // every overlapping file is bounds-interior: the range count's
+      // pure-metadata answer
+      "interior range count" ->
+        s"""SELECT count(*) AS n FROM $cat.gold.z3
+           |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
+           |  AND ts < TIMESTAMP '2024-02-01 00:00:00'""".stripMargin,
+      "GROUP BY sym" -> s"SELECT sym, count(*) AS n FROM $cat.gold.z2 GROUP BY sym")
+    cases.foreach { case (what, sql) =>
+      val q = spark.sql(sql)
+      val (rows, jobs) = jobsDuring(q.collect().toSeq)
+      assert(q.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        s"$what: expected a bare LocalTableScan, got\n${q.queryExecution.executedPlan}")
+      assert(jobs == 0, s"$what: the served answer started $jobs Spark job(s)")
+      val scanned = withSqlConf("spark.graft.sql.metadata-aggregates" -> "false") {
+        val plain = spark.sql(sql)
+        assert(filesScanned(plain) > 0, s"$what: the switched-off plan must scan")
+        plain.collect().toSeq
+      }
+      assert(rows.map(_.toString).sorted == scanned.map(_.toString).sorted,
+        s"$what: served $rows, scanned $scanned")
+    }
+  }
+
+  test("a loaded relation answers from the one metadata version it read") {
+    val (cat, wh) = freshCatalog()
+    mkTable(cat, wh, "pin1")
+    val catalog = spark.sessionState.catalogManager.catalog(cat).asInstanceOf[GraftCatalog]
+    def load(): GraftSqlTable =
+      catalog.loadTable(Identifier.of(Array("gold"), "pin1")).asInstanceOf[GraftSqlTable]
+    def countStar(g: GraftSqlTable): Any =
+      new MetadataAggCore(g).answer(Seq(MetadataAggCore.Ask.CountStar)).get.head.value
+    val g = load()
+    val name0 = g.name()
+    val schema0 = g.schema
+    val parts0 = g.partitioning().map(_.toString).toSeq
+    // a second handle commits rows, a column, a spec and a property
+    val other = LakehouseTable.load(spark, new Path(wh, "gold/pin1"))
+    other.append(Seq((ts(60), 160L, "u060", Some(160L), 6.0))
+      .toDF("ts", "uid", "s", "opt", "d"))
+    other.addColumn("extra", org.apache.spark.sql.types.LongType)
+    other.evolvePartitionSpec(Seq("ts" -> "day"))
+    other.setProperty("pin.probe", "1")
+    assert(g.name() == name0)
+    assert(g.schema == schema0 && !g.schema.fieldNames.contains("extra"))
+    assert(g.partitioning().map(_.toString).toSeq == parts0)
+    assert(!g.properties().containsKey("pin.probe"))
+    assert(countStar(g) == 60L)
+    val fresh = load()
+    assert(fresh.schema.fieldNames.contains("extra"))
+    assert(fresh.partitioning().map(_.toString).toSeq != parts0)
+    assert(fresh.properties().containsKey("pin.probe"))
+    assert(countStar(fresh) == 61L)
   }
 }
