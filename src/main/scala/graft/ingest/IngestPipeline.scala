@@ -1,8 +1,14 @@
 package graft.ingest
 
 import graft.lake.{LakehouseCatalog, LakehouseTable}
+import graft.util.ParquetListing
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, input_file_name}
 import org.apache.spark.storage.StorageLevel
 
@@ -12,14 +18,15 @@ import java.time.{Instant, ZoneOffset}
 /** The reference's `run_pipeline`
   * (`/root/reference/lakehouse_pipeline.py:289-424`) re-expressed
   * Spark-first: per symbol-folder, discover parquet files, checksum-skip
-  * unchanged ones, then per file scan → normalize → quality-check →
+  * unchanged ones, then per file quality-check → scan → normalize →
   * dedup-against-table → snapshot append, followed by snapshot expiry per
   * table and a run audit entry.
   *
-  * Cluster boundaries: the scan/normalize/QC/dedup/append steps are Spark
-  * jobs (executor-parallel); catalog, ledger, and audit are tiny
-  * driver-side JSON state, exactly mirroring the reference's split
-  * (SURVEY.md §3).
+  * Cluster boundaries: the scan/normalize/dedup/append steps are Spark
+  * jobs (executor-parallel); QC reads the file's parquet footer on the
+  * driver and falls back to a Spark job when a footer stat is not exact;
+  * catalog, ledger, and audit are tiny driver-side JSON state, mirroring
+  * the reference's split (SURVEY.md §3).
   */
 final case class IngestConfig(
     warehouseDir: String,
@@ -66,7 +73,20 @@ final case class IngestConfig(
       *    pay a broadcast anti-join until maintenance folds the masks.
       */
     duplicateKeyPolicy: String = "drop"
-)
+) {
+  // bad values fail here, naming the field, instead of silently acting
+  // as a default (an unknown policy used to behave as "drop")
+  private def policies = Seq("drop", "upsert", "mor-upsert")
+  require(policies.contains(duplicateKeyPolicy),
+    s"IngestConfig.duplicateKeyPolicy must be one of ${policies.mkString(", ")}, " +
+      s"got '$duplicateKeyPolicy'")
+  require(symbolParallelism >= 1,
+    s"IngestConfig.symbolParallelism must be at least 1, got $symbolParallelism")
+  require(maxNullFraction >= 0.0 && maxNullFraction <= 1.0,
+    s"IngestConfig.maxNullFraction must be in [0, 1], got $maxNullFraction")
+  require(minRows >= 0L, s"IngestConfig.minRows must not be negative, got $minRows")
+  require(retentionDays >= 0, s"IngestConfig.retentionDays must not be negative, got $retentionDays")
+}
 
 final case class FileIngestResult(
     file: String,
@@ -90,6 +110,8 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
     * metadata commit protocol trivially correct).
     */
   private val pipelineLock = new Object
+  private val qcCfg = QcConfig(
+    cfg.requiredColumns, cfg.timeColumn, cfg.positiveColumns, cfg.minRows, cfg.maxNullFraction)
 
   catalog.createNamespaceIfNotExists(cfg.namespace)
 
@@ -135,15 +157,8 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
     summary
   }
 
-  private def listParquet(dir: Path): Seq[Path] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) out += st.getPath
-    }
-    out.sortBy(_.toString).toSeq
-  }
+  private def listParquet(dir: Path): Seq[Path] =
+    ParquetListing.under(fs, dir).sortBy(_.toString)
 
   /** Ingest a set of files into one symbol's table, then expire old
     * snapshots for that table (reference `:328-405`). File-at-a-time or
@@ -177,10 +192,16 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       qualityIssues = results.flatMap(_.issues))
   }
 
-  /** Per-file flow (reference `:352-399`): checksum-skip → scan →
-    * normalize → QC (fail ⇒ reject all rows) → table create-if-missing
+  /** Per-file flow (reference `:352-399`): checksum-skip → QC (fail ⇒
+    * reject all rows) → scan → normalize → table create-if-missing
     * (schema frozen from this first batch) → dedup anti-join → append
     * only when new rows exist.
+    *
+    * Footer first: the file's parquet footer, opened once, decides QC
+    * ([[QualityChecks.fromFooter]]) and gives the read schema and the
+    * dedup key range ([[Dedup.footerKeyBounds]]). A rejected file is
+    * then never scanned, and a passing one is read by the write alone.
+    * Where a statistic is not exact, QC scans the normalized frame.
     */
   def ingestFile(symbol: String, file: Path): FileIngestResult = {
     val sum = ledger.checksum(file)
@@ -188,20 +209,30 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       return FileIngestResult(file.toString, 0, 0, skipped = true, Nil)
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(file.toString)
-    // cache the normalized batch once: QC, dedup, and the append all
-    // re-read it — without this the file is scanned 3-4 times per ingest
-    val df = Normalize(raw, cfg.timeColumn).persist(StorageLevel.MEMORY_AND_DISK)
+    val footer = readFooter(file, spark.sessionState.newHadoopConf())
+    val footerQc = QualityChecks.fromFooter(footer, qcCfg)
+    if (footerQc.exists(!_.passed)) return rejected(file, footerQc.get)
+
+    // the footer's schema is the one inference reads, without its job
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    val df = Normalize(spark.read.schema(schema).parquet(file.toString), cfg.timeColumn)
+    val keyBounds = Dedup.footerKeyBounds(footer, cfg.timeColumn)
+    // cache the batch only when more than one job reads it: the QC scan
+    // and the write; or, once QC passed and the table is known, the
+    // dedup key-range agg, the table's key-bloom probe or the count
+    // before an upsert, each ahead of the write
+    def cache(): Unit = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if (footerQc.isEmpty) cache()
     try {
-      val qc = QualityChecks.run(df, QcConfig(
-        cfg.requiredColumns, cfg.timeColumn, cfg.positiveColumns,
-        cfg.minRows, cfg.maxNullFraction))
-      if (!qc.passed)
-        return FileIngestResult(file.toString, 0, math.max(qc.nRows, 0), skipped = false, qc.issues)
+      val qc = footerQc.getOrElse(QualityChecks.run(df, qcCfg))
+      if (!qc.passed) return rejected(file, qc)
 
       val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
       val table = catalog.createTableIfNotExists(
         tableId, df.schema, Some(cfg.timeColumn), cfg.partitionGranularity)
+      if (footerQc.isDefined && (keyBounds.isEmpty || cfg.duplicateKeyPolicy != "drop" ||
+          table.properties.contains("write.key-bloom.bits"))) cache()
 
       // reject null-time-key rows (within QC's 5% tolerance they pass QC):
       // an equi-anti-join can never dedup them (null != null), so each
@@ -210,9 +241,6 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       val keyed =
         if (qc.nullTimeKey > 0) df.filter(col(cfg.timeColumn).isNotNull)
         else df
-      val issues =
-        if (qc.nullTimeKey > 0) Seq(s"Rejected ${qc.nullTimeKey} rows with null ${cfg.timeColumn}")
-        else Nil
 
       // within-batch dedup FIRST: the reference skips this (its tick
       // files have unique timestamps by construction), but appending a
@@ -222,20 +250,34 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       // the staged write IS the emptiness check — no pre-append count()
       // materialization of the anti-join, and an all-duplicate re-ingest
       // commits no snapshot (reference `:388-392`)
-      val nNew = writeBatch(table, keyed)
+      val nNew = writeBatch(table, keyed, keyBounds)
       ledger.record(file, sum)
-      FileIngestResult(file.toString, nNew, qc.nullTimeKey, skipped = false, issues)
+      FileIngestResult(file.toString, nNew, qc.nullTimeKey, skipped = false, nullKeyIssues(qc))
     } finally df.unpersist()
   }
+
+  private def readFooter(f: Path, hconf: Configuration): ParquetMetadata = {
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
+    try in.getFooter finally in.close()
+  }
+
+  private def rejected(file: Path, qc: QcResult): FileIngestResult =
+    FileIngestResult(file.toString, 0, math.max(qc.nRows, 0), skipped = false, qc.issues)
+
+  private def nullKeyIssues(qc: QcResult): Seq[String] =
+    if (qc.nullTimeKey > 0) Seq(s"Rejected ${qc.nullTimeKey} rows with null ${cfg.timeColumn}")
+    else Nil
 
   /** Land a normalized, null-key-free batch per duplicateKeyPolicy:
     * "drop" anti-joins table history and appends only new keys;
     * "upsert" merges (existing keys replaced file-surgically). Returns
     * the batch's own contribution — inserts plus updates under upsert,
     * fresh keys under drop (0 = nothing committed); rewritten survivor
-    * rows are not counted.
+    * rows are not counted. `keyBounds` covers the batch's keys when
+    * known (see [[Dedup.dropExisting]]).
     */
-  private def writeBatch(table: LakehouseTable, keyed: DataFrame): Long = {
+  private def writeBatch(
+      table: LakehouseTable, keyed: DataFrame, keyBounds: Option[(Long, Long)]): Long = {
     val deduped = Dedup.withinBatch(keyed, Seq(cfg.timeColumn))
     cfg.duplicateKeyPolicy match {
       case "upsert" | "mor-upsert" =>
@@ -251,20 +293,21 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
         }
         n
       case _ =>
-        val fresh = Dedup.dropExisting(deduped, table, cfg.timeColumn)
+        val fresh = Dedup.dropExisting(deduped, table, cfg.timeColumn, keyBounds)
         table.appendIfNonEmpty(fresh).map(_.addedRows).getOrElse(0L)
     }
   }
 
   /** The batched scale path (cfg.batchedIngest): checksum-skip on the
     * driver as usual, then ingest ALL fresh files of the symbol through
-    * one union scan — per-file QC via a single grouped aggregation on
-    * `input_file_name()`, one within-batch dedup, one anti-join/merge,
-    * ONE snapshot commit — so driver work per symbol is a constant
-    * number of Spark jobs instead of ~4 jobs × |files|. Per-file
-    * appended/rejected counts are recovered from the same
-    * `input_file_name()` column, preserving the reference's audit
-    * granularity (`lakehouse_pipeline.py:352-399`).
+    * one union scan — one within-batch dedup, one anti-join/merge, ONE
+    * snapshot commit — so driver work per symbol is a constant number
+    * of Spark jobs instead of ~4 jobs × |files|. Per-file QC comes from
+    * each file's footer when every footer is exact, and failing files
+    * stay out of the scan; otherwise a single grouped aggregation on
+    * `input_file_name()` decides it. Per-file appended/rejected counts
+    * are recovered from the same `input_file_name()` column, preserving
+    * the reference's audit granularity (`lakehouse_pipeline.py:352-399`).
     */
   private def ingestFilesBatched(symbol: String, files: Seq[Path]): Seq[FileIngestResult] = {
     // bounded-parallel: MD5 is a full-file read per entry; serially this
@@ -275,52 +318,96 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       FileIngestResult(f.toString, 0, 0, skipped = true, Nil) }
     if (fresh.isEmpty) return skippedResults
 
+    // each file's OWN footer (footer-only read, no data pages), opened
+    // bounded-parallel for the same reason as the checksums above.
     // Q2 is schema-level, and a union scan resolves ONE merged schema: a
     // file individually missing a required column would be silently
     // null-filled under it — passing batched QC where the per-file loop
-    // rejects the file (ADVICE r4). Check each file's OWN parquet footer
-    // (footer-only read, no data pages) and exclude offenders from the
-    // union so both modes reject identically.
+    // rejects the file (ADVICE r4). So offenders stay out of the union
+    // and both modes reject identically.
     val hconf = spark.sessionState.newHadoopConf()
-    def footerColumns(f: Path): Set[String] = {
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf))
-      try {
-        import scala.jdk.CollectionConverters._
-        in.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-      } finally in.close()
+    val footers =
+      graft.util.BoundedPar.map(fresh) { case (f, _) => f -> readFooter(f, hconf) }.toMap
+    def columns(f: Path): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      footers(f).getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
     }
-    // footer-only opens, bounded-parallel for the same reason as the
-    // checksums above (no data pages are read either way)
-    val colsByFile =
-      graft.util.BoundedPar.map(fresh) { case (f, _) => f -> footerColumns(f) }.toMap
     val (schemaOk, schemaBad) = fresh.partition { case (f, _) =>
-      cfg.requiredColumns.forall(colsByFile(f).contains) }
+      cfg.requiredColumns.forall(columns(f).contains) }
     val badResults = schemaBad.map { case (f, _) =>
-      val missing = cfg.requiredColumns.filterNot(colsByFile(f).contains)
+      val missing = cfg.requiredColumns.filterNot(columns(f).contains)
       FileIngestResult(f.toString, 0, 0, skipped = false,
         Seq(s"Missing required columns: ${missing.mkString(", ")}")) }
     if (schemaOk.isEmpty) return skippedResults ++ badResults
 
+    // QC from the footers when every one is exact: the failing files
+    // then stay out of the scan, and the key range is the union of the
+    // passing files' ranges. Otherwise the grouped scan decides QC.
+    val footerQc: Option[Map[Path, QcResult]] = {
+      val qcs = schemaOk.map { case (f, _) => QualityChecks.fromFooter(footers(f), qcCfg).map(f -> _) }
+      Option.when(qcs.forall(_.isDefined))(qcs.flatten.toMap)
+    }
+    val scanned = footerQc.fold(schemaOk)(qcs => schemaOk.filter(p => qcs(p._1).passed))
+    val keyBounds = footerQc.flatMap { _ =>
+      val bs = scanned.map { case (f, _) => Dedup.footerKeyBounds(footers(f), cfg.timeColumn) }
+      Option.when(bs.nonEmpty && bs.forall(_.isDefined))(
+        (bs.flatten.map(_._1).min, bs.flatten.map(_._2).max))
+    }
+    val (qcByFile, appendedByPath) =
+      if (scanned.isEmpty) (footerQc.get, Map.empty[String, Long])
+      else scanAndWrite(symbol, scanned.map(_._1), columns, footerQc, keyBounds)
+
+    skippedResults ++ badResults ++ schemaOk.map { case (f, sum) =>
+      qcByFile.get(f) match {
+        case Some(qc) if qc.passed =>
+          ledger.record(f, sum)
+          FileIngestResult(f.toString, appendedByPath.getOrElse(pathKey(f), 0L),
+            qc.nullTimeKey, skipped = false, nullKeyIssues(qc))
+        case Some(qc) => rejected(f, qc)
+        case None => // zero-row parquet: no input_file_name group emitted
+          FileIngestResult(f.toString, 0, 0, skipped = false,
+            Seq(s"Insufficient rows: 0 < ${cfg.minRows}"))
+      }
+    }
+  }
+
+  /** A file's key in the per-file counts of [[scanAndWrite]]. */
+  private def pathKey(f: Path): String = fs.makeQualified(f).toUri.getPath
+
+  /** The union scan of [[ingestFilesBatched]]: QC by the grouped pass
+    * unless `footerQc` already decided it (then every file passed), one
+    * within-batch dedup, one anti-join/merge and one commit. The grouped
+    * pass checks each file's nulls over its own footer `columns`, as the
+    * footer and the per-file flow do. Returns each scanned file's QC (a
+    * zero-row file has none) and the rows each contributed, keyed by
+    * [[pathKey]].
+    */
+  private def scanAndWrite(
+      symbol: String,
+      files: Seq[Path],
+      columns: Path => Seq[String],
+      footerQc: Option[Map[Path, QcResult]],
+      keyBounds: Option[(Long, Long)]): (Map[Path, QcResult], Map[String, Long]) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(schemaOk.map(_._1.toString): _*)
+    val raw = spark.read.parquet(files.map(_.toString): _*)
       .withColumn("__src", input_file_name())
     val df = Normalize(raw, cfg.timeColumn).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val qcBySrc = QualityChecks.runPerFile(df, "__src", QcConfig(
-        cfg.requiredColumns, cfg.timeColumn, cfg.positiveColumns,
-        cfg.minRows, cfg.maxNullFraction))
       // input_file_name() yields URIs; match them back to ledger paths
       def norm(s: String): String = new Path(new java.net.URI(s)).toUri.getPath
-      val qcByPath = qcBySrc.map { case (src, qc) => norm(src) -> (src, qc) }
-      def qcOf(f: Path): Option[(String, QcResult)] =
-        qcByPath.get(fs.makeQualified(f).toUri.getPath)
-
-      val passSrcs = schemaOk.flatMap(p => qcOf(p._1)).collect { case (src, qc) if qc.passed => src }
+      val (qcByFile, passing) = footerQc match {
+        case Some(qcs) => (qcs, df)
+        case None =>
+          val colsByKey = files.map(f => pathKey(f) -> columns(f)).toMap
+          val qcBySrc = QualityChecks.runPerFile(df, "__src", qcCfg, src => colsByKey.get(norm(src)))
+          val srcByPath = qcBySrc.keys.map(src => norm(src) -> src).toMap
+          val qcs = files.flatMap(f => srcByPath.get(pathKey(f)).map(src => f -> qcBySrc(src))).toMap
+          val passSrcs = qcBySrc.collect { case (src, qc) if qc.passed => src }.toSeq
+          (qcs, df.filter(col("__src").isin(passSrcs: _*)))
+      }
       val appendedByPath: Map[String, Long] =
-        if (passSrcs.isEmpty) Map.empty
+        if (!qcByFile.values.exists(_.passed)) Map.empty
         else {
-          val passing = df.filter(col("__src").isin(passSrcs: _*))
           // same null-time-key rejection as ingestFile (see comment there)
           val keyed = passing.filter(col(cfg.timeColumn).isNotNull)
           val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
@@ -330,7 +417,7 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
           val deduped = Dedup.withinBatch(keyed, Seq(cfg.timeColumn))
           val toWrite = cfg.duplicateKeyPolicy match {
             case "upsert" | "mor-upsert" => deduped
-            case _ => Dedup.dropExisting(deduped, table, cfg.timeColumn)
+            case _ => Dedup.dropExisting(deduped, table, cfg.timeColumn, keyBounds)
           }
           // one cheap grouped count (inputs cached) recovers the
           // per-file contribution the sequential loop reported
@@ -346,25 +433,7 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
           }
           counts
         }
-
-      skippedResults ++ badResults ++ schemaOk.map { case (f, sum) =>
-        qcOf(f) match {
-          case Some((_, qc)) if qc.passed =>
-            ledger.record(f, sum)
-            val issues =
-              if (qc.nullTimeKey > 0)
-                Seq(s"Rejected ${qc.nullTimeKey} rows with null ${cfg.timeColumn}")
-              else Nil
-            FileIngestResult(f.toString,
-              appendedByPath.getOrElse(fs.makeQualified(f).toUri.getPath, 0L),
-              qc.nullTimeKey, skipped = false, issues)
-          case Some((_, qc)) =>
-            FileIngestResult(f.toString, 0, math.max(qc.nRows, 0), skipped = false, qc.issues)
-          case None => // zero-row parquet: no input_file_name group emitted
-            FileIngestResult(f.toString, 0, 0, skipped = false,
-              Seq(s"Insufficient rows: 0 < ${cfg.minRows}"))
-        }
-      }
+      (qcByFile, appendedByPath)
     } finally df.unpersist()
   }
 
@@ -376,9 +445,7 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
   def ingestBatch(symbol: String, batch: DataFrame): FileIngestResult = pipelineLock.synchronized {
     val df = Normalize(batch, cfg.timeColumn).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val qc = QualityChecks.run(df, QcConfig(
-        cfg.requiredColumns, cfg.timeColumn, cfg.positiveColumns,
-        cfg.minRows, cfg.maxNullFraction))
+      val qc = QualityChecks.run(df, qcCfg)
       if (!qc.passed)
         return FileIngestResult(s"batch:$symbol", 0, math.max(qc.nRows, 0), skipped = false, qc.issues)
       val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
@@ -388,11 +455,8 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       val keyed =
         if (qc.nullTimeKey > 0) df.filter(col(cfg.timeColumn).isNotNull)
         else df
-      val issues =
-        if (qc.nullTimeKey > 0) Seq(s"Rejected ${qc.nullTimeKey} rows with null ${cfg.timeColumn}")
-        else Nil
-      val n = writeBatch(table, keyed)
-      FileIngestResult(s"batch:$symbol", n, qc.nullTimeKey, skipped = false, issues)
+      val n = writeBatch(table, keyed, keyBounds = None)
+      FileIngestResult(s"batch:$symbol", n, qc.nullTimeKey, skipped = false, nullKeyIssues(qc))
     } finally df.unpersist()
   }
 

@@ -1,5 +1,8 @@
 package graft.ingest
 
+import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,6 +16,10 @@ import org.apache.spark.sql.types._
   *
   * All casts are single-pass projections over the scan — codegen'd, no
   * shuffle, no UDFs.
+  *
+  * [[footerNullFree]] and [[footerMicros]] state the same mapping over a
+  * source file's parquet types, for the ingest steps that decide from
+  * its footer instead of a scan.
   */
 object Normalize {
 
@@ -40,4 +47,38 @@ object Normalize {
       case _ => widened
     }
   }
+
+  /** Whether `apply` turns a time column stored as parquet type `t`
+    * into TIMESTAMP without adding nulls: INT64 (plain epoch nanos, or
+    * TIMESTAMP in any unit), INT96 and DATE. A string is `try_cast`, which
+    * nulls what it cannot parse, so its footer null count says nothing
+    * about the parseable rows.
+    */
+  def footerNullFree(t: PrimitiveType): Boolean =
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (PrimitiveTypeName.INT64, null | _: TimestampLogicalTypeAnnotation) => true
+      case (PrimitiveTypeName.INT96, null) => true
+      case (PrimitiveTypeName.INT32, _: DateLogicalTypeAnnotation) => true
+      case _ => false
+    }
+
+  /** How `apply` maps a raw INT64 value of a time column stored as
+    * parquet type `t` (a footer min/max) to the epoch micros of the
+    * normalized column: TIMESTAMP(MICROS) as it is, TIMESTAMP(MILLIS)
+    * ×1000 (throwing on overflow), and plain INT64 or TIMESTAMP(NANOS),
+    * read as epoch-nanos longs, `div 1000`. None for every other type,
+    * including a TIMESTAMP not adjusted to UTC, which Spark reads as
+    * local time.
+    */
+  def footerMicros(t: PrimitiveType): Option[Long => Long] =
+    if (t.getPrimitiveTypeName != PrimitiveTypeName.INT64) None
+    else t.getLogicalTypeAnnotation match {
+      case null => Some(_ / 1000L)
+      case ts: TimestampLogicalTypeAnnotation if ts.isAdjustedToUTC => ts.getUnit match {
+        case TimeUnit.MICROS => Some(identity)
+        case TimeUnit.MILLIS => Some(Math.multiplyExact(_, 1000L))
+        case TimeUnit.NANOS => Some(_ / 1000L)
+      }
+      case _ => None
+    }
 }

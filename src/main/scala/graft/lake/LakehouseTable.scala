@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.util.ParquetListing
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2393,15 +2394,7 @@ final class LakehouseTable(
     val expected = StructType(StructType.fromDDL(meta0.schemaDdl)
       .fields.filterNot(f => identitySources.contains(f.name)).toSeq)
     val stagedQ = fs.makeQualified(stagedDir)
-    val staged = {
-      val b = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val it = fs.listFiles(stagedDir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      b.toSeq
-    }
+    val staged = ParquetListing.under(fs, stagedDir)
     val firstFile = staged.headOption.getOrElse(throw new IllegalArgumentException(
       s"addFiles: no parquet files under $stagedDir"))
     // identity dirs are a correctness gate (see scaladoc): the column
@@ -3454,16 +3447,8 @@ final class LakehouseTable(
     val keyCol = meta.statsSource
     val sid = if (meta.defaultSpec.fields.nonEmpty) Some(meta.defaultSpec.id) else None
     val tList = System.nanoTime()
-    val stagingQ = fs.makeQualified(staging) // listFiles returns qualified paths
-    val parts = preListed.getOrElse {
-      val b = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val it = fs.listFiles(staging, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      b.toSeq
-    }
+    val stagingQ = fs.makeQualified(staging) // listed paths are qualified
+    val parts = preListed.getOrElse(ParquetListing.under(fs, staging))
     // EXACT per-file sums for `write.sum-columns` (round 16, VERDICT
     // r15 #7): one distributed pass over the JUST-WRITTEN bytes
     // (columnar — only the declared columns' pages are read), summed
@@ -4439,15 +4424,7 @@ final class LakehouseTable(
     LakehouseTable.stagingCommitterOptions(
       positions.coalesce(1).write.mode("overwrite"))
       .parquet(staging.toString)
-    val parts = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val it = fs.listFiles(staging, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st.getPath
-      }
-      buf.toSeq
-    }
+    val parts = ParquetListing.under(fs, staging)
     fs.mkdirs(deletesDir)
     val moved = parts.zipWithIndex.flatMap { case (src, idx) =>
       val dest = new Path(deletesDir,
@@ -4534,15 +4511,7 @@ final class LakehouseTable(
     LakehouseTable.stagingCommitterOptions(
       deduped.coalesce(1).write.mode("overwrite"))
       .parquet(staging.toString)
-    val parts = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val it = fs.listFiles(staging, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st.getPath
-      }
-      buf.toSeq
-    }
+    val parts = ParquetListing.under(fs, staging)
     fs.mkdirs(deletesDir)
     val moved = parts.zipWithIndex.flatMap { case (src, i) =>
       val dest = new Path(deletesDir,
@@ -5388,15 +5357,11 @@ final class LakehouseTable(
     def sweep(dir: Path, relPrefix: String): Unit = {
       if (!fs.exists(dir)) return
       val dirQ = fs.makeQualified(dir)
-      val it = fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) {
-          val rel = relPrefix + st.getPath.toString.stripPrefix(dirQ.toString + "/")
-          if (!referenced.contains(rel)) {
-            fs.delete(st.getPath, false)
-            orphans += rel
-          }
+      ParquetListing.under(fs, dir).foreach { p =>
+        val rel = relPrefix + p.toString.stripPrefix(dirQ.toString + "/")
+        if (!referenced.contains(rel)) {
+          fs.delete(p, false)
+          orphans += rel
         }
       }
     }

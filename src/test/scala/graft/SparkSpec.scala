@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local session for specs: one JVM-wide session, small shuffle
   * partition count so tiny-fixture tests don't schedule 32 empty tasks.
@@ -22,6 +26,39 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The Spark jobs `body` starts. A marker job before and after it
+    * brackets the window: the listener bus delivers job starts in
+    * submission order, so once the closing marker's start is seen,
+    * every job `body` started has been counted.
+    */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val markerKey = "graft.test.jobs-marker"
+    val started = new AtomicInteger
+    val opened = new CountDownLatch(1)
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(markerKey))) match {
+          case Some("open") => opened.countDown()
+          case Some("close") => closed.countDown()
+          case _ => if (opened.getCount == 0 && closed.getCount == 1) started.incrementAndGet()
+        }
+    }
+    def marker(name: String, latch: CountDownLatch): Unit = {
+      spark.sparkContext.setLocalProperty(markerKey, name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(markerKey, null)
+      assert(latch.await(30, TimeUnit.SECONDS), s"the $name marker job was never seen")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("open", opened)
+      val out = body
+      marker("close", closed)
+      (out, started.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
 

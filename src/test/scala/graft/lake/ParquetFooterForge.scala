@@ -68,4 +68,22 @@ object ParquetFooterForge {
     }
     require(hit, s"no column chunk named '$col' in the footer")
   }
+
+  /** Remove column `col`'s statistics (min/max and null count) from
+    * every row group — the footer of a writer that records none.
+    */
+  def dropStats(fmd: FileMetaData, col: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    var hit = false
+    fmd.getRow_groups.asScala.foreach { rg =>
+      rg.getColumns.asScala.foreach { cc =>
+        val md = cc.getMeta_data
+        if (md != null && md.getPath_in_schema.asScala.mkString(".") == col) {
+          md.unsetStatistics()
+          hit = true
+        }
+      }
+    }
+    require(hit || fmd.getRow_groups.isEmpty, s"no column chunk named '$col' in the footer")
+  }
 }

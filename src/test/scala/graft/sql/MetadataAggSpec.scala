@@ -3,7 +3,6 @@ package graft.sql
 import graft.SparkSpec
 import graft.lake.LakehouseTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
@@ -11,8 +10,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Metadata-only aggregate pushdown (round 15 — Iceberg's
   * metadata-count analog): an unfiltered `count(*) / count(col) /
@@ -1374,39 +1371,6 @@ class MetadataAggSpec extends SparkSpec {
       assert(e.getMessage.contains("spark.graft.sql.expansion-enabled") &&
         e.getMessage.contains("'yes'"), e.getMessage)
     }
-  }
-
-  /** The Spark jobs `body` starts. A marker job before and after it
-    * brackets the window: the listener bus delivers job starts in
-    * submission order, so once the closing marker's start is seen,
-    * every job `body` started has been counted.
-    */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val markerKey = "graft.test.jobs-marker"
-    val started = new AtomicInteger
-    val opened = new CountDownLatch(1)
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(markerKey))) match {
-          case Some("open") => opened.countDown()
-          case Some("close") => closed.countDown()
-          case _ => if (opened.getCount == 0 && closed.getCount == 1) started.incrementAndGet()
-        }
-    }
-    def marker(name: String, latch: CountDownLatch): Unit = {
-      spark.sparkContext.setLocalProperty(markerKey, name)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty(markerKey, null)
-      assert(latch.await(30, TimeUnit.SECONDS), s"the $name marker job was never seen")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("open", opened)
-      val out = body
-      marker("close", closed)
-      (out, started.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("served answers collect a bare LocalTableScan and launch no Spark job") {
