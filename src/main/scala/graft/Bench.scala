@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Driver-run benchmark: times the headline (bench-flagged) queries at
   * SPARK_GRAFT_SF_DIR.
   *
@@ -20,6 +22,19 @@ import org.apache.spark.sql.SparkSession
   * metadata, not the work).
   */
 object Bench {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** A bench step that failed without ending the run. */
+  private def warn(what: String, e: Throwable): Unit = log.warn(s"[bench] $what: ${e.getMessage}")
+
+  /** Remove a fixture's temp tree; a leftover is only disk, so it warns. */
+  private def deleteTree(tmp: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverseIterator
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    } catch { case NonFatal(e) => warn(s"could not delete $tmp", e) }
+
   /** One machine-canary measurement: (1-thread ms, full-width ms) of a
     * FIXED Spark-independent workload — `passes` xxhash64 sweeps over
     * 8 MiB, min over `minOf` repetitions, run single-threaded and at
@@ -120,7 +135,7 @@ object Bench {
     catch {
       // NonFatal only: an OOM or interrupt must propagate — a bench
       // continuing in a corrupted JVM would record quiet-looking noise
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] io probe failed (gate degrades): ${e.getMessage}")
         0.0
     }
@@ -154,12 +169,12 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble)
       .filter(_._2 > 0.0).toMap
     if (mins.isEmpty || factor <= 0.0) None else Some(QuietRef(factor, mins, sf))
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case NonFatal(_) => None }
 
   private[graft] def loadQuietRef(path: String): Option[QuietRef] = try {
     parseQuietRef(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
-  } catch { case scala.util.control.NonFatal(_) => None }
+  } catch { case NonFatal(_) => None }
 
   /** Box-normalized ratio of a recorded query time vs its quiet min.
     * The correction `runFactor / quietFactor` (how much slower THIS
@@ -235,7 +250,7 @@ object Bench {
     // the timed numbers measure the queries, not classloading
     specs.foreach { q =>
       try q.run(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => warn(s"warm-up of ${q.name} failed", e) }
       sweepSessionState()
     }
     // a failed query reports null (not its near-zero abort time) and is
@@ -248,8 +263,8 @@ object Bench {
           q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          case NonFatal(e) =>
+            warn(s"${q.name} failed", e)
             None
         }
       sweepSessionState()
@@ -344,7 +359,11 @@ object Bench {
       // "no io signal" like an absent field
       (for { t <- field("hash_1t_ms_quiet"); r <- field("wide_over_1t_quiet") } yield (t, r),
         field("io_ms_quiet").filter(_ > 0.0))
-    } catch { case _: Throwable => (None, None) }
+    } catch {
+      case NonFatal(e) =>
+        warn("could not read the quiet canary band; contention gates degrade", e)
+        (None, None)
+    }
     // per-query quiet minima (round 18, VERDICT r17 #1) — the external
     // reference that catches what per-sample gates miss: samples that
     // agree with EACH OTHER under sustained in-band contention. Only
@@ -637,7 +656,11 @@ object Bench {
         java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
           (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         true
-      } catch { case _: Throwable => false }
+      } catch {
+        case NonFatal(e) =>
+          warn(s"could not write the detail record $detailPath", e)
+          false
+      }
     // detail first (full record for untruncated logs), compact headline
     // LAST — the line the driver's 2000-char tail must preserve whole
     println(detail)
@@ -649,10 +672,7 @@ object Bench {
     val headlinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEADLINE", "bench_headline.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(headlinePath),
       (headline + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case scala.util.control.NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"could not write the headline sidecar $headlinePath: ${e.getMessage}")
-    }
+    catch { case NonFatal(e) => warn(s"could not write the headline sidecar $headlinePath", e) }
     println(headline)
     spark.stop()
   }
@@ -755,17 +775,13 @@ object Bench {
       val dstCommits = graft.lake.CommitMetrics.commits(dstKey)
       // the fixture is two full lakehouse tables + a checkpoint — clean
       // up so repeated bench runs don't fill the tmp volume
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
+      deleteTree(tmp)
       Some(CdcRun(imageSec, triggers, rows, wall, execTotal,
         execTotal / math.max(1, triggers), planningSec, commitSec,
         dstCommits, converged))
     } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] cdc stream failed: ${e.getMessage}")
+      case NonFatal(e) =>
+        warn("cdc stream failed", e)
         None
     }
     def runJson(r: CdcRun): String =
@@ -828,15 +844,11 @@ object Bench {
     val probes = (0 until 3).map(_ => probeOnce())
     val (kept, skipped, _) = probes.head
     val probeMs = probes.map(_._3).min
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    deleteTree(tmp)
     f"""{"files":${candidates.size},"kept":$kept,"skipped":$skipped,"probe_ms":$probeMs%.1f,"build_sec":$buildSec%.3f}"""
   } catch {
-    case e: Throwable =>
-      System.err.println(s"[bench] key bloom skipping failed: ${e.getMessage}")
+    case NonFatal(e) =>
+      warn("key bloom skipping failed", e)
       "{}"
   }
 
@@ -1231,11 +1243,7 @@ object Bench {
         .colNdv.get("uid").flatMap(graft.lake.NdvSketch.estimate).getOrElse(0L)
       f""""ndv_manifest":{"files":$nFiles,"declared_bytes":$bytes,"parse_ms":$parseMsNdv%.1f,"list_fold_ms":$listFoldMs%.2f,"file_fold_ms":$fileFoldMs%.1f,"estimate":$est}"""
     }
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    deleteTree(tmp)
     val planCanary = quietBand match {
       case Some((q1t, _)) =>
         f""""canary_1t_ms":$plan1t%.1f,"canary_vs_quiet_1t":${plan1t / q1t}%.2f,"canary_ratio":${planWide / plan1t}%.2f,"canary_io_ratio":$planIoRatio%.2f"""
@@ -1247,8 +1255,8 @@ object Bench {
     val detail = f"""{"files":$nFiles,"manifest_bytes":$manifestBytes,"stats_columns_declared":true,"commits":$nDays,"build_sec":$buildSec%.3f,"build_copy_sec":$copySec%.3f,"build_import_sec":$importSec%.3f,$planCanary,"full_scan_cold_ms":$fullCold%.1f,"full_scan_ms":${m("full")}%.1f,"full_scan_cached_ms":${m("full_cached")}%.1f,"full_files":$fullN,"identity_ms":${m("identity")}%.1f,"identity_cached_ms":${m("identity_cached")}%.1f,"identity_files":$idN,"timerange_ms":${m("timerange")}%.1f,"timerange_files":$trN,"point_ms":${m("point")}%.1f,"point_files":$ptN,"secondary_point_ms":${m("secondary_point")}%.1f,"secondary_point_files":$secN,"secondary_manifests_parsed":$secManifests,$typed,"metadata_agg_ms":${m("metadata_agg")}%.1f,"group_agg_ms":${m("group_agg")}%.1f,"group_agg_cached_ms":${m("group_agg_cached")}%.1f,"policy_clustered":$policyClustered,"clustered_identity_ms":${mc("cl")}%.1f,"clustered_identity_cached_ms":${mc("cl_cached")}%.1f,"clustered_identity_files":$clIdN,"folded_full_scan_ms":$foldedMs%.1f,"folded_files":$foldedN,"sweeps":2,$bloomShapes,$statsShapes,$ndvShapes}"""
     (compact, detail)
   } catch {
-    case e: Throwable =>
-      System.err.println(s"[bench] planning latency failed: ${e.getMessage}")
+    case NonFatal(e) =>
+      warn("planning latency failed", e)
       ("{}", "{}")
   }
 
@@ -1284,16 +1292,12 @@ object Bench {
     }
     val seq = mode(batched = false)
     val bat = mode(batched = true)
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    deleteTree(tmp)
     val j = f"""{"sequential_sec":$seq%.3f,"batched_sec":$bat%.3f,"files":$nFiles,"rows":$rows}"""
     (j, j)
   } catch {
-    case e: Throwable =>
-      System.err.println(s"[bench] ingest throughput failed: ${e.getMessage}")
+    case NonFatal(e) =>
+      warn("ingest throughput failed", e)
       ("{}", "{}")
   }
 }

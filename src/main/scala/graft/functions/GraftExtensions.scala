@@ -19,6 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL-catalog read path: expand graft relations into the native
     // merge-on-read-aware plan (see graft.sql.GraftRelationExpansion)
     ext.injectPostHocResolutionRule(session => graft.sql.GraftRelationExpansion(session))
+    // a point lookup whose scan is one task reads on the driver, with
+    // no Spark job (see graft.sql.InlinePointRead)
+    ext.injectPreCBORule(session => graft.sql.InlinePointRead(session))
   }
 }
 

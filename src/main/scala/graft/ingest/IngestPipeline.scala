@@ -1,15 +1,14 @@
 package graft.ingest
 
 import graft.lake.{LakehouseCatalog, LakehouseTable}
-import graft.util.ParquetListing
-import org.apache.hadoop.conf.Configuration
+import graft.util.{ParquetFooters, ParquetListing}
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.functions.{col, input_file_name, lit}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import java.time.format.DateTimeFormatter
@@ -209,14 +208,20 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       return FileIngestResult(file.toString, 0, 0, skipped = true, Nil)
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val footer = readFooter(file, spark.sessionState.newHadoopConf())
+    val footer = ParquetFooters.footer(file, spark.sessionState.newHadoopConf())
+    val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
+    val existing = Option.when(catalog.tableExists(tableId))(catalog.loadTable(tableId))
+    val tableSchema = existing.map(_.schema)
+    val misfit = tableSchema.toSeq.flatMap(schemaIssues(footerColumns(footer), _))
+    if (misfit.nonEmpty) return misfitResult(file, footer, misfit)
     val footerQc = QualityChecks.fromFooter(footer, qcCfg)
     if (footerQc.exists(!_.passed)) return rejected(file, footerQc.get)
 
-    // the footer's schema is the one inference reads, without its job
-    val schema = ParquetFileFormat.readSchemaFromFooter(
-      new Footer(file, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    val df = Normalize(spark.read.schema(schema).parquet(file.toString), cfg.timeColumn)
+    // the footer's schema is the one inference reads, without its job;
+    // a table column the file lacks reads as null
+    val schema = footerSchema(file, footer)
+    val df = Normalize(nullFilled(spark.read.schema(schema).parquet(file.toString), tableSchema),
+      cfg.timeColumn)
     val keyBounds = Dedup.footerKeyBounds(footer, cfg.timeColumn)
     // cache the batch only when more than one job reads it: the QC scan
     // and the write; or, once QC passed and the table is known, the
@@ -228,9 +233,8 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       val qc = footerQc.getOrElse(QualityChecks.run(df, qcCfg))
       if (!qc.passed) return rejected(file, qc)
 
-      val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
-      val table = catalog.createTableIfNotExists(
-        tableId, df.schema, Some(cfg.timeColumn), cfg.partitionGranularity)
+      val table = existing.getOrElse(catalog.createTableIfNotExists(
+        tableId, df.schema, Some(cfg.timeColumn), cfg.partitionGranularity))
       if (footerQc.isDefined && (keyBounds.isEmpty || cfg.duplicateKeyPolicy != "drop" ||
           table.properties.contains("write.key-bloom.bits"))) cache()
 
@@ -256,13 +260,39 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
     } finally df.unpersist()
   }
 
-  private def readFooter(f: Path, hconf: Configuration): ParquetMetadata = {
-    val in = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
-    try in.getFooter finally in.close()
-  }
-
   private def rejected(file: Path, qc: QcResult): FileIngestResult =
     FileIngestResult(file.toString, 0, math.max(qc.nRows, 0), skipped = false, qc.issues)
+
+  private def footerColumns(footer: ParquetMetadata): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+  }
+
+  private def footerSchema(file: Path, footer: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+  /** Why a file's columns cannot land in a table of `table`'s schema: the
+    * columns the table lacks. A column the file lacks is null-filled
+    * instead (a table's nullability is its first file's writer's, not a
+    * declaration, and appends do not check it).
+    */
+  private def schemaIssues(fileCols: Seq[String], table: StructType): Seq[String] = {
+    val extra = fileCols.filterNot(table.fieldNames.contains)
+    if (extra.isEmpty) Nil
+    else Seq(s"Unexpected columns not in the table schema: ${extra.mkString(", ")}")
+  }
+
+  private def misfitResult(file: Path, footer: ParquetMetadata, issues: Seq[String]): FileIngestResult = {
+    import scala.jdk.CollectionConverters._
+    FileIngestResult(file.toString, 0, footer.getBlocks.asScala.map(_.getRowCount).sum,
+      skipped = false, issues)
+  }
+
+  /** `df` with a null column for each column of `table` it lacks. */
+  private def nullFilled(df: DataFrame, table: Option[StructType]): DataFrame =
+    table.fold(df)(_.fields.foldLeft(df)((d, f) =>
+      if (d.columns.contains(f.name)) d else d.withColumn(f.name, lit(null).cast(f.dataType))))
 
   private def nullKeyIssues(qc: QcResult): Seq[String] =
     if (qc.nullTimeKey > 0) Seq(s"Rejected ${qc.nullTimeKey} rows with null ${cfg.timeColumn}")
@@ -327,17 +357,25 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
     // and both modes reject identically.
     val hconf = spark.sessionState.newHadoopConf()
     val footers =
-      graft.util.BoundedPar.map(fresh) { case (f, _) => f -> readFooter(f, hconf) }.toMap
-    def columns(f: Path): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      footers(f).getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
-    }
-    val (schemaOk, schemaBad) = fresh.partition { case (f, _) =>
+      graft.util.BoundedPar.map(fresh) { case (f, _) => f -> ParquetFooters.footer(f, hconf) }.toMap
+    def columns(f: Path): Seq[String] = footerColumns(footers(f))
+    val (required, lackRequired) = fresh.partition { case (f, _) =>
       cfg.requiredColumns.forall(columns(f).contains) }
-    val badResults = schemaBad.map { case (f, _) =>
+    val lackResults = lackRequired.map { case (f, _) =>
       val missing = cfg.requiredColumns.filterNot(columns(f).contains)
       FileIngestResult(f.toString, 0, 0, skipped = false,
         Seq(s"Missing required columns: ${missing.mkString(", ")}")) }
+    if (required.isEmpty) return skippedResults ++ lackResults
+    // the union scan reads one schema: the table's, or for a new table
+    // the first file's. A file that does not fit it is rejected, as the
+    // per-file flow rejects it; a column a file lacks reads as null.
+    val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
+    val tableSchema = Option.when(catalog.tableExists(tableId))(catalog.loadTable(tableId).schema)
+    val reference = tableSchema.getOrElse(footerSchema(required.head._1, footers(required.head._1)))
+    val (schemaOk, misfits) = required.partition { case (f, _) =>
+      schemaIssues(columns(f), reference).isEmpty }
+    val badResults = lackResults ++ misfits.map { case (f, _) =>
+      misfitResult(f, footers(f), schemaIssues(columns(f), reference)) }
     if (schemaOk.isEmpty) return skippedResults ++ badResults
 
     // QC from the footers when every one is exact: the failing files
@@ -355,7 +393,14 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
     }
     val (qcByFile, appendedByPath) =
       if (scanned.isEmpty) (footerQc.get, Map.empty[String, Long])
-      else scanAndWrite(symbol, scanned.map(_._1), columns, footerQc, keyBounds)
+      else {
+        // each column read with a scanned file's own parquet type; a
+        // column no scanned file has keeps the table's
+        val fileSchemas = scanned.map { case (f, _) => footerSchema(f, footers(f)) }
+        val readSchema = StructType(reference.fields.map(r =>
+          fileSchemas.flatMap(_.find(_.name == r.name)).headOption.getOrElse(r).copy(nullable = true)))
+        scanAndWrite(symbol, scanned.map(_._1), readSchema, columns, footerQc, keyBounds)
+      }
 
     skippedResults ++ badResults ++ schemaOk.map { case (f, sum) =>
       qcByFile.get(f) match {
@@ -385,11 +430,12 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
   private def scanAndWrite(
       symbol: String,
       files: Seq[Path],
+      readSchema: StructType,
       columns: Path => Seq[String],
       footerQc: Option[Map[Path, QcResult]],
       keyBounds: Option[(Long, Long)]): (Map[Path, QcResult], Map[String, Long]) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(files.map(_.toString): _*)
+    val raw = spark.read.schema(readSchema).parquet(files.map(_.toString): _*)
       .withColumn("__src", input_file_name())
     val df = Normalize(raw, cfg.timeColumn).persist(StorageLevel.MEMORY_AND_DISK)
     try {

@@ -1,0 +1,115 @@
+package graft.sql
+
+import graft.lake.ManifestFileIndex
+import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, In, InputFileBlockLength, InputFileBlockStart, InputFileName, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.METADATA_COL_ATTR_KEY
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, TimestampNTZType, TimestampType}
+
+/** A point lookup whose scan would be one task is read on the driver.
+  *
+  * The rule swaps a relation over a [[ManifestFileIndex]] for a
+  * `LocalRelation` of the same output when all of these hold:
+  *   - the planner pinned the partition-source key to a finite set
+  *     ([[ManifestFileIndex.keyPoints]]);
+  *   - Spark's own packing (`FilePartition`) puts the files in at most
+  *     one partition, so the scan would be one task;
+  *   - the plan asks for no `input_file_name()`/`input_file_block_*`
+  *     and the relation exposes no `_metadata` column;
+  *   - missing and corrupt files are not being ignored.
+  *
+  * The rows come from the relation's own file format reader, with the
+  * key set pushed down, and only rows whose key is in the set are kept
+  * (a row outside it cannot pass the predicate that pinned the set).
+  * The exact predicate above still applies, and `ConvertToLocalRelation`
+  * folds it into a `LocalTableScan`: the query runs no Spark job and
+  * compiles no code for its new literal. Larger scans keep the job.
+  */
+case class InlinePointRead(session: SparkSession) extends Rule[LogicalPlan] {
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val conf = session.sessionState.conf
+    lazy val allowed = !conf.ignoreMissingFiles && !conf.ignoreCorruptFiles && !readsFileBlocks(plan)
+    plan.transformUp {
+      case r @ LogicalRelation(fs @ HadoopFsRelation(idx: ManifestFileIndex, _, _, _, _, _), _, _, false, _)
+          if idx.keyPoints.isDefined && allowed =>
+        inline(r, fs, idx).getOrElse(r)
+    }
+  }
+
+  private def readsFileBlocks(plan: LogicalPlan): Boolean =
+    plan.exists(_.expressions.exists(_.exists {
+      case _: InputFileName | _: InputFileBlockStart | _: InputFileBlockLength => true
+      case _ => false
+    }))
+
+  private def inline(
+      r: LogicalRelation, fs: HadoopFsRelation, idx: ManifestFileIndex): Option[LocalRelation] =
+    for {
+      (keyName, points) <- idx.keyPoints
+      if !r.output.exists(_.metadata.contains(METADATA_COL_ATTR_KEY))
+      key <- r.output.find(_.name == keyName)
+      keyOf <- keyReader(key.dataType)
+      part <- onePartition(fs, idx)
+    } yield LocalRelation(r.output, read(r, fs, part, key, points, keyOf))
+
+  /** The key's value in the manifest's encoding, for the types whose
+    * predicates pin points (see `PredicateBounds.pointKeysUs`).
+    */
+  private def keyReader(t: DataType): Option[(InternalRow, Int) => Long] = t match {
+    case TimestampType | TimestampNTZType | LongType => Some((row, i) => row.getLong(i))
+    case IntegerType => Some((row, i) => row.getInt(i).toLong)
+    case _ => None
+  }
+
+  /** The files as the scan would split and pack them, when that is at
+    * most one task.
+    */
+  private def onePartition(fs: HadoopFsRelation, idx: ManifestFileIndex): Option[Seq[PartitionedFile]] = {
+    val dirs = idx.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(session, dirs)
+    val splits = dirs.flatMap { d =>
+      d.files.flatMap { f =>
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          fs.fileFormat.isSplitable(session, fs.options, f.getPath), maxSplit, d.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(session, splits, maxSplit) match {
+      case Seq() => Some(Nil)
+      case Seq(only) => Some(only.files.toSeq)
+      case _ => None
+    }
+  }
+
+  private def read(
+      r: LogicalRelation, fs: HadoopFsRelation, files: Seq[PartitionedFile],
+      key: AttributeReference, points: Array[Long],
+      keyOf: (InternalRow, Int) => Long): Seq[InternalRow] = {
+    // the reader's rows are its data columns, then the partition columns
+    val readOrder = (fs.dataSchema ++ fs.partitionSchema).map(_.name)
+    val keyAt = readOrder.indexOf(key.name)
+    val project = UnsafeProjection.create(r.output.map(a =>
+      BoundReference(readOrder.indexOf(a.name), a.dataType, nullable = true)))
+    val pushed = GraftShims.sourceFilter(In(key,
+      points.toSeq.map(p => Literal(if (key.dataType == IntegerType) p.toInt else p, key.dataType))))
+    val reader = fs.fileFormat.buildReaderWithPartitionValues(
+      session, fs.dataSchema, fs.partitionSchema, fs.dataSchema, pushed.toSeq,
+      fs.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.sessionState.newHadoopConfWithOptions(fs.options))
+    files.flatMap { f =>
+      val rows = reader(f)
+      try rows.filter(row => !row.isNullAt(keyAt) &&
+          java.util.Arrays.binarySearch(points, keyOf(row, keyAt)) >= 0)
+        .map(row => project(row).copy()).toVector
+      finally rows match {
+        case c: AutoCloseable => c.close()
+        case _ =>
+      }
+    }
+  }
+}

@@ -20,4 +20,15 @@ object GraftShims {
       session: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field nullable (`StructType.asNullable` is
+    * `private[spark]`), as `spark.read` declares a file relation's data.
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
+
+  /** Spark's own Catalyst-to-source filter translation. */
+  def sourceFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
 }

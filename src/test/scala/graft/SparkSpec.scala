@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +28,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The data files a query plans to read: the files of every file
+    * relation in its analyzed plan. Counted before optimization, so a
+    * point lookup that is read on the driver (no file scan in the
+    * executed plan) still counts the files it reads.
+    */
+  def plannedFiles(df: DataFrame): Int =
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.inputFiles.length
+    }.sum
 
   /** The Spark jobs `body` starts. A marker job before and after it
     * brackets the window: the listener bus delivers job starts in

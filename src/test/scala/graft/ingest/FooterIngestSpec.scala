@@ -21,14 +21,15 @@ class FooterIngestSpec extends SparkSpec {
   private val baseMs = Timestamp.valueOf("2024-01-01 00:00:00").getTime
 
   /** A one-file delivery with TIMESTAMP(MICROS) keys (exact footer
-    * bounds); `bid` negative for some id makes it fail QC, and `vol`
-    * adds an optional `Vol` column.
+    * bounds); `bid` negative for some id makes it fail QC, `vol` adds an
+    * optional `Vol` column and `extra` one more column of that name.
     */
   private def writeTicks(
       root: String, name: String, ids: Range, bid: Int => Double = i => 1.0 + i,
-      vol: Boolean = false): java.nio.file.Path = {
+      vol: Boolean = false, extra: Option[String] = None): java.nio.file.Path = {
     val ticks = ids.map(i => (new Timestamp(baseMs + i * 1000L), bid(i), 2.0 + i)).toDF("DateTime", "Bid", "Ask")
-    val df = if (vol) ticks.withColumn("Vol", $"Ask" * 10) else ticks
+    val withVol = if (vol) ticks.withColumn("Vol", $"Ask" * 10) else ticks
+    val df = extra.fold(withVol)(c => withVol.withColumn(c, $"Bid" + 1))
     val tmp = tmpDir("stage")
     withSqlConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -136,5 +137,38 @@ class FooterIngestSpec extends SparkSpec {
     assert(scanned.qualityIssues == exact.qualityIssues, s"grouped scan QC: $scanned")
     assert(scanned.rowsAppended == exact.rowsAppended && scanned.rowsRejected == exact.rowsRejected)
     assert(scannedRows == exactRows)
+  }
+
+  test("schema drift: a lacking optional column reads null, an extra column rejects the file") {
+    // a (with Vol) makes the table; b lacks Vol; c carries a column the
+    // table lacks. Both modes land a and b, reject c naming the column,
+    // and finish the run: audit written, ledger persisted.
+    def deliver(batched: Boolean): (IngestPipeline, RunSummary, String, String) = {
+      val root = tmpDir("data")
+      writeTicks(root, "a.parquet", 0 until 100, vol = true)
+      writeTicks(root, "b.parquet", 100 until 200)
+      writeTicks(root, "c.parquet", 200 until 300, vol = true, extra = Some("Mid"))
+      val wh = tmpDir("wh")
+      val p = new IngestPipeline(spark, cfg(wh, batched))
+      (p, p.run(root), root, wh)
+    }
+    val runs = Seq(false, true).map(deliver)
+    for ((p, run, root, wh) <- runs) {
+      val audit = run.tables.head
+      assert(audit.rowsAppended == 200, s"$audit")
+      assert(audit.rowsRejected == 100 && audit.filesProcessed == 3)
+      assert(audit.qualityIssues == Seq("Unexpected columns not in the table schema: Mid"))
+      val table = p.catalog.loadTable("gold.eurusd")
+      assert(table.schema.fieldNames.toSeq == Seq("DateTime", "Bid", "Ask", "Vol"))
+      val vols = table.read().orderBy("DateTime").select("Vol").collect().map(r => Option(r.get(0)))
+      assert(vols.take(100).forall(_.isDefined) && vols.drop(100).forall(_.isEmpty))
+      val fs = new Path(wh).getFileSystem(spark.sessionState.newHadoopConf())
+      assert(new AuditLog(new Path(wh, "audit_log.json"), fs).readAll().size == 1)
+      val ledger = new ChecksumLedger(new Path(wh, "ingested_files.json"), fs)
+      val delivered = graft.util.ParquetListing.under(fs, new Path(root))
+      assert(delivered.size == 3)
+      delivered.foreach(f => assert(ledger.isKnown(f) == (f.getName != "c.parquet"), s"ledger: $f"))
+    }
+    assert(contents(runs(0)._1) == contents(runs(1)._1))
   }
 }

@@ -87,10 +87,7 @@ class CompositePartitionSpec extends SparkSpec {
     val (lo, hi) = (usOf("2024-03-02 00:00:00"), usOf("2024-03-03 23:59:59"))
     val got = t.readPartitionRange(Map("symbol" -> "MSFT"), lo, hi)
     // plan-asserted: the relation contains exactly the pruned file set
-    val planned = got.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.relation.location.inputFiles.length
-    }.sum
+    val planned = plannedFiles(got)
     val pruned = t.filesForQuery(Map("symbol" -> "MSFT"), Some((lo, hi))).size
     assert(planned == pruned && pruned < t.currentDataFiles.size,
       s"plan must read exactly the pruned files (planned=$planned pruned=$pruned)")

@@ -3,10 +3,7 @@ package graft.lake
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.json4s.DefaultFormats
-import org.json4s.jackson.Serialization
 
-import java.nio.charset.StandardCharsets
 import java.sql.Timestamp
 
 /** fbCols backfill on manifest rewrite (round 14, VERDICT r13 #5):
@@ -20,8 +17,6 @@ import java.sql.Timestamp
 class FbColsBackfillSpec extends SparkSpec {
   import spark.implicits._
 
-  private implicit val fmts: org.json4s.Formats = DefaultFormats
-
   private def residue(r: Int, n: Int = 40) =
     (0 until n).map { i =>
       val u = 4 * i + r
@@ -31,34 +26,9 @@ class FbColsBackfillSpec extends SparkSpec {
   private def usOf(micro: Int) =
     Timestamp.valueOf("2024-01-01 00:00:00").getTime * 1000L + micro
 
-  /** Rewrite every manifest entry of the current snapshot through `fn`
-    * — simulates older-format metadata (the stripped fields are all
-    * additive, so the stripped JSON is exactly what an older writer
-    * produced).
-    */
   private def stripEntries(
-      t: LakehouseTable, dropStatsHeader: Boolean = false)(
-      fn: DataFile => DataFile): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = t.tableDir.getFileSystem(conf)
-    val log = new SnapshotLog(t.tableDir, conf)
-    t.metadata.currentSnapshot.foreach { snap =>
-      log.readManifestList(snap).foreach { ref =>
-        val p = new Path(t.tableDir, ref.path)
-        val in = fs.open(p)
-        val data =
-          try Serialization.read[ManifestData](
-            new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-          finally in.close()
-        val stripped = data.copy(files = data.files.map(fn),
-          statsCols = if (dropStatsHeader) None else data.statsCols)
-        val out = fs.create(p, true)
-        try out.write(Serialization.writePretty(stripped).getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
-    SnapshotLog.clearPlanningCache()
-  }
+      t: LakehouseTable, dropStatsHeader: Boolean = false)(fn: DataFile => DataFile): Unit =
+    ManifestEntries.rewrite(spark, t, dropStatsHeader)(fn)
 
   private def stripFbCols(t: LakehouseTable): Unit =
     stripEntries(t)(_.copy(fbCols = None))
@@ -96,15 +66,6 @@ class FbColsBackfillSpec extends SparkSpec {
         if (r == 3) null else f"u$u%08d", u.toLong)
     }.toDF("ts", "uid_s", "uid").coalesce(1)
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   test("rewrite backfills bounds, null counts, and the bloom proof in one footer pass") {
     val t = LakehouseTable.createIfNotExists(

@@ -54,10 +54,7 @@ class NullStatsSpec extends SparkSpec {
     // range probe inside the all-null batch's WOULD-BE value band:
     // before null counts the bounds-less file was always kept
     val df = t.readPlanned(FilePruning(longRanges = Seq(("uid", 1000L, 1039L))))
-    val plan = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(plan.map(_.relation.location.inputFiles.length).sum == 0,
+    assert(plannedFiles(df) == 0,
       "the all-null file must skip the range probe; the zero-null file's bounds miss it")
     // point probe: same
     assert(t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(1005L)))).count() == 0)
@@ -77,15 +74,6 @@ class NullStatsSpec extends SparkSpec {
     assert(notNulls.count() == 40 && notNulls.filter(col("uid").isNotNull).count() == 40)
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   test("nullness dims compose with point dims and with time travel") {
     // two files with fully INTERLEAVED ts ranges (even µs in file A,

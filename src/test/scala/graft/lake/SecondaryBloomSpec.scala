@@ -57,9 +57,7 @@ class SecondaryBloomSpec extends SparkSpec {
     // uid bounds interleave: every file's [r, 156+r] admits uid 6 and 10
     assert(t.filesOverlappingColumn("uid", 6L, 10L).size == 4)
     val df = t.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(6L, 10L))))
-    val scanned = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.relation.location.inputFiles.length).sum
+    val scanned = plannedFiles(df)
     assert(scanned < 4 && scanned >= 1,
       s"secondary bloom must prune below the 4 bounds-kept files, planned $scanned")
     // superset semantics: every matching row present
@@ -80,10 +78,7 @@ class SecondaryBloomSpec extends SparkSpec {
     val ti = mkTable("sb3i", Some(4096))
     (0 until 4).foreach(r => ti.append(residue(r)))
     def kept(tt: LakehouseTable) =
-      tt.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(6L, 10L))))
-        .queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.map(_.relation.location.inputFiles.length).sum
+      plannedFiles(tt.readPlanned(FilePruning(longPoints = Seq("uid" -> Seq(6L, 10L)))))
     assert(kept(t) == kept(ti), "sidecar and inline column blooms must agree")
   }
 
@@ -113,10 +108,7 @@ class SecondaryBloomSpec extends SparkSpec {
       t.append(rows.filter(second(col("ts")) === r).coalesce(1)))
     assert(t.currentDataFiles.size == 4)
     def planned(range: Option[(Long, Long)]): Int =
-      t.readPlanned(FilePruning(timeRange = range, longPoints = Seq("uid" -> Seq(6L, 10L))))
-        .queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.map(_.relation.location.inputFiles.length).sum
+      plannedFiles(t.readPlanned(FilePruning(timeRange = range, longPoints = Seq("uid" -> Seq(6L, 10L)))))
     // uid 6 = 4·1+2, uid 10 = 4·2+2: both in the second-2 file; the
     // blooms alone keep exactly it
     assert(planned(None) == 1)
@@ -144,9 +136,7 @@ class SecondaryBloomSpec extends SparkSpec {
     val keys = real ++ fillers
     assert(keys.size > PredicateBounds.MaxPointKeys)
     val df = t.readPlanned(FilePruning(longPoints = Seq("uid" -> keys)))
-    val scanned = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.relation.location.inputFiles.length).sum
+    val scanned = plannedFiles(df)
     assert(scanned < 4 && scanned >= 1,
       s"distributed column probe must prune below 4 bounds-kept files, planned $scanned")
     val uids = df.select("uid").as[Long].collect().toSet

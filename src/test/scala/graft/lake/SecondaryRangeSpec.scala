@@ -55,15 +55,6 @@ class SecondaryRangeSpec extends SparkSpec {
     t
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   test("range reads prune manifests unopened and lose no rows") {
     val t = mkTable("sr-e2e")

@@ -131,15 +131,6 @@ class StringSkipSpec extends SparkSpec {
     t
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   test("string point reads skip bloom-excluded files with zero false negatives") {
     for (sidecar <- Seq(false, true)) {

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 class VectorIndexSpec extends SparkSpec {
@@ -43,9 +42,7 @@ class VectorIndexSpec extends SparkSpec {
       .select("list_id").distinct().orderBy("list_id").limit(2)
       .collect().map(_.getLong(0)).toSeq
     val probe = idx.vectors.readPartitionIn("list_id", twoLists)
-    val planned = probe.queryExecution.sparkPlan.collect {
-      case s: FileSourceScanExec => s.relation.location.inputFiles.length
-    }.sum
+    val planned = plannedFiles(probe)
     assert(planned < total,
       s"probing 2 of 8 lists must prune the scan (planned=$planned of $total files)")
     assert(probe.select("list_id").distinct().collect().map(_.getLong(0)).toSet ==

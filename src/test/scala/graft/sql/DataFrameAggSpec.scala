@@ -3,9 +3,6 @@ package graft.sql
 import graft.SparkSpec
 import graft.lake.LakehouseTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -35,14 +32,6 @@ class DataFrameAggSpec extends SparkSpec {
     (cat, wh)
   }
 
-  private def filesScanned(df: DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   private def ts(i: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:00:${i / 60}%02d.${(i % 60) * 1000}%06d")
@@ -70,7 +59,7 @@ class DataFrameAggSpec extends SparkSpec {
     val q = df.groupBy().agg(
       count(lit(1)).as("n"), min("ts").as("mn"),
       max("uid").as("mx"), count("uid").as("nu"))
-    assert(filesScanned(q) == 0, "DataFrame aggregate must not plan a scan")
+    assert(plannedFiles(q) == 0, "DataFrame aggregate must not plan a scan")
     val r = q.head()
     assert(r.getLong(0) == 60L && r.getTimestamp(1) == ts(0) &&
       r.getLong(2) == 159L && r.getLong(3) == 60L)
@@ -81,7 +70,7 @@ class DataFrameAggSpec extends SparkSpec {
     mkTable(cat, wh, "t2")
     val df = spark.table(s"$cat.gold.t2")
     val g = df.groupBy("sym").count().orderBy("sym")
-    assert(filesScanned(g) == 0, "grouped count over identity dims must not scan")
+    assert(plannedFiles(g) == 0, "grouped count over identity dims must not scan")
     assert(g.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       == Seq(("A", 30L), ("B", 30L)))
     // an INTERPOSED transformation expands at its own pass (documented
@@ -98,7 +87,7 @@ class DataFrameAggSpec extends SparkSpec {
     t.morDeleteKeys(Seq(ts(7)).toDF("ts"), "ts")
     val df = spark.table(s"$cat.gold.t3")
     val q = df.groupBy().count()
-    assert(filesScanned(q) > 0, "a mask can remove any row — nothing is provable")
+    assert(plannedFiles(q) > 0, "a mask can remove any row — nothing is provable")
     assert(q.head().getLong(0) == 59L)
     assert(df.count() == 59L)
   }
@@ -132,7 +121,7 @@ class DataFrameAggSpec extends SparkSpec {
       // the LocalScan plans as LocalTableScan over the pushed columns
       assert(plan.toString.contains("_pushed_group_"),
         s"grouped aggregate must plan the pushed LocalScan:\n$plan")
-      assert(filesScanned(g) == 0)
+      assert(plannedFiles(g) == 0)
       assert(g.collect().map(r =>
         (r.getString(0), r.getLong(1), r.getTimestamp(2), r.getLong(3), r.getString(4)))
         .toSeq == Seq(("A", 30L, ts(0), 158L, "A"), ("B", 30L, ts(1), 159L, "B")))
@@ -161,7 +150,7 @@ class DataFrameAggSpec extends SparkSpec {
       val g = grouped()
       assert(g.queryExecution.executedPlan.toString.contains("_pushed_group_"),
         s"expected the grouped pushed LocalScan:\n${g.queryExecution.executedPlan}")
-      assert(filesScanned(g) == 0)
+      assert(plannedFiles(g) == 0)
       assert(g.collect().map(_.toSeq).toSeq == expected)
       // a live merge-on-read mask refuses the pushdown; the V1
       // fallback still answers correctly
@@ -238,14 +227,14 @@ class DataFrameAggSpec extends SparkSpec {
         val g = pushed(dim)
         assert(g.queryExecution.executedPlan.toString.contains("_pushed_group_"),
           s"time-derived group must push:\n${g.queryExecution.executedPlan}")
-        assert(filesScanned(g) == 0, s"zero files for $dim")
+        assert(plannedFiles(g) == 0, s"zero files for $dim")
         assert(g.collect().map(_.toSeq).toSeq == truth(dim))
       }
       // composite: identity + derived dim together
       val both = spark.table(s"$cat.gold.t9").groupBy($"sym", year($"ts").as("y"))
         .agg(count(lit(1)).as("n")).orderBy("sym", "y")
       assert(both.queryExecution.executedPlan.toString.contains("_pushed_group_"))
-      assert(filesScanned(both) == 0)
+      assert(plannedFiles(both) == 0)
       assert(both.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
         == t.read().groupBy($"sym", year($"ts").as("y")).agg(count(lit(1)).as("n"))
           .orderBy("sym", "y").collect()
@@ -297,7 +286,7 @@ class DataFrameAggSpec extends SparkSpec {
     val expr = SourceFilterCatalyst.toCatalyst(
       org.apache.spark.sql.sources.EqualTo("sym", "A"), g.schema).get
     val pruned = GraftNativeRead.nativeDF(g, Some(expr))
-    assert(filesScanned(pruned) == total / 2,
+    assert(plannedFiles(pruned) == total / 2,
       s"identity restriction must halve the ${total}-file plan")
     // untranslatable shapes weaken soundly: the sym arm of an AND
     // survives alone; an OR with an untranslatable arm drops entirely

@@ -165,14 +165,7 @@ class GraftCatalogSpec extends SparkSpec {
       (3, TIMESTAMP '2024-01-20 10:00:00', 3.0),
       (4, TIMESTAMP '2024-01-21 10:00:00', 4.0)""")
 
-    def filesScanned(sql: String): Int = {
-      val plan = spark.sql(sql).queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      plan.collect { case f: FileSourceScanExec => f }
-        .map(_.relation.location.inputFiles.length).sum
-    }
+    def filesScanned(sql: String): Int = plannedFiles(spark.sql(sql))
     val all = filesScanned(s"SELECT v FROM $cat.gold.ev")
     val pruned = filesScanned(
       s"SELECT v FROM $cat.gold.ev WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'")

@@ -3,10 +3,8 @@ package graft.sql
 import graft.SparkSpec
 import graft.lake.LakehouseTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.Identifier
-import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -35,14 +33,6 @@ class MetadataAggSpec extends SparkSpec {
     (cat, wh)
   }
 
-  private def filesScanned(df: DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   private def ts(i: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:00:${i / 60}%02d.${(i % 60) * 1000}%06d")
@@ -71,7 +61,7 @@ class MetadataAggSpec extends SparkSpec {
          |       min(ts) AS min_ts, max(ts) AS max_ts,
          |       min(uid) AS min_uid, max(uid) AS max_uid
          |FROM $cat.gold.t1""".stripMargin)
-    assert(filesScanned(q) == 0, "whole-table aggregate must not plan a scan")
+    assert(plannedFiles(q) == 0, "whole-table aggregate must not plan a scan")
     val r = q.head()
     assert(r.getLong(0) == 60L)
     assert(r.getLong(1) == 30L)
@@ -88,7 +78,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT count(*) + 1 AS n1, unix_micros(max(ts)) AS mx,
          |       CAST(min(uid) AS INT) AS mn
          |FROM $cat.gold.t2""".stripMargin)
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     val r = q.head()
     assert(r.getLong(0) == 61L)
     assert(r.getLong(1) == ts(59).getTime * 1000L)
@@ -102,12 +92,12 @@ class MetadataAggSpec extends SparkSpec {
     // write marked them EXACT (round 16, VERDICT r15 #5) — extremes
     // answer from the roll-ups
     val qs = spark.sql(s"SELECT min(s) AS mn, max(s) AS mx FROM $cat.gold.t3")
-    assert(filesScanned(qs) == 0, "exactness-marked short strings answer from metadata")
+    assert(plannedFiles(qs) == 0, "exactness-marked short strings answer from metadata")
     assert(qs.head().getString(0) == "u000" && qs.head().getString(1) == "u059")
     // doubles carry EXACT minD/maxD since round 15 — the widened longs
     // are never served, the exact pair is
     val qd = spark.sql(s"SELECT min(d) AS mn, max(d) AS mx FROM $cat.gold.t3")
-    assert(filesScanned(qd) == 0, "exact double bounds answer extremes from metadata")
+    assert(plannedFiles(qd) == 0, "exact double bounds answer extremes from metadata")
     assert(qd.head().getDouble(0) == 0.0 && qd.head().getDouble(1) == 5.9)
   }
 
@@ -122,7 +112,7 @@ class MetadataAggSpec extends SparkSpec {
     (0 until 4).foreach(r => t.append(
       data.filter(pmod(hash(col("s")), lit(4)) === r).coalesce(1)))
     val q = spark.sql(s"SELECT min(s) AS mn, max(s) AS mx FROM $cat.gold.tlong")
-    assert(filesScanned(q) > 0, "truncated bounds must never be served as extremes")
+    assert(plannedFiles(q) > 0, "truncated bounds must never be served as extremes")
     assert(q.head().getString(0) == "long-prefix-padding-u000")
     assert(q.head().getString(1) == "long-prefix-padding-u059")
     val info = t.metadataAggInfo().get
@@ -147,7 +137,7 @@ class MetadataAggSpec extends SparkSpec {
     assert(info.colMinS.isEmpty && info.colMaxS.isEmpty,
       "imports must not claim string exactness")
     val q = spark.sql(s"SELECT min(s) AS mn, max(s) AS mx FROM $cat.gold.timp")
-    assert(filesScanned(q) > 0, "imported bounds bail to the scan")
+    assert(plannedFiles(q) > 0, "imported bounds bail to the scan")
     assert(q.head().getString(0) == "u000" && q.head().getString(1) == "u019")
   }
 
@@ -167,7 +157,7 @@ class MetadataAggSpec extends SparkSpec {
     assert(info.colMinS.isEmpty && info.colMaxS.isEmpty,
       "a truncating writer config forfeits exactness claims")
     val q = spark.sql(s"SELECT min(s) AS mn, max(s) AS mx FROM $cat.gold.ttrunc")
-    assert(filesScanned(q) > 0)
+    assert(plannedFiles(q) > 0)
     assert(q.head().getString(0) == "u000" && q.head().getString(1) == "u019")
   }
 
@@ -183,7 +173,7 @@ class MetadataAggSpec extends SparkSpec {
       t.append(data.filter((col("d") / 10.0).cast("int") === r).coalesce(1)))
     val q = spark.sql(
       s"SELECT count(*) AS n FROM $cat.gold.t12 WHERE d BETWEEN 10.3 AND 15.7")
-    assert(filesScanned(q) == 1, "only the d∈[10, 15.6] band's file may scan")
+    assert(plannedFiles(q) == 1, "only the d∈[10, 15.6] band's file may scan")
     assert(q.head().getLong(0) ==
       (0 until 60).count(i => {
         val d = (i % 4) * 10.0 + (i / 4) * 0.4; d >= 10.3 && d <= 15.7
@@ -191,7 +181,7 @@ class MetadataAggSpec extends SparkSpec {
     // sub-integer band between two files' ranges: bounds prove empty
     val q0 = spark.sql(
       s"SELECT count(*) AS n FROM $cat.gold.t12 WHERE d > 5.95 AND d < 9.9")
-    assert(filesScanned(q0) == 0, "a between-band double range prunes everything")
+    assert(plannedFiles(q0) == 0, "a between-band double range prunes everything")
     assert(q0.head().getLong(0) == 0L)
     // composed with key points: ts(5) lives in band 1, ts(6) in band 2
     // (footer blooms prune the points to exactly those two files) —
@@ -199,12 +189,12 @@ class MetadataAggSpec extends SparkSpec {
     val qP = spark.sql(
       s"""SELECT count(*) AS n FROM $cat.gold.t12
          |WHERE ts IN (TIMESTAMP '${ts(5)}', TIMESTAMP '${ts(6)}')""".stripMargin)
-    assert(filesScanned(qP) == 2, "the two points keep their two band files")
+    assert(plannedFiles(qP) == 2, "the two points keep their two band files")
     val qC = spark.sql(
       s"""SELECT count(*) AS n FROM $cat.gold.t12
          |WHERE ts IN (TIMESTAMP '${ts(5)}', TIMESTAMP '${ts(6)}')
          |  AND d BETWEEN 10.3 AND 15.7""".stripMargin)
-    assert(filesScanned(qC) == 1, "the double dim composes with the point dims")
+    assert(plannedFiles(qC) == 1, "the double dim composes with the point dims")
     assert(qC.head().getLong(0) == 1L)
   }
 
@@ -213,13 +203,13 @@ class MetadataAggSpec extends SparkSpec {
     mkTable(cat, wh, "t4")
     val qf = spark.sql(
       s"SELECT count(*) FILTER (WHERE uid > 150) AS n FROM $cat.gold.t4")
-    assert(filesScanned(qf) > 0)
+    assert(plannedFiles(qf) > 0)
     assert(qf.head().getLong(0) == 9L)
     val qd = spark.sql(s"SELECT count(DISTINCT uid) AS n FROM $cat.gold.t4")
-    assert(filesScanned(qd) > 0)
+    assert(plannedFiles(qd) > 0)
     assert(qd.head().getLong(0) == 60L)
     val qsum = spark.sql(s"SELECT sum(uid) AS sm FROM $cat.gold.t4")
-    assert(filesScanned(qsum) > 0)
+    assert(plannedFiles(qsum) > 0)
     assert(qsum.head().getLong(0) == (100L to 159L).sum)
   }
 
@@ -228,12 +218,12 @@ class MetadataAggSpec extends SparkSpec {
     val t = mkTable(cat, wh, "t5")
     t.morDeleteKeys(Seq(ts(7)).toDF("ts"), "ts")
     val q = spark.sql(s"SELECT count(*) AS n, max(uid) AS mx FROM $cat.gold.t5")
-    assert(filesScanned(q) > 0, "a mask can remove any row — nothing is provable")
+    assert(plannedFiles(q) > 0, "a mask can remove any row — nothing is provable")
     assert(q.head().getLong(0) == 59L && q.head().getLong(1) == 159L)
     // compaction folds the mask → provable again
     t.compact()
     val q2 = spark.sql(s"SELECT count(*) AS n, max(uid) AS mx FROM $cat.gold.t5")
-    assert(filesScanned(q2) == 0, "folded masks restore provability")
+    assert(plannedFiles(q2) == 0, "folded masks restore provability")
     assert(q2.head().getLong(0) == 59L && q2.head().getLong(1) == 159L)
   }
 
@@ -243,7 +233,7 @@ class MetadataAggSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $cat.gold.t6 WHERE uid >= 155")
     val q = spark.sql(
       s"SELECT count(*) AS n, max(uid) AS mx, max(ts) AS mxt FROM $cat.gold.t6")
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     val r = q.head()
     assert(r.getLong(0) == 55L)
     assert(r.getLong(1) == 154L)
@@ -257,10 +247,10 @@ class MetadataAggSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $cat.gold.t7 WHERE uid >= 150")
     val q = spark.sql(
       s"SELECT count(*) AS n, max(uid) AS mx FROM $cat.gold.t7 VERSION AS OF $vPre")
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     assert(q.head().getLong(0) == 60L && q.head().getLong(1) == 159L)
     val qNow = spark.sql(s"SELECT count(*) AS n FROM $cat.gold.t7")
-    assert(filesScanned(qNow) == 0)
+    assert(plannedFiles(qNow) == 0)
     assert(qNow.head().getLong(0) == 50L)
   }
 
@@ -271,7 +261,7 @@ class MetadataAggSpec extends SparkSpec {
       spark, new Path(wh, "gold/t8"), proto.schema, Some("ts"))
     val q = spark.sql(
       s"SELECT count(*) AS n, min(ts) AS mn, max(uid) AS mx FROM $cat.gold.t8")
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     val r = q.head()
     assert(r.getLong(0) == 0L && r.isNullAt(1) && r.isNullAt(2))
   }
@@ -281,12 +271,12 @@ class MetadataAggSpec extends SparkSpec {
     val t = mkTable(cat, wh, "t9")
     t.renameColumn("uid", "uid2")
     val q = spark.sql(s"SELECT min(uid2) AS mn, max(uid2) AS mx FROM $cat.gold.t9")
-    assert(filesScanned(q) > 0, "pre-rename manifest entries carry the old name")
+    assert(plannedFiles(q) > 0, "pre-rename manifest entries carry the old name")
     assert(q.head().getLong(0) == 100L && q.head().getLong(1) == 159L)
     // the key column is positional (minKeyUs), not name-keyed: a key
     // rename keeps min/max(key) and count(*) metadata-only
     val qk = spark.sql(s"SELECT count(*) AS n, max(ts) AS mx FROM $cat.gold.t9")
-    assert(filesScanned(qk) == 0)
+    assert(plannedFiles(qk) == 0)
     assert(qk.head().getLong(0) == 60L)
   }
 
@@ -296,7 +286,7 @@ class MetadataAggSpec extends SparkSpec {
     spark.conf.set("spark.graft.sql.metadata-aggregates", "false")
     try {
       val q = spark.sql(s"SELECT count(*) AS n FROM $cat.gold.t10")
-      assert(filesScanned(q) > 0)
+      assert(plannedFiles(q) > 0)
       assert(q.head().getLong(0) == 60L)
     } finally spark.conf.unset("spark.graft.sql.metadata-aggregates")
   }
@@ -326,7 +316,7 @@ class MetadataAggSpec extends SparkSpec {
          |       min(ts) AS mn_ts, max(ts) AS mx_ts,
          |       min(uid) AS mn_uid, max(uid) AS mx_uid, max(sym) AS mx_sym
          |FROM $cat.gold.g1 GROUP BY sym ORDER BY sym""".stripMargin)
-    assert(filesScanned(q) == 0, "identity group-by must not plan a scan")
+    assert(plannedFiles(q) == 0, "identity group-by must not plan a scan")
     val rs = q.collect()
     assert(rs.map(_.getString(0)).toSeq == Seq("a:b", "alpha", "z"))
     rs.foreach { r =>
@@ -343,7 +333,7 @@ class MetadataAggSpec extends SparkSpec {
     val (cat, wh) = freshCatalog()
     mkIdTable(cat, wh, "g2")
     val q = spark.sql(s"SELECT DISTINCT sym FROM $cat.gold.g2")
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     assert(q.collect().map(_.getString(0)).sorted.toSeq == Seq("a:b", "alpha", "z"))
   }
 
@@ -355,7 +345,7 @@ class MetadataAggSpec extends SparkSpec {
     val qN = spark.sql(
       s"""SELECT count(*) AS n
          |FROM (SELECT sym, uid FROM $cat.gold.g6 WHERE sym = 'alpha') q""".stripMargin)
-    assert(filesScanned(qN) == 0)
+    assert(plannedFiles(qN) == 0)
     assert(qN.head().getLong(0) == 20L)
     // DataFrame-API chains pre-expand the relation in spark.table's own
     // analysis pass, so they keep the scan plan — correct, just not
@@ -395,7 +385,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sum(amt) AS s, avg(amt) AS a,
          |       sum(opt_amt) AS so, avg(opt_amt) AS ao
          |FROM $cat.gold.dec1""".stripMargin)
-    assert(filesScanned(q) == 0, "decimal sum/avg must not plan a scan")
+    assert(plannedFiles(q) == 0, "decimal sum/avg must not plan a scan")
     val r = q.head()
     assert(r.getDecimal(0) == truth.getDecimal(0), "sum(amt) exact")
     assert(r.getDecimal(1) == truth.getDecimal(1), "avg(amt) exact incl. rounding")
@@ -411,19 +401,19 @@ class MetadataAggSpec extends SparkSpec {
     val qg = spark.sql(
       s"""SELECT sym, sum(amt) AS s, avg(amt) AS a
          |FROM $cat.gold.dec1 GROUP BY sym ORDER BY sym""".stripMargin)
-    assert(filesScanned(qg) == 0)
+    assert(plannedFiles(qg) == 0)
     assert(qg.collect().map(_.toSeq).toSeq == truthG)
     // DSv2 (no extension rule): same answers through the connector
     withSqlConf("spark.graft.sql.expansion-enabled" -> "false") {
       val gd = spark.table(s"$cat.gold.dec1")
         .agg(sum("amt").as("s"), avg("amt").as("a"))
-      assert(filesScanned(gd) == 0)
+      assert(plannedFiles(gd) == 0)
       val rd = gd.head()
       assert(rd.getDecimal(0) == truth.getDecimal(0))
       assert(rd.getDecimal(1) == truth.getDecimal(1))
       val gg = spark.table(s"$cat.gold.dec1").groupBy("sym")
         .agg(sum("amt").as("s"), avg("amt").as("a")).orderBy("sym")
-      assert(filesScanned(gg) == 0)
+      assert(plannedFiles(gg) == 0)
       assert(gg.collect().map(_.toSeq).toSeq == truthG)
     }
     // sum_coverage reports the decimal column servable
@@ -439,7 +429,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, sum(amt) AS s FROM $cat.gold.dec1
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
          |GROUP BY sym ORDER BY sym""".stripMargin)
-    assert(filesScanned(qCover) == 0, "covering decimal range sums serve")
+    assert(plannedFiles(qCover) == 0, "covering decimal range sums serve")
     assert(qCover.collect().map(_.toSeq).toSeq ==
       truthG.map(r => Seq(r.head, r(1))))
     val cut = Timestamp.valueOf("2024-01-01 00:00:00.000001")
@@ -447,7 +437,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, sum(amt) AS s FROM $cat.gold.dec1
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00.000001'
          |GROUP BY sym ORDER BY sym""".stripMargin)
-    assert(filesScanned(qStraddle) > 0,
+    assert(plannedFiles(qStraddle) > 0,
       "straddling decimal range sums must refuse the hybrid combine")
     assert(qStraddle.collect().map(_.toSeq).toSeq ==
       t.read().filter(col("ts") >= cut).groupBy("sym")
@@ -484,28 +474,28 @@ class MetadataAggSpec extends SparkSpec {
     val (cat, wh) = freshCatalog()
     mkIdTable(cat, wh, "cd1")
     val q = spark.sql(s"SELECT count(DISTINCT sym) AS d FROM $cat.gold.cd1")
-    assert(filesScanned(q) == 0, "count(DISTINCT identity) must not plan a scan")
+    assert(plannedFiles(q) == 0, "count(DISTINCT identity) must not plan a scan")
     assert(q.head().getLong(0) == 3L)
     // grouped: per-year distinct symbols through the time-dim rewrite
     val qg = spark.sql(
       s"""SELECT year(ts) AS y, count(DISTINCT sym) AS d
          |FROM $cat.gold.cd1 GROUP BY year(ts)""".stripMargin)
-    assert(filesScanned(qg) == 0)
+    assert(plannedFiles(qg) == 0)
     assert(qg.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
       == Seq((2024, 3L)))
     // restricted: the IN restriction keeps it metadata-only
     val qr = spark.sql(
       s"SELECT count(DISTINCT sym) AS d FROM $cat.gold.cd1 WHERE sym IN ('alpha', 'z')")
-    assert(filesScanned(qr) == 0)
+    assert(plannedFiles(qr) == 0)
     assert(qr.head().getLong(0) == 2L)
     // a non-identity column falls back and stays exact
     val qu = spark.sql(s"SELECT count(DISTINCT uid) AS d FROM $cat.gold.cd1")
-    assert(filesScanned(qu) > 0)
+    assert(plannedFiles(qu) > 0)
     assert(qu.head().getLong(0) == 60L)
     // count(DISTINCT sym) composed with provable shapes stays pushed
     val qc = spark.sql(
       s"SELECT count(DISTINCT sym) AS d, count(*) AS n FROM $cat.gold.cd1")
-    assert(filesScanned(qc) == 0)
+    assert(plannedFiles(qc) == 0)
     assert(qc.head().getLong(0) == 3L && qc.head().getLong(1) == 60L)
   }
 
@@ -521,7 +511,7 @@ class MetadataAggSpec extends SparkSpec {
       Seq("sym" -> "identity", "ts" -> "day"))
     st.append(sData)
     val qs = spark.sql(s"SELECT count(DISTINCT sym) AS d FROM $cat.gold.cd2")
-    assert(filesScanned(qs) > 0, "a string sentinel dir is ambiguous — must bail")
+    assert(plannedFiles(qs) > 0, "a string sentinel dir is ambiguous — must bail")
     assert(qs.head().getLong(0) == 2L)
     // LONG identity with nulls: the sentinel dir is PROVABLY all-null
     // ('' is not a long) — excluded, the distinct count still serves
@@ -533,7 +523,7 @@ class MetadataAggSpec extends SparkSpec {
       Seq("gid" -> "identity", "ts" -> "day"))
     lt.append(lData)
     val ql = spark.sql(s"SELECT count(DISTINCT gid) AS d FROM $cat.gold.cd3")
-    assert(filesScanned(ql) == 0,
+    assert(plannedFiles(ql) == 0,
       "a non-string sentinel dir is provably null-only — distinct still serves")
     assert(ql.head().getLong(0) == 3L)
   }
@@ -543,7 +533,7 @@ class MetadataAggSpec extends SparkSpec {
     mkIdTable(cat, wh, "g3")
     val q = spark.sql(
       s"SELECT uid % 2 AS par, count(*) AS n FROM $cat.gold.g3 GROUP BY uid % 2")
-    assert(filesScanned(q) > 0)
+    assert(plannedFiles(q) > 0)
     assert(q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(0L -> 30L, 1L -> 30L))
   }
@@ -559,7 +549,7 @@ class MetadataAggSpec extends SparkSpec {
     t.append(data)
     val q = spark.sql(
       s"SELECT sym, count(*) AS n FROM $cat.gold.g4 GROUP BY sym")
-    assert(filesScanned(q) > 0, "the sentinel dir cannot round-trip a null")
+    assert(plannedFiles(q) > 0, "the sentinel dir cannot round-trip a null")
     val m = q.collect().map(r =>
       Option(r.getString(0)).getOrElse("NULL") -> r.getLong(1)).toMap
     assert(m == Map("NULL" -> 4L, "s0" -> 8L, "s1" -> 8L))
@@ -584,7 +574,7 @@ class MetadataAggSpec extends SparkSpec {
     // scan (0), not count the sentinel dir's rows.
     val qE = spark.sql(s"SELECT count(*) AS n FROM $cat.gold.e1 WHERE sym = ''")
     assert(qE.head().getLong(0) == 0L, "'' round-trips to null under hive dirs")
-    assert(filesScanned(qE) > 0, "'' is sentinel-ambiguous — the exact path bails")
+    assert(plannedFiles(qE) > 0, "'' is sentinel-ambiguous — the exact path bails")
     val qNull = spark.sql(
       s"SELECT count(*) AS n FROM $cat.gold.e1 WHERE sym IS NULL")
     assert(qNull.head().getLong(0) == 3L, "both '' rows and the null row read as null")
@@ -592,9 +582,9 @@ class MetadataAggSpec extends SparkSpec {
       s"SELECT count(*) AS n FROM $cat.gold.e1 WHERE sym = '__HIVE_DEFAULT_PARTITION__'")
     assert(qSent.head().getLong(0) == 0L,
       "no row carries the sentinel literal — counting the sentinel dir would lie")
-    assert(filesScanned(qSent) > 0)
+    assert(plannedFiles(qSent) > 0)
     val qA = spark.sql(s"SELECT count(*) AS n FROM $cat.gold.e1 WHERE sym = 'a'")
-    assert(filesScanned(qA) == 0, "an unambiguous value stays metadata-only")
+    assert(plannedFiles(qA) == 0, "an unambiguous value stays metadata-only")
     assert(qA.head().getLong(0) == 1L)
   }
 
@@ -605,17 +595,17 @@ class MetadataAggSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $cat.gold.g5 WHERE sym = 'z'")
     val qNow = spark.sql(
       s"SELECT sym, count(*) AS n FROM $cat.gold.g5 GROUP BY sym")
-    assert(filesScanned(qNow) == 0)
+    assert(plannedFiles(qNow) == 0)
     assert(qNow.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("alpha" -> 20L, "a:b" -> 20L))
     val qTt = spark.sql(
       s"SELECT sym, count(*) AS n FROM $cat.gold.g5 VERSION AS OF $vPre GROUP BY sym")
-    assert(filesScanned(qTt) == 0)
+    assert(plannedFiles(qTt) == 0)
     assert(qTt.collect().map(_.getLong(1)).sum == 60L)
     t.morDeleteKeys(Seq(ts(1)).toDF("ts"), "ts")
     val qMask = spark.sql(
       s"SELECT sym, count(*) AS n FROM $cat.gold.g5 GROUP BY sym")
-    assert(filesScanned(qMask) > 0, "a live mask disables group pushdown")
+    assert(plannedFiles(qMask) > 0, "a live mask disables group pushdown")
     assert(qMask.collect().map(_.getLong(1)).sum == 39L)
   }
 
@@ -647,7 +637,7 @@ class MetadataAggSpec extends SparkSpec {
          |       min(ts) AS mn, max(uid) AS mx_uid
          |FROM $cat.gold.d1 GROUP BY year(ts), month(ts), day(ts)
          |ORDER BY y, m, d""".stripMargin)
-    assert(filesScanned(q) == 0, "time-derived group-by must not plan a scan")
+    assert(plannedFiles(q) == 0, "time-derived group-by must not plan a scan")
     val rs = q.collect()
     assert(rs.map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq ==
       Seq((2024, 1, 1), (2024, 1, 2), (2024, 2, 1)))
@@ -660,7 +650,7 @@ class MetadataAggSpec extends SparkSpec {
     val qd = spark.sql(
       s"""SELECT CAST(ts AS DATE) AS d, count(*) AS n
          |FROM $cat.gold.d1 GROUP BY CAST(ts AS DATE) ORDER BY d""".stripMargin)
-    assert(filesScanned(qd) == 0)
+    assert(plannedFiles(qd) == 0)
     assert(qd.collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSeq ==
       Seq(("2024-01-01", 20L), ("2024-01-02", 20L), ("2024-02-01", 20L)))
   }
@@ -672,14 +662,14 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, CAST(ts AS DATE) AS d, count(*) AS n
          |FROM $cat.gold.d2 GROUP BY sym, CAST(ts AS DATE)
          |ORDER BY sym, d""".stripMargin)
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     assert(q.count() == 6)
     assert(q.collect().map(_.getLong(2)).sum == 60L)
     val qR = spark.sql(
       s"""SELECT year(ts) AS y, month(ts) AS m, count(*) AS n
          |FROM $cat.gold.d2 WHERE sym = 'x'
          |GROUP BY year(ts), month(ts) ORDER BY y, m""".stripMargin)
-    assert(filesScanned(qR) == 0)
+    assert(plannedFiles(qR) == 0)
     assert(qR.collect().map(r => (r.getInt(1), r.getLong(2))).toSeq ==
       Seq((1, 20L), (2, 10L)))
   }
@@ -689,7 +679,7 @@ class MetadataAggSpec extends SparkSpec {
     mkDayTable(cat, wh, "d3")
     val q = spark.sql(
       s"SELECT hour(ts) AS h, count(*) AS n FROM $cat.gold.d3 GROUP BY hour(ts)")
-    assert(filesScanned(q) > 0, "hour is finer than the day dirs")
+    assert(plannedFiles(q) > 0, "hour is finer than the day dirs")
     assert(q.collect().map(_.getLong(1)).sum == 60L)
   }
 
@@ -702,7 +692,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT count(*) AS n FROM $cat.gold.h1
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
          |  AND ts < TIMESTAMP '2024-02-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qCover) == 0, "covering range must count from metadata alone")
+    assert(plannedFiles(qCover) == 0, "covering range must count from metadata alone")
     assert(qCover.head().getLong(0) == 40L)
     // lower bound splits Jan-01: its files straddle and scan; Jan-02
     // and Feb-01 are interior — the hybrid scans ONLY the boundary day
@@ -711,7 +701,7 @@ class MetadataAggSpec extends SparkSpec {
     val qStraddle = spark.sql(
       s"""SELECT count(*) AS n FROM $cat.gold.h1
          |WHERE ts >= TIMESTAMP '2024-01-01 00:03:00'""".stripMargin)
-    val scanned = filesScanned(qStraddle)
+    val scanned = plannedFiles(qStraddle)
     assert(scanned > 0 && scanned <= 2,
       s"only the straddling day's files may scan, got $scanned")
     val expected = (0 until 60).count(i => !dayTs(i).before(
@@ -721,14 +711,14 @@ class MetadataAggSpec extends SparkSpec {
     val qBoth = spark.sql(
       s"""SELECT count(*) AS n FROM $cat.gold.h1
          |WHERE sym = 'x' AND ts <= TIMESTAMP '2024-01-02 23:59:59'""".stripMargin)
-    assert(filesScanned(qBoth) == 0)
+    assert(plannedFiles(qBoth) == 0)
     assert(qBoth.head().getLong(0) ==
       (0 until 60).count(i => i % 2 == 0 && i % 3 != 2))
     // count + sum under a range keeps the plain scan and stays exact
     val qSum = spark.sql(
       s"""SELECT count(*) AS n, sum(uid) AS s FROM $cat.gold.h1
          |WHERE ts >= TIMESTAMP '2024-02-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qSum) > 0)
+    assert(plannedFiles(qSum) > 0)
     assert(qSum.head().getLong(0) == 20L)
   }
 
@@ -749,7 +739,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT count(*) AS n, sum(uid) AS s FROM $cat.gold.hsum
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
          |  AND ts < TIMESTAMP '2024-02-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qCover) == 0, "covering range sums must not plan a scan")
+    assert(plannedFiles(qCover) == 0, "covering range sums must not plan a scan")
     val janSum = (0 until 60).filter(_ % 3 != 2).map(100L + _).sum
     assert(qCover.head().getLong(0) == 40L && qCover.head().getLong(1) == janSum)
     // straddling range: only the split day's files scan; interior
@@ -758,7 +748,7 @@ class MetadataAggSpec extends SparkSpec {
     val qStraddle = spark.sql(
       s"""SELECT sum(uid) AS s FROM $cat.gold.hsum
          |WHERE ts >= TIMESTAMP '2024-01-01 00:03:00'""".stripMargin)
-    val scanned = filesScanned(qStraddle)
+    val scanned = plannedFiles(qStraddle)
     assert(scanned > 0 && scanned <= 4,
       s"only the straddling day's files may scan, got $scanned")
     val expected = (0 until 60).filter(i => !dayTs(i).before(cut)).map(100L + _).sum
@@ -767,7 +757,7 @@ class MetadataAggSpec extends SparkSpec {
     val qBoth = spark.sql(
       s"""SELECT sum(uid) AS s FROM $cat.gold.hsum
          |WHERE sym = 'x' AND ts <= TIMESTAMP '2024-01-02 23:59:59'""".stripMargin)
-    assert(filesScanned(qBoth) == 0)
+    assert(plannedFiles(qBoth) == 0)
     assert(qBoth.head().getLong(0) ==
       (0 until 60).filter(i => i % 2 == 0 && i % 3 != 2).map(100L + _).sum)
     // a file with NULL keys demotes to the boundary scan — its
@@ -781,7 +771,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sum(uid) AS s FROM $cat.gold.hsum
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
          |  AND ts < TIMESTAMP '2024-02-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qNk) > 0,
+    assert(plannedFiles(qNk) > 0,
       "a null-key file's rows must be re-read, not served from its sum")
     assert(qNk.head().getLong(0) == janSum + (3 until 6).map(1000L + _).sum)
     // RELAXED ANSI proof (round 17, VERDICT r16 #4): a mixed-sign
@@ -801,14 +791,14 @@ class MetadataAggSpec extends SparkSpec {
     val qMix = spark.sql(
       s"""SELECT sum(v) AS s FROM $cat.gold.hmix
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qMix) == 0,
+    assert(plannedFiles(qMix) == 0,
       "small mixed-sign interior serves under ANSI via the Σ|bounds| proof")
     assert(qMix.head().getLong(0) == mixSum)
     withSqlConf("spark.sql.ansi.enabled" -> "false") {
       val qMixL = spark.sql(
         s"""SELECT sum(v) AS s FROM $cat.gold.hmix
            |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'""".stripMargin)
-      assert(filesScanned(qMixL) == 0, "legacy range sums need no sign proof")
+      assert(plannedFiles(qMixL) == 0, "legacy range sums need no sign proof")
       assert(qMixL.head().getLong(0) == mixSum)
     }
     // ADVERSARIAL: per-file sums and the total fit a Long, but
@@ -827,7 +817,7 @@ class MetadataAggSpec extends SparkSpec {
     val qAdv = spark.sql(
       s"""SELECT sum(v) AS s FROM $cat.gold.hadv
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qAdv) > 0,
+    assert(plannedFiles(qAdv) > 0,
       "Σ|member sums| past Long range must bail the ANSI hybrid")
     assert(qAdv.head().getLong(0) == 0L)
     // AVG rides the hybrid (round 17): covering ranges serve it pure
@@ -840,7 +830,7 @@ class MetadataAggSpec extends SparkSpec {
     // the null-key rows appended above demote their files (one per sym
     // dir) to the boundary — recorded facts include predicate-failing
     // rows — so ONLY those two scan
-    val sCov = filesScanned(qAvgCover)
+    val sCov = plannedFiles(qAvgCover)
     assert(sCov > 0 && sCov <= 2, s"only the null-key files may scan, got $sCov")
     val janIdx = (0 until 60).filter(_ % 3 != 2)
     val janAll = janIdx.map(100L + _) ++ (3 until 6).map(1000L + _)
@@ -848,7 +838,7 @@ class MetadataAggSpec extends SparkSpec {
     val qAvgStraddle = spark.sql(
       s"""SELECT avg(uid) AS a FROM $cat.gold.hsum
          |WHERE ts >= TIMESTAMP '2024-01-01 00:03:00'""".stripMargin)
-    val sAvg = filesScanned(qAvgStraddle)
+    val sAvg = plannedFiles(qAvgStraddle)
     assert(sAvg > 0 && sAvg < t.currentDataFiles.size,
       s"only straddlers may scan for the hybrid avg, got $sAvg")
     // the null-key file's dated rows all sit at dayTs(0) < cut, so its
@@ -861,13 +851,13 @@ class MetadataAggSpec extends SparkSpec {
     val qSumAvg = spark.sql(
       s"""SELECT sum(uid) AS s, avg(uid) AS a FROM $cat.gold.hsum
          |WHERE ts >= TIMESTAMP '2024-01-01 00:03:00'""".stripMargin)
-    assert(filesScanned(qSumAvg) > 0 && filesScanned(qSumAvg) < t.currentDataFiles.size)
+    assert(plannedFiles(qSumAvg) > 0 && plannedFiles(qSumAvg) < t.currentDataFiles.size)
     assert(qSumAvg.head().getLong(0) == inR.sum && qSumAvg.head().getDouble(1) == expectAvg)
     // magnitudes past 2^53 bail avg even where the SUM serves
     val qAvgAdv = spark.sql(
       s"""SELECT avg(v) AS a FROM $cat.gold.hadv
          |WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qAvgAdv) > 0, "avg past the 2^53 proof must scan")
+    assert(plannedFiles(qAvgAdv) > 0, "avg past the 2^53 proof must scan")
     assert(qAvgAdv.head().getDouble(0) == 0.0)
   }
 
@@ -878,7 +868,7 @@ class MetadataAggSpec extends SparkSpec {
     val q = spark.sql(
       s"""SELECT sym, count(*) AS n FROM $cat.gold.h3
          |WHERE ts >= TIMESTAMP '2024-01-02 00:00:00' GROUP BY sym""".stripMargin)
-    assert(filesScanned(q) == 0, "aligned grouped range must not plan a scan")
+    assert(plannedFiles(q) == 0, "aligned grouped range must not plan a scan")
     assert(q.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("x" -> 20L, "y" -> 20L))
     // time-derived grouping composes with the range too
@@ -886,14 +876,14 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT CAST(ts AS DATE) AS d, count(*) AS n FROM $cat.gold.h3
          |WHERE ts >= TIMESTAMP '2024-01-02 00:00:00'
          |GROUP BY CAST(ts AS DATE) ORDER BY d""".stripMargin)
-    assert(filesScanned(qT) == 0)
+    assert(plannedFiles(qT) == 0)
     assert(qT.collect().map(_.getLong(1)).toSeq == Seq(20L, 20L))
     // a bound splitting a file's span falls back to the scan, exact
     val lo = Timestamp.valueOf("2024-01-02 00:05:00")
     val qS = spark.sql(
       s"""SELECT sym, count(*) AS n FROM $cat.gold.h3
          |WHERE ts >= TIMESTAMP '$lo' GROUP BY sym""".stripMargin)
-    assert(filesScanned(qS) > 0, "a straddling file bails the grouped range")
+    assert(plannedFiles(qS) > 0, "a straddling file bails the grouped range")
     val expected = (0 until 60).filterNot(i => dayTs(i).before(lo))
       .groupBy(i => if (i % 2 == 0) "x" else "y").view.mapValues(_.size.toLong).toMap
     assert(qS.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expected)
@@ -926,7 +916,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, count(*) AS n, sum(uid) AS s FROM $cat.gold.ghs
          |WHERE ts >= TIMESTAMP '2024-01-02 00:00:00' GROUP BY sym
          |ORDER BY sym""".stripMargin)
-    assert(filesScanned(qCover) == 0, "aligned grouped range sums must not scan")
+    assert(plannedFiles(qCover) == 0, "aligned grouped range sums must not scan")
     val d23 = (0 until 60).filter(i => i % 3 != 0) // days 2 and 3
     def expect(rows: Seq[Int], sym: String): (Long, Long) = {
       val mine = rows.filter(i => (if (i % 2 == 0) "x" else "y") == sym)
@@ -943,7 +933,7 @@ class MetadataAggSpec extends SparkSpec {
     val qH = spark.sql(
       s"""SELECT sym, count(*) AS n, sum(uid) AS s FROM $cat.gold.ghs
          |WHERE ts >= TIMESTAMP '$cut' GROUP BY sym ORDER BY sym""".stripMargin)
-    val scanned = filesScanned(qH)
+    val scanned = plannedFiles(qH)
     assert(scanned > 0 && scanned < total,
       s"only straddlers may scan: $scanned of $total")
     val inRange = (0 until 60).filter(i => !dayTs(i).before(cut))
@@ -962,7 +952,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT CAST(ts AS DATE) AS d, count(*) AS n, sum(uid) AS s
          |FROM $cat.gold.ghs WHERE ts >= TIMESTAMP '$cut'
          |GROUP BY CAST(ts AS DATE) ORDER BY d""".stripMargin)
-    assert(filesScanned(qT) > 0 && filesScanned(qT) < total)
+    assert(plannedFiles(qT) > 0 && plannedFiles(qT) < total)
     val byDay = (inRange.map(i => (dayTs(i).toLocalDateTime.toLocalDate.toString,
       1L, 100L + i)) ++ Seq(("2024-01-02", 1L, 5000L),
       ("2024-01-01", 1L, 6001L)))
@@ -1004,7 +994,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, count(*) AS n, sum(uid) AS s FROM $cat.gold.ghr
          |WHERE sym IN ('x', 'z') AND ts >= TIMESTAMP '$cut'
          |GROUP BY sym ORDER BY sym""".stripMargin)
-    val scanned = filesScanned(q)
+    val scanned = plannedFiles(q)
     assert(scanned > 0 && scanned < total / 2,
       s"only the restricted straddlers may scan: $scanned of $total")
     val inRange = (0 until 60).filter(i => !dayTs(i).before(cut))
@@ -1020,7 +1010,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, sum(uid) AS s FROM $cat.gold.ghr
          |WHERE sym = 'y' AND ts >= TIMESTAMP '2024-01-02 00:00:00'
          |GROUP BY sym""".stripMargin)
-    assert(filesScanned(qC) == 0, "restricted aligned grouped sums must not scan")
+    assert(plannedFiles(qC) == 0, "restricted aligned grouped sums must not scan")
     val d23y = (0 until 60).filter(i => i % 3 != 0 && i % 4 == 1)
     assert(qC.head().getLong(1) == d23y.map(100L + _).sum)
   }
@@ -1034,7 +1024,7 @@ class MetadataAggSpec extends SparkSpec {
     val qc = spark.sql(
       s"""SELECT unix_micros(max(ts)) AS mx, count(*) AS n FROM $cat.gold.h4
          |WHERE ts < TIMESTAMP '2024-02-01 00:00:00'""".stripMargin)
-    assert(filesScanned(qc) == 0)
+    assert(plannedFiles(qc) == 0)
     val rc = qc.head()
     assert(rc.getLong(0) == janRows.map(i => dayTs(i).getTime * 1000L).max)
     assert(rc.getLong(1) == 40L)
@@ -1045,7 +1035,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT unix_micros(min(ts)) AS mn, unix_micros(max(ts)) AS mx,
          |       count(*) AS n
          |FROM $cat.gold.h4 WHERE ts >= TIMESTAMP '$lo'""".stripMargin)
-    val scanned = filesScanned(qs)
+    val scanned = plannedFiles(qs)
     assert(scanned > 0 && scanned <= 2)
     val inRange = (0 until 60).filter(i => !dayTs(i).before(lo))
     val rs = qs.head()
@@ -1057,7 +1047,7 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT sym, unix_micros(max(ts)) AS mx, count(*) AS n
          |FROM $cat.gold.h4 WHERE ts >= TIMESTAMP '2024-01-02 00:00:00'
          |GROUP BY sym ORDER BY sym""".stripMargin)
-    assert(filesScanned(qg) == 0)
+    assert(plannedFiles(qg) == 0)
     val exp = (0 until 60).filter(i => i % 3 != 0)
       .groupBy(i => if (i % 2 == 0) "x" else "y").view
       .mapValues(is => (is.map(i => dayTs(i).getTime * 1000L).max, is.size.toLong))
@@ -1091,24 +1081,24 @@ class MetadataAggSpec extends SparkSpec {
       s"""SELECT count(*) AS n, count(opt) AS n_opt,
          |       min(ts) AS mn_ts, max(uid) AS mx_uid
          |FROM $cat.gold.f1 WHERE sym = 'a:b'""".stripMargin)
-    assert(filesScanned(q) == 0, "identity equality subsets files EXACTLY")
+    assert(plannedFiles(q) == 0, "identity equality subsets files EXACTLY")
     val r = q.head()
     assert(r.getLong(0) == 20L && r.getLong(1) == 10L)
     assert(r.getTimestamp(2) == ts(1) && r.getLong(3) == 158L)
     val qIn = spark.sql(
       s"SELECT count(*) AS n FROM $cat.gold.f1 WHERE sym IN ('alpha', 'z')")
-    assert(filesScanned(qIn) == 0)
+    assert(plannedFiles(qIn) == 0)
     assert(qIn.head().getLong(0) == 40L)
     // grouped + restricted composes
     val qG = spark.sql(
       s"""SELECT sym, count(*) AS n FROM $cat.gold.f1
          |WHERE sym IN ('alpha', 'z') GROUP BY sym""".stripMargin)
-    assert(filesScanned(qG) == 0)
+    assert(plannedFiles(qG) == 0)
     assert(qG.collect().map(r2 => r2.getString(0) -> r2.getLong(1)).toMap ==
       Map("alpha" -> 20L, "z" -> 20L))
     // a value matching no dir answers 0 without a scan
     val q0 = spark.sql(s"SELECT count(*) AS n FROM $cat.gold.f1 WHERE sym = 'nope'")
-    assert(filesScanned(q0) == 0)
+    assert(plannedFiles(q0) == 0)
     assert(q0.head().getLong(0) == 0L)
   }
 
@@ -1117,7 +1107,7 @@ class MetadataAggSpec extends SparkSpec {
     mkIdTable(cat, wh, "f3")
     val q = spark.sql(
       s"SELECT DISTINCT sym FROM $cat.gold.f3 WHERE sym IN ('a:b', 'z', 'nope')")
-    assert(filesScanned(q) == 0)
+    assert(plannedFiles(q) == 0)
     assert(q.collect().map(_.getString(0)).sorted.toSeq == Seq("a:b", "z"))
   }
 
@@ -1126,11 +1116,11 @@ class MetadataAggSpec extends SparkSpec {
     mkIdTable(cat, wh, "f2")
     val q1 = spark.sql(
       s"SELECT count(*) AS n FROM $cat.gold.f2 WHERE sym = 'z' AND uid > 140")
-    assert(filesScanned(q1) > 0, "the uid conjunct is not an identity restriction")
+    assert(plannedFiles(q1) > 0, "the uid conjunct is not an identity restriction")
     assert(q1.head().getLong(0) == (0 until 60).count(i => i % 3 == 2 && 100 + i > 140))
     val q2 = spark.sql(
       s"SELECT count(*) AS n FROM $cat.gold.f2 WHERE sym != 'z'")
-    assert(filesScanned(q2) > 0, "negation is not a finite identity set")
+    assert(plannedFiles(q2) > 0, "negation is not a finite identity set")
     assert(q2.head().getLong(0) == 40L)
   }
 
@@ -1163,19 +1153,19 @@ class MetadataAggSpec extends SparkSpec {
     // ANSI (the session default): proven columns answer from metadata
     val q = spark.sql(
       s"SELECT sum(uid) AS su, sum(opt) AS so FROM $cat.gold.tsum")
-    assert(filesScanned(q) == 0, "proven sums must not plan a scan")
+    assert(plannedFiles(q) == 0, "proven sums must not plan a scan")
     assert(q.head().getLong(0) == (0 until 60).map(100L + _).sum)
     assert(q.head().getLong(1) == (0 until 60 by 2).map(100L + _).sum)
     // small mixed-sign serves under ANSI now — and stays exact
     val qNeg = spark.sql(s"SELECT sum(neg) AS sn FROM $cat.gold.tsum")
-    assert(filesScanned(qNeg) == 0,
+    assert(plannedFiles(qNeg) == 0,
       "small mixed-sign ANSI sums serve via the Σ|bounds| proof")
     assert(qNeg.head().getLong(0) == (0 until 60).map(_.toLong - 30L).sum)
     // LEGACY mode needs no proof: wrapped arithmetic is associative,
     // and the exact Long-fitting total IS the wrapped answer
     withSqlConf("spark.sql.ansi.enabled" -> "false") {
       val qL = spark.sql(s"SELECT sum(neg) AS sn FROM $cat.gold.tsum")
-      assert(filesScanned(qL) == 0, "legacy sums serve without the sign proof")
+      assert(plannedFiles(qL) == 0, "legacy sums serve without the sign proof")
       assert(qL.head().getLong(0) == (0 until 60).map(_.toLong - 30L).sum)
     }
     // ADVERSARIAL mixed-sign: per-file sums and the total fit a Long
@@ -1195,27 +1185,27 @@ class MetadataAggSpec extends SparkSpec {
       "Σ|member sums| past Long range must not prove")
     assert(!infoAdv.colAbsSums.contains("v"))
     val qAdv = spark.sql(s"SELECT sum(v) AS sv FROM $cat.gold.tadv")
-    assert(filesScanned(qAdv) > 0, "unprovable ANSI sums must scan")
+    assert(plannedFiles(qAdv) > 0, "unprovable ANSI sums must scan")
     assert(qAdv.head().getLong(0) == 0L)
     withSqlConf("spark.sql.ansi.enabled" -> "false") {
       val qAdvL = spark.sql(s"SELECT sum(v) AS sv FROM $cat.gold.tadv")
-      assert(filesScanned(qAdvL) == 0)
+      assert(plannedFiles(qAdvL) == 0)
       assert(qAdvL.head().getLong(0) == 0L)
     }
     // sum(DISTINCT) and double sums never serve
     val qD = spark.sql(s"SELECT sum(DISTINCT uid) AS sd FROM $cat.gold.tsum")
-    assert(filesScanned(qD) > 0)
+    assert(plannedFiles(qD) > 0)
     assert(qD.head().getLong(0) == (0 until 60).map(100L + _).sum)
     // the DataFrame spelling reaches the same rewrite (the bare
     // relation stays unexpanded at analysis)
     val qDf = spark.table(s"$cat.gold.tsum").agg(sum("uid").as("su"))
-    assert(filesScanned(qDf) == 0, "df.agg(sum) must serve from metadata")
+    assert(plannedFiles(qDf) == 0, "df.agg(sum) must serve from metadata")
     assert(qDf.head().getLong(0) == (0 until 60).map(100L + _).sum)
     // and time travel serves from the pinned snapshot's own roll-ups
     val vNow = t.metadata.currentSnapshotId.get
     val qTt = spark.sql(
       s"SELECT sum(uid) AS su FROM $cat.gold.tsum VERSION AS OF $vNow")
-    assert(filesScanned(qTt) == 0, "pinned sums serve from the pinned refs")
+    assert(plannedFiles(qTt) == 0, "pinned sums serve from the pinned refs")
     assert(qTt.head().getLong(0) == (0 until 60).map(100L + _).sum)
   }
 
@@ -1235,13 +1225,13 @@ class MetadataAggSpec extends SparkSpec {
       data.filter(pmod(col("uid"), lit(4)) === r).coalesce(1)))
     val q = spark.sql(
       s"SELECT avg(uid) AS au, avg(opt) AS ao FROM $cat.gold.tavg")
-    assert(filesScanned(q) == 0, "proven avg must not plan a scan")
+    assert(plannedFiles(q) == 0, "proven avg must not plan a scan")
     val expectedAu = (0 until 60).map(100L + _).sum.toDouble / 60.0
     val expectedAo = (0 until 60 by 2).map(100L + _).sum.toDouble / 30.0
     assert(q.head().getDouble(0) == expectedAu && q.head().getDouble(1) == expectedAo)
     // the DataFrame spelling and the DSv2 surface serve it too
     val qDf = spark.table(s"$cat.gold.tavg").agg(avg("uid").as("a"))
-    assert(filesScanned(qDf) == 0 && qDf.head().getDouble(0) == expectedAu)
+    assert(plannedFiles(qDf) == 0 && qDf.head().getDouble(0) == expectedAu)
     // magnitudes past 2^53 (but Long-fitting, sign-uniform): SUM still
     // serves under ANSI, avg must BAIL — double accumulation order
     // could change low bits, so the metadata answer is not provably
@@ -1254,10 +1244,10 @@ class MetadataAggSpec extends SparkSpec {
     ta.setProperty("write.sum-columns", "v")
     (0 until 4).foreach(i => ta.append(adv.filter(col("ts") === ts(i)).coalesce(1)))
     val qSum = spark.sql(s"SELECT sum(v) AS sv FROM $cat.gold.tavg2")
-    assert(filesScanned(qSum) == 0, "the Long-fitting sum still serves")
+    assert(plannedFiles(qSum) == 0, "the Long-fitting sum still serves")
     assert(qSum.head().getLong(0) == 4L * big)
     val qAvg = spark.sql(s"SELECT avg(v) AS av FROM $cat.gold.tavg2")
-    assert(filesScanned(qAvg) > 0, "avg past the 2^53 proof must scan")
+    assert(plannedFiles(qAvg) > 0, "avg past the 2^53 proof must scan")
     assert(qAvg.head().getDouble(0) == big.toDouble)
     // all-null avg is a typed NULL without a scan
     val nul = (0 until 8).map(i => (ts(i), None: Option[Long])).toDF("ts", "o")
@@ -1267,7 +1257,7 @@ class MetadataAggSpec extends SparkSpec {
     tn.setProperty("write.sum-columns", "o")
     tn.append(nul.coalesce(1))
     val qN = spark.sql(s"SELECT avg(o) AS ao FROM $cat.gold.tavg3")
-    assert(filesScanned(qN) == 0)
+    assert(plannedFiles(qN) == 0)
     assert(qN.head().isNullAt(0))
   }
 
@@ -1282,13 +1272,13 @@ class MetadataAggSpec extends SparkSpec {
       data.filter(pmod(col("uid"), lit(4)) === r).coalesce(1)))
     spark.sql(s"DELETE FROM $cat.gold.tsum2 WHERE uid >= 150")
     val q = spark.sql(s"SELECT sum(uid) AS su FROM $cat.gold.tsum2")
-    assert(filesScanned(q) == 0,
+    assert(plannedFiles(q) == 0,
       "COW-rewritten survivors re-earn their sums at write")
     assert(q.head().getLong(0) == (100L until 150L).sum)
     // a live MoR mask disables the whole info (nothing provable)
     t.morDeleteKeys(Seq(ts(3)).toDF("ts"), "ts")
     val qM = spark.sql(s"SELECT sum(uid) AS su FROM $cat.gold.tsum2")
-    assert(filesScanned(qM) > 0)
+    assert(plannedFiles(qM) > 0)
     assert(qM.head().getLong(0) == (100L until 150L).sum - 103L)
   }
 
@@ -1308,7 +1298,7 @@ class MetadataAggSpec extends SparkSpec {
     (0 until 2).foreach(r => t.append(data.filter(pmod(col("uid"), lit(2)) === r)))
     val q = spark.sql(
       s"SELECT sum(uid) AS su FROM $cat.gold.tsum3 WHERE sym = 'A'")
-    assert(filesScanned(q) == 0, "restricted sums must serve from the subset's entries")
+    assert(plannedFiles(q) == 0, "restricted sums must serve from the subset's entries")
     assert(q.head().getLong(0) == (0 until 60 by 2).map(100L + _).sum)
     // an addFiles IMPORT never carries sums (no data pages are read) —
     // sum bails; a native compaction rewrite earns them
@@ -1325,11 +1315,11 @@ class MetadataAggSpec extends SparkSpec {
     assert(t2.metadataAggInfo().get.colSums.isEmpty,
       "imports must not fabricate sums")
     val qI = spark.sql(s"SELECT sum(uid) AS su FROM $cat.gold.tsum4")
-    assert(filesScanned(qI) > 0, "sum over an import must scan")
+    assert(plannedFiles(qI) > 0, "sum over an import must scan")
     assert(qI.head().getLong(0) == (0 until 20).map(100L + _).sum)
     t2.compact()
     val qC = spark.sql(s"SELECT sum(uid) AS su FROM $cat.gold.tsum4")
-    assert(filesScanned(qC) == 0,
+    assert(plannedFiles(qC) == 0,
       "compaction rewrites natively and earns the per-file sums")
     assert(qC.head().getLong(0) == (0 until 20).map(100L + _).sum)
   }
@@ -1401,7 +1391,7 @@ class MetadataAggSpec extends SparkSpec {
       assert(jobs == 0, s"$what: the served answer started $jobs Spark job(s)")
       val scanned = withSqlConf("spark.graft.sql.metadata-aggregates" -> "false") {
         val plain = spark.sql(sql)
-        assert(filesScanned(plain) > 0, s"$what: the switched-off plan must scan")
+        assert(plannedFiles(plain) > 0, s"$what: the switched-off plan must scan")
         plain.collect().toSeq
       }
       assert(rows.map(_.toString).sorted == scanned.map(_.toString).sorted,

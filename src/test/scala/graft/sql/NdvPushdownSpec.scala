@@ -3,9 +3,6 @@ package graft.sql
 import graft.SparkSpec
 import graft.lake.{LakehouseTable, NdvSketch}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -34,14 +31,6 @@ class NdvPushdownSpec extends SparkSpec {
     (cat, wh)
   }
 
-  private def filesScanned(df: DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
 
   /** The same query through the normal scan expansion — the truth the
     * metadata answer must equal bit-for-bit.
@@ -50,7 +39,7 @@ class NdvPushdownSpec extends SparkSpec {
     spark.conf.set("spark.graft.sql.metadata-aggregates", "false")
     try {
       val q = spark.sql(sql)
-      assert(filesScanned(q) > 0, "truth leg must actually scan")
+      assert(plannedFiles(q) > 0, "truth leg must actually scan")
       q.head()
     } finally spark.conf.unset("spark.graft.sql.metadata-aggregates")
   }
@@ -91,7 +80,7 @@ class NdvPushdownSpec extends SparkSpec {
          |       approx_count_distinct(amt) AS amt_ndv
          |FROM $cat.gold.t1""".stripMargin
     val q = spark.sql(sql)
-    assert(filesScanned(q) == 0, "declared ndv columns must not plan a scan")
+    assert(plannedFiles(q) == 0, "declared ndv columns must not plan a scan")
     val served = q.head()
     val truth = scanTruth(sql)
     (0 until 5).foreach(i => assert(served.getLong(i) == truth.getLong(i),
@@ -102,11 +91,11 @@ class NdvPushdownSpec extends SparkSpec {
     // stays unexpanded for later passes — round 16 machinery)
     val dfQ = spark.table(s"$cat.gold.t1")
       .agg(approx_count_distinct($"uid").as("v"))
-    assert(filesScanned(dfQ) == 0, "DataFrame agg chain must not plan a scan")
+    assert(plannedFiles(dfQ) == 0, "DataFrame agg chain must not plan a scan")
     assert(dfQ.head().getLong(0) == served.getLong(0))
     val dfG = spark.table(s"$cat.gold.t1")
       .groupBy(year($"ts").as("y")).agg(approx_count_distinct($"s").as("v"))
-    assert(filesScanned(dfG) == 0,
+    assert(plannedFiles(dfG) == 0,
       "grouped DataFrame ndv over a time-derived dim must not plan a scan")
     assert(dfG.head().getLong(1) == served.getLong(1))
   }
@@ -116,20 +105,20 @@ class NdvPushdownSpec extends SparkSpec {
     mkTable(cat, wh, "t2")
     // ts is not declared → scan; answer still right
     val q1 = spark.sql(s"SELECT approx_count_distinct(ts) AS v FROM $cat.gold.t2")
-    assert(filesScanned(q1) > 0, "undeclared column must scan")
+    assert(plannedFiles(q1) > 0, "undeclared column must scan")
     assert(q1.head().getLong(0) ==
       scanTruth(s"SELECT approx_count_distinct(ts) AS v FROM $cat.gold.t2").getLong(0))
     // non-default rsd → different register precision → the recorded
     // sketches are not the query's registers → scan
     val q2 = spark.sql(
       s"SELECT approx_count_distinct(uid, 0.01) AS v FROM $cat.gold.t2")
-    assert(filesScanned(q2) > 0, "precision mismatch must scan")
+    assert(plannedFiles(q2) > 0, "precision mismatch must scan")
     assert(q2.head().getLong(0) ==
       scanTruth(s"SELECT approx_count_distinct(uid, 0.01) AS v FROM $cat.gold.t2").getLong(0))
     // matching EXPLICIT rsd (0.05 = the recorded default) serves
     val q3 = spark.sql(
       s"SELECT approx_count_distinct(uid, 0.05) AS v FROM $cat.gold.t2")
-    assert(filesScanned(q3) == 0, "explicit matching rsd serves")
+    assert(plannedFiles(q3) == 0, "explicit matching rsd serves")
   }
 
   test("grouped and identity-restricted approx_count_distinct serve per group") {
@@ -146,7 +135,7 @@ class NdvPushdownSpec extends SparkSpec {
       s"""SELECT sym, approx_count_distinct(uid) AS v
          |FROM $cat.gold.t3 GROUP BY sym ORDER BY sym""".stripMargin
     val qG = spark.sql(sqlG)
-    assert(filesScanned(qG) == 0, "grouped ndv must not plan a scan")
+    assert(plannedFiles(qG) == 0, "grouped ndv must not plan a scan")
     val servedG = qG.collect().map(r => (r.getString(0), r.getLong(1)))
     spark.conf.set("spark.graft.sql.metadata-aggregates", "false")
     val truthG =
@@ -157,14 +146,14 @@ class NdvPushdownSpec extends SparkSpec {
     val sqlR =
       s"SELECT approx_count_distinct(uid) AS v FROM $cat.gold.t3 WHERE sym = 's1'"
     val qR = spark.sql(sqlR)
-    assert(filesScanned(qR) == 0, "identity-restricted ndv must not plan a scan")
+    assert(plannedFiles(qR) == 0, "identity-restricted ndv must not plan a scan")
     assert(qR.head().getLong(0) == scanTruth(sqlR).getLong(0))
     // a TIME range cannot serve (a straddling file's sketch covers
     // excluded rows) — bails to an equal scan
     val sqlT = s"SELECT approx_count_distinct(uid) AS v FROM $cat.gold.t3 " +
       "WHERE ts >= TIMESTAMP '2024-01-01 00:00:00.030'"
     val qT = spark.sql(sqlT)
-    assert(filesScanned(qT) > 0, "range-restricted ndv must scan")
+    assert(plannedFiles(qT) > 0, "range-restricted ndv must scan")
     assert(qT.head().getLong(0) == scanTruth(sqlT).getLong(0))
   }
 
@@ -196,7 +185,7 @@ class NdvPushdownSpec extends SparkSpec {
     val sqlCov = s"SELECT sym, count(*) AS n, approx_count_distinct(uid) AS v " +
       s"FROM $cat.gold.t11 WHERE ts >= ${tsLit(mnUs)} GROUP BY sym ORDER BY sym"
     val qCov = spark.sql(sqlCov)
-    assert(filesScanned(qCov) == 0, "covering grouped range ndv must be interior-only")
+    assert(plannedFiles(qCov) == 0, "covering grouped range ndv must be interior-only")
     val served = collectG(sqlCov)
     spark.conf.set("spark.graft.sql.metadata-aggregates", "false")
     val truth = try collectG(sqlCov)
@@ -208,7 +197,7 @@ class NdvPushdownSpec extends SparkSpec {
     val sqlHyb = s"SELECT sym, count(*) AS n, approx_count_distinct(uid) AS v " +
       s"FROM $cat.gold.t11 WHERE ts >= ${tsLit(mnUs + 1)} GROUP BY sym ORDER BY sym"
     val qHyb = spark.sql(sqlHyb)
-    val scanned = filesScanned(qHyb)
+    val scanned = plannedFiles(qHyb)
     assert(scanned > 0 && scanned < nFiles,
       s"grouped hybrid must scan only straddlers, scanned $scanned of $nFiles")
     val servedH = collectG(sqlHyb)
@@ -236,14 +225,14 @@ class NdvPushdownSpec extends SparkSpec {
     val sqlCover = s"SELECT approx_count_distinct(uid) AS v FROM $cat.gold.t9 " +
       s"WHERE ts >= ${tsLit(mnUs)}"
     val qC = spark.sql(sqlCover)
-    assert(filesScanned(qC) == 0, "covering-range ndv must be interior-only")
+    assert(plannedFiles(qC) == 0, "covering-range ndv must be interior-only")
     assert(qC.head().getLong(0) == scanTruth(sqlCover).getLong(0))
     // one µs in: the min-bounded file straddles — the hybrid scans ONLY
     // it and unions its registers with the interiors'
     val sqlH = s"SELECT approx_count_distinct(uid) AS v FROM $cat.gold.t9 " +
       s"WHERE ts >= ${tsLit(mnUs + 1)}"
     val qH = spark.sql(sqlH)
-    val scanned = filesScanned(qH)
+    val scanned = plannedFiles(qH)
     assert(scanned > 0 && scanned < nFiles,
       s"hybrid must scan only the straddlers, scanned $scanned of $nFiles")
     assert(qH.head().getLong(0) == scanTruth(sqlH).getLong(0),
@@ -252,7 +241,7 @@ class NdvPushdownSpec extends SparkSpec {
     val sqlMix = s"SELECT count(*) AS n, approx_count_distinct(s) AS v " +
       s"FROM $cat.gold.t9 WHERE ts >= ${tsLit(mnUs + 1)}"
     val qM = spark.sql(sqlMix)
-    assert(filesScanned(qM) < nFiles)
+    assert(plannedFiles(qM) < nFiles)
     val truthM = scanTruth(sqlMix)
     assert(qM.head().getLong(0) == truthM.getLong(0) &&
       qM.head().getLong(1) == truthM.getLong(1))
@@ -271,17 +260,17 @@ class NdvPushdownSpec extends SparkSpec {
     t.addFiles(staged)
     val sql = s"SELECT approx_count_distinct(uid) AS v FROM $cat.gold.t4"
     val q1 = spark.sql(sql)
-    assert(filesScanned(q1) > 0, "a sketch-less import must bail the fold")
+    assert(plannedFiles(q1) > 0, "a sketch-less import must bail the fold")
     assert(q1.head().getLong(0) == scanTruth(sql).getLong(0))
     // compaction is a native write — sketches re-earn
     t.compact()
     val q2 = spark.sql(sql)
-    assert(filesScanned(q2) == 0, "compaction re-earns the sketches")
+    assert(plannedFiles(q2) == 0, "compaction re-earns the sketches")
     assert(q2.head().getLong(0) == scanTruth(sql).getLong(0))
     // a live merge-on-read mask removes rows no sketch can subtract
     t.morDeleteKeys(Seq(101L).toDF("uid"), "uid")
     val q3 = spark.sql(sql)
-    assert(filesScanned(q3) > 0, "live MoR masks must bail")
+    assert(plannedFiles(q3) > 0, "live MoR masks must bail")
     assert(q3.head().getLong(0) == scanTruth(sql).getLong(0))
   }
 
@@ -292,25 +281,25 @@ class NdvPushdownSpec extends SparkSpec {
       spark, new Path(wh, "gold/t5"), data.schema, Some("ts"))
     t.setProperty("write.ndv-columns", "v")
     t.append(data)
-    assert(filesScanned(spark.sql(
+    assert(plannedFiles(spark.sql(
       s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t5")) == 0)
     // the recorded sketch hashed INT values; the widened scan hashes
     // LONG values — the type tag must refuse, the scan must answer
     t.widenColumn("v", org.apache.spark.sql.types.LongType)
     val sql = s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t5"
     val q = spark.sql(sql)
-    assert(filesScanned(q) > 0, "stale-typed sketches must not serve a widened column")
+    assert(plannedFiles(q) > 0, "stale-typed sketches must not serve a widened column")
     assert(q.head().getLong(0) == scanTruth(sql).getLong(0))
     // compaction rewrites at the widened type — serves again
     t.compact()
     val q2 = spark.sql(sql)
-    assert(filesScanned(q2) == 0, "compaction re-records at the widened type")
+    assert(plannedFiles(q2) == 0, "compaction re-records at the widened type")
     assert(q2.head().getLong(0) == scanTruth(sql).getLong(0))
     // rename: recorded under the historical physical name → bail
     t.renameColumn("v", "w")
     val sqlR = s"SELECT approx_count_distinct(w) AS v FROM $cat.gold.t5"
     val qR = spark.sql(sqlR)
-    assert(filesScanned(qR) > 0, "renamed columns must bail")
+    assert(plannedFiles(qR) > 0, "renamed columns must bail")
     assert(qR.head().getLong(0) == scanTruth(sqlR).getLong(0))
   }
 
@@ -321,11 +310,11 @@ class NdvPushdownSpec extends SparkSpec {
       spark, new Path(wh, "gold/t6"), data.schema, Some("ts"))
     t.setProperty("write.ndv-columns", "v")
     val qEmpty = spark.sql(s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t6")
-    assert(filesScanned(qEmpty) == 0 && qEmpty.head().getLong(0) == 0L,
+    assert(plannedFiles(qEmpty) == 0 && qEmpty.head().getLong(0) == 0L,
       "empty table serves 0 without a scan")
     t.append(data) // all-null file: the sketch is the all-zero identity
     val q = spark.sql(s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t6")
-    assert(filesScanned(q) == 0 && q.head().getLong(0) == 0L,
+    assert(plannedFiles(q) == 0 && q.head().getLong(0) == 0L,
       "an all-null column's merged sketch estimates 0")
     assert(t.currentDataFiles.forall(_.colNdv.exists(_.contains("v"))),
       "every native file records a sketch, the all-null one included")
@@ -342,10 +331,10 @@ class NdvPushdownSpec extends SparkSpec {
     t.append(data2)
     val q = spark.sql(
       s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t7 VERSION AS OF ${s1.id}")
-    assert(filesScanned(q) == 0, "time travel still answers from metadata")
+    assert(plannedFiles(q) == 0, "time travel still answers from metadata")
     assert(q.head().getLong(0) == 5L)
     val qNow = spark.sql(s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t7")
-    assert(filesScanned(qNow) == 0 && qNow.head().getLong(0) == 12L)
+    assert(plannedFiles(qNow) == 0 && qNow.head().getLong(0) == 12L)
   }
 
   test("property split-merge parity: merged file sketches equal the one-shot aggregate") {
@@ -412,10 +401,10 @@ class NdvPushdownSpec extends SparkSpec {
     // the matching-rsd query serves; the bare default bails to a scan
     val sqlAt = s"SELECT approx_count_distinct(v, 0.02) AS v FROM $cat.gold.t10"
     val qAt = spark.sql(sqlAt)
-    assert(filesScanned(qAt) == 0, "the declared-rsd query must serve")
+    assert(plannedFiles(qAt) == 0, "the declared-rsd query must serve")
     assert(qAt.head().getLong(0) == scanTruth(sqlAt).getLong(0))
     val qDef = spark.sql(s"SELECT approx_count_distinct(v) AS v FROM $cat.gold.t10")
-    assert(filesScanned(qDef) > 0, "the default-rsd query records nothing to serve")
+    assert(plannedFiles(qDef) > 0, "the default-rsd query records nothing to serve")
     // coverage judges against the DECLARED precision (review r18)
     val cov = spark.sql(
       s"SELECT servable, ndv_estimate, reason FROM $cat.gold.t10.ndv_coverage").head()

@@ -3,8 +3,6 @@ package graft.sql
 import graft.SparkSpec
 import graft.lake.LakehouseTable
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -31,14 +29,7 @@ class SqlPointSkipSpec extends SparkSpec {
     (cat, wh)
   }
 
-  private def filesScanned(sql: String): Int = {
-    val plan = spark.sql(sql).queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect { case f: FileSourceScanExec => f }
-      .map(_.relation.location.inputFiles.length).sum
-  }
+  private def filesScanned(sql: String): Int = plannedFiles(spark.sql(sql))
 
   private val baseUs = Timestamp.valueOf("2024-01-01 00:00:00").getTime * 1000L
 
