@@ -66,7 +66,6 @@ class FbColsBackfillSpec extends SparkSpec {
         if (r == 3) null else f"u$u%08d", u.toLong)
     }.toDF("ts", "uid_s", "uid").coalesce(1)
 
-
   test("rewrite backfills bounds, null counts, and the bloom proof in one footer pass") {
     val t = LakehouseTable.createIfNotExists(
       spark, new Path(tmpDir("fbc3"), "t"), residueS(0).schema, Some("ts"))

@@ -74,7 +74,6 @@ class NullStatsSpec extends SparkSpec {
     assert(notNulls.count() == 40 && notNulls.filter(col("uid").isNotNull).count() == 40)
   }
 
-
   test("nullness dims compose with point dims and with time travel") {
     // two files with fully INTERLEAVED ts ranges (even µs in file A,
     // odd in file B); file B's uid is all-null — ts bounds keep both

@@ -55,7 +55,6 @@ class SecondaryRangeSpec extends SparkSpec {
     t
   }
 
-
   test("range reads prune manifests unopened and lose no rows") {
     val t = mkTable("sr-e2e")
     SnapshotLog.clearPlanningCache()

@@ -131,7 +131,6 @@ class StringSkipSpec extends SparkSpec {
     t
   }
 
-
   test("string point reads skip bloom-excluded files with zero false negatives") {
     for (sidecar <- Seq(false, true)) {
       val t = mkTable(s"ss-e2e-$sidecar", sidecar)

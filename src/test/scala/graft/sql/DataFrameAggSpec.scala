@@ -32,7 +32,6 @@ class DataFrameAggSpec extends SparkSpec {
     (cat, wh)
   }
 
-
   private def ts(i: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:00:${i / 60}%02d.${(i % 60) * 1000}%06d")
 

@@ -33,7 +33,6 @@ class MetadataAggSpec extends SparkSpec {
     (cat, wh)
   }
 
-
   private def ts(i: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 00:00:${i / 60}%02d.${(i % 60) * 1000}%06d")
 

@@ -31,7 +31,6 @@ class NdvPushdownSpec extends SparkSpec {
     (cat, wh)
   }
 
-
   /** The same query through the normal scan expansion — the truth the
     * metadata answer must equal bit-for-bit.
     */
