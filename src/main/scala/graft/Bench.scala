@@ -216,10 +216,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     if (sys.env.contains("SPARK_GRAFT_CANARY_PROBE")) { canaryProbe(); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Tables.cpus(32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // testdata parquet stores naive timestamp[us]; read it as TIMESTAMP

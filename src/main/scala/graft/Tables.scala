@@ -35,13 +35,12 @@ object Tables {
   /** Build a SparkSession with the engine's default tuning. Used by our
     * own mains (Bench) and tests; Verify's session is driver-owned.
     */
-  def session(appName: String, master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def session(appName: String, master: String = s"local[${cpus(32)}]"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus(32).toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -51,4 +50,17 @@ object Tables {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The local master's thread count: `$SPARK_GRAFT_CPUS`, or `default`
+    * when it is unset. A value that is not a positive integer fails
+    * here, naming the variable, rather than reaching Spark as
+    * `local[abc]`.
+    */
+  def cpus(default: Int): Int = cpus(sys.env.get(CpusVar), default)
+
+  private[graft] val CpusVar = "SPARK_GRAFT_CPUS"
+
+  private[graft] def cpus(value: Option[String], default: Int): Int =
+    value.fold(default)(v => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$CpusVar must be a positive integer, got '$v'")))
 }

@@ -22,6 +22,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // a point lookup whose scan is one task reads on the driver, with
     // no Spark job (see graft.sql.InlinePointRead)
     ext.injectPreCBORule(session => graft.sql.InlinePointRead(session))
+    // a scan Spark packs into one task plans as one stage, with no
+    // exchange above it (see graft.sql.OneTaskScan)
+    ext.injectPlannerStrategy(session => graft.sql.OneTaskScan(session))
+    // the DSv2 metadata-aggregate answer collects on the driver
+    ext.injectPlannerStrategy(_ => graft.sql.MetadataAggLocalScan)
   }
 }
 

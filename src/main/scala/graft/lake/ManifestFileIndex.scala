@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, GraftPartitionParsing, PartitionDirectory, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileIndex, FilePartition, GraftPartitionParsing, HadoopFsRelation, PartitionDirectory, PartitionPath, PartitionSpec, PartitionedFile}
 import org.apache.spark.sql.types.StructType
 
 /** A Spark `FileIndex` over a file list the manifest already holds:
@@ -52,6 +53,28 @@ final class ManifestFileIndex private (
     else prune(partitionFilters).map { case PartitionPath(values, dir) =>
       PartitionDirectory(values, filesByDir.getOrElse(dir, Array.empty[FileStatus]))
     }
+
+  /** The files as a scan of `relation` (a relation over this index)
+    * would split and pack them, when Spark's own packing
+    * (`FilePartition`) puts them in at most one partition: the scan is
+    * then one task. The one notion of "one task" that both
+    * [[graft.sql.InlinePointRead]] and [[graft.sql.OneTaskScan]] use.
+    */
+  def onePartition(session: SparkSession, relation: HadoopFsRelation): Option[Seq[PartitionedFile]] = {
+    val dirs = listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(session, dirs)
+    val splits = dirs.flatMap { d =>
+      d.files.flatMap { f =>
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          relation.fileFormat.isSplitable(session, relation.options, f.getPath), maxSplit, d.values)
+      }
+    }.sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(session, splits, maxSplit) match {
+      case Seq() => Some(Nil)
+      case Seq(only) => Some(only.files.toSeq)
+      case _ => None
+    }
+  }
 
   private def prune(filters: Seq[Expression]): Seq[PartitionPath] = {
     val cols = spec.partitionColumns

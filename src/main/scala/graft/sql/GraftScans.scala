@@ -4,9 +4,13 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.connector.expressions.{Extract, NamedReference, Cast => V2Cast}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.{DataType, DateType, StructField, StructType}
 
@@ -193,10 +197,8 @@ final class GraftScanBuilder(table: GraftReadableTable)
     pushed.getOrElse(new GraftV1FallbackScan(table, required, pruneExpr))
 }
 
-/** The pushed-aggregate answer as a driver-local scan: Spark plans it
-  * as a LocalTableScan — no file, no shuffle. Spark keeps an alias
-  * Project above it, so collecting the answer still runs one Spark
-  * job (the SQL rule's local-relation answer runs none). Statistics
+/** The pushed-aggregate answer as a driver-local scan: no file, no
+  * shuffle, and with [[MetadataAggLocalScan]] no Spark job. Statistics
   * are the literal truth: the rows are already materialized.
   */
 final class GraftMetadataAggScan(
@@ -229,6 +231,25 @@ object GraftMetadataAggScan {
       } ++ aggTypes.zipWithIndex.map { case (dt, i) =>
         StructField(s"_pushed_agg_$i", dt, nullable = true)
       }), rows.toArray)
+}
+
+/** Plans the alias `Project` Spark keeps over a pushed
+  * [[GraftMetadataAggScan]] as a `LocalTableScan` of its evaluated rows,
+  * the fold `ConvertToLocalRelation` makes of the SQL rule's answer: the
+  * query collects on the driver and runs no Spark job. It is a planner
+  * strategy because the pushed scan only appears in the optimizer's
+  * early scan push-down, which runs after every optimizer batch that
+  * `SparkSessionExtensions` can add a rule to.
+  */
+object MetadataAggLocalScan extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case p @ Project(_, DataSourceV2ScanRelation(_, scan: GraftMetadataAggScan, output, _, _)) =>
+      ConvertToLocalRelation(p.withNewChildren(Seq(LocalRelation(output, scan.rows().toSeq)))) match {
+        case l: LocalRelation => LocalTableScanExec(l.output, l.data, None) :: Nil
+        case _ => Nil
+      }
+    case _ => Nil
+  }
 }
 
 /** Fallback scan: the table's native read plan behind the V1 bridge.

@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundRefer
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.METADATA_COL_ATTR_KEY
-import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, HadoopFsRelation, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, TimestampNTZType, TimestampType}
 
 /** A point lookup whose scan would be one task is read on the driver.
@@ -17,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, TimestampNTZ
   * `LocalRelation` of the same output when all of these hold:
   *   - the planner pinned the partition-source key to a finite set
   *     ([[ManifestFileIndex.keyPoints]]);
-  *   - Spark's own packing (`FilePartition`) puts the files in at most
-  *     one partition, so the scan would be one task;
+  *   - Spark's own packing puts the files in at most one partition, so
+  *     the scan would be one task ([[ManifestFileIndex.onePartition]]);
   *   - the plan asks for no `input_file_name()`/`input_file_block_*`
   *     and the relation exposes no `_metadata` column;
   *   - missing and corrupt files are not being ignored.
@@ -55,7 +54,7 @@ case class InlinePointRead(session: SparkSession) extends Rule[LogicalPlan] {
       if !r.output.exists(_.metadata.contains(METADATA_COL_ATTR_KEY))
       key <- r.output.find(_.name == keyName)
       keyOf <- keyReader(key.dataType)
-      part <- onePartition(fs, idx)
+      part <- idx.onePartition(session, fs)
     } yield LocalRelation(r.output, read(r, fs, part, key, points, keyOf))
 
   /** The key's value in the manifest's encoding, for the types whose
@@ -65,25 +64,6 @@ case class InlinePointRead(session: SparkSession) extends Rule[LogicalPlan] {
     case TimestampType | TimestampNTZType | LongType => Some((row, i) => row.getLong(i))
     case IntegerType => Some((row, i) => row.getInt(i).toLong)
     case _ => None
-  }
-
-  /** The files as the scan would split and pack them, when that is at
-    * most one task.
-    */
-  private def onePartition(fs: HadoopFsRelation, idx: ManifestFileIndex): Option[Seq[PartitionedFile]] = {
-    val dirs = idx.listFiles(Nil, Nil)
-    val maxSplit = FilePartition.maxSplitBytes(session, dirs)
-    val splits = dirs.flatMap { d =>
-      d.files.flatMap { f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath,
-          fs.fileFormat.isSplitable(session, fs.options, f.getPath), maxSplit, d.values)
-      }
-    }.sortBy(_.length)(Ordering[Long].reverse)
-    FilePartition.getFilePartitions(session, splits, maxSplit) match {
-      case Seq() => Some(Nil)
-      case Seq(only) => Some(only.files.toSeq)
-      case _ => None
-    }
   }
 
   private def read(

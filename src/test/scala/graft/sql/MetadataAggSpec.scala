@@ -5,6 +5,7 @@ import graft.lake.LakehouseTable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -1395,6 +1396,28 @@ class MetadataAggSpec extends SparkSpec {
       }
       assert(rows.map(_.toString).sorted == scanned.map(_.toString).sorted,
         s"$what: served $rows, scanned $scanned")
+    }
+  }
+
+  test("the DSv2 pushed answer collects on the driver and launches no Spark job") {
+    val (cat, wh) = freshCatalog()
+    mkTable(cat, wh, "z4")
+    mkIdTable(cat, wh, "z5")
+    Seq(s"SELECT count(*) AS n, max(uid) AS mx FROM $cat.gold.z4",
+        s"SELECT sym, count(*) AS n FROM $cat.gold.z5 GROUP BY sym").foreach { sql =>
+      val ruled = spark.sql(sql).collect().map(_.toString).sorted.toSeq
+      withSqlConf("spark.graft.sql.expansion-enabled" -> "false") {
+        val q = spark.sql(sql)
+        val (rows, jobs) = jobsDuring(q.collect().toSeq)
+        assert(q.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec] &&
+          q.queryExecution.optimizedPlan.exists {
+            case DataSourceV2ScanRelation(_, _: GraftMetadataAggScan, _, _, _) => true
+            case _ => false
+          },
+          s"$sql: expected the pushed answer as a bare LocalTableScan, got\n${q.queryExecution.executedPlan}")
+        assert(jobs == 0, s"$sql: the pushed answer started $jobs Spark job(s)")
+        assert(rows.map(_.toString).sorted == ruled, s"$sql: pushed $rows, the rule answered $ruled")
+      }
     }
   }
 
