@@ -171,7 +171,7 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
   private def ingestSymbolInner(
       symbol: String, files: Seq[Path], persistLedger: Boolean): TableAudit = {
     val results =
-      if (cfg.batchedIngest) ingestFilesBatched(symbol, files)
+      if (cfg.batchedIngest) withNanosAsLong(ingestFilesBatched(symbol, files))
       else files.map(f => ingestFile(symbol, f))
     if (persistLedger) ledger.persist()
     val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
@@ -204,10 +204,11 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
     */
   def ingestFile(symbol: String, file: Path): FileIngestResult = {
     val sum = ledger.checksum(file)
-    if (ledger.isUnchanged(file, sum))
-      return FileIngestResult(file.toString, 0, 0, skipped = true, Nil)
+    if (ledger.isUnchanged(file, sum)) FileIngestResult(file.toString, 0, 0, skipped = true, Nil)
+    else withNanosAsLong(ingestChanged(symbol, file, sum))
+  }
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def ingestChanged(symbol: String, file: Path, sum: String): FileIngestResult = {
     val footer = ParquetFooters.footer(file, spark.sessionState.newHadoopConf())
     val tableId = s"${cfg.namespace}.${symbol.toLowerCase}"
     val existing = Option.when(catalog.tableExists(tableId))(catalog.loadTable(tableId))
@@ -258,6 +259,28 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       ledger.record(file, sum)
       FileIngestResult(file.toString, nNew, qc.nullTimeKey, skipped = false, nullKeyIssues(qc))
     } finally df.unpersist()
+  }
+
+  private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+  private val nanosLock = new Object
+  private var nanosUsers = 0
+  private var nanosBefore = "false"
+
+  /** `body` with TIMESTAMP(NANOS) parquet read as longs (see
+    * `graft.Tables.t`), and the caller's own setting back once the last
+    * concurrent ingest of this pipeline has committed.
+    */
+  private def withNanosAsLong[A](body: => A): A = {
+    nanosLock.synchronized {
+      if (nanosUsers == 0) nanosBefore = spark.conf.get(nanosKey)
+      nanosUsers += 1
+      spark.conf.set(nanosKey, "true")
+    }
+    try body
+    finally nanosLock.synchronized {
+      nanosUsers -= 1
+      if (nanosUsers == 0) spark.conf.set(nanosKey, nanosBefore)
+    }
   }
 
   private def rejected(file: Path, qc: QcResult): FileIngestResult =
@@ -434,7 +457,6 @@ final class IngestPipeline(spark: SparkSession, cfg: IngestConfig) {
       columns: Path => Seq[String],
       footerQc: Option[Map[Path, QcResult]],
       keyBounds: Option[(Long, Long)]): (Map[Path, QcResult], Map[String, Long]) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.schema(readSchema).parquet(files.map(_.toString): _*)
       .withColumn("__src", input_file_name())
     val df = Normalize(raw, cfg.timeColumn).persist(StorageLevel.MEMORY_AND_DISK)

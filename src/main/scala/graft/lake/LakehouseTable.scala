@@ -645,7 +645,9 @@ final class LakehouseTable(
             s"${NdvSketch.MaxP} (register arrays stop being " +
             "metadata-sized) — use a larger rsd")
       }
-      meta.copy(tableProperties = Some(meta.props + (key -> value)))
+      val next = meta.copy(tableProperties = Some(meta.props + (key -> value)))
+      checkWriteProperty(next, key)
+      next
     }
   }
 
@@ -1051,28 +1053,19 @@ final class LakehouseTable(
         */
       posColumns: Option[(String, String)] = None,
       meta: TableMetadata = metadata,
-      keyPoints: Option[Array[Long]] = None): DataFrame =
-    if (files.isEmpty) {
-      // empty table: preserve schema + partition columns
-      var empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema(meta))
-      tagColumn.foreach(c => empty = empty.withColumn(c, input_file_name()))
-      posColumns.foreach { case (p, i) =>
-        empty = empty
-          .withColumn(p, lit(null).cast("string"))
-          .withColumn(i, lit(null).cast("long"))
-      }
-      empty
-    } else {
-      val outCols = readSchema(meta).fieldNames.toIndexedSeq.map(col) ++ tagColumn.map(col) ++
-        posColumns.toSeq.flatMap { case (p, i) => Seq(col(p), col(i)) }
-      files.groupBy(_.specIdOrZero).toSeq.sortBy(_._1)
-        .map { case (sid, fs) =>
-          readSpecGroup(meta, meta.specById(sid), fs, tagColumn, posColumns, keyPoints)
-            .select(outCols: _*)
-        }
-        .reduce(_ unionByName _)
-    }
+      keyPoints: Option[Array[Long]] = None): DataFrame = {
+    val outCols = readSchema(meta).fieldNames.toIndexedSeq.map(col) ++ tagColumn.map(col) ++
+      posColumns.toSeq.flatMap { case (p, i) => Seq(col(p), col(i)) }
+    // a read that plans no file is a relation over no file, planned as
+    // any other read
+    val groups =
+      if (files.isEmpty) Seq(meta.defaultSpec.id -> Nil)
+      else files.groupBy(_.specIdOrZero).toSeq.sortBy(_._1)
+    groups.map { case (sid, fs) =>
+      readSpecGroup(meta, meta.specById(sid), fs, tagColumn, posColumns, keyPoints)
+        .select(outCols: _*)
+    }.reduce(_ unionByName _)
+  }
 
   /** One spec's files as one parquet relation (see [[readFiles]]). */
   private def readSpecGroup(
@@ -3023,19 +3016,13 @@ final class LakehouseTable(
     // WRITE time instead of waiting for compaction); `range` range-
     // partitions on (partition cols..., sort cols) for near-disjoint
     // footer spans across sibling files.
-    val sortCols = meta.props.get("write.sort-order")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    sortCols.foreach(c => require(withPart.columns.contains(c),
-      s"write.sort-order column '$c' is not a column of the batch"))
-    val distributed = meta.props.getOrElse("write.distribution-mode", "none") match {
-      case "none" => withPart
+    val sortCols = sortOrder(meta)
+    val distributed = distributionMode(meta) match {
       case "hash" if spec.fields.nonEmpty =>
         withPart.repartition(spec.fieldNames.map(col): _*)
       case "range" if spec.fields.nonEmpty || sortCols.nonEmpty =>
         withPart.repartitionByRange((spec.fieldNames ++ sortCols).distinct.map(col): _*)
-      case "hash" | "range" => withPart // unpartitioned, unsorted: nothing to distribute on
-      case other => throw new IllegalArgumentException(
-        s"unknown write.distribution-mode '$other' (one of: none, hash, range)")
+      case _ => withPart // none, or nothing to distribute on
     }
     // Declared write sort order ("write.sort-order"): task-local sort —
     // footer/page stats line up with the sort columns from the FIRST
@@ -3088,22 +3075,10 @@ final class LakehouseTable(
     * imports stay metadata-only and carry no bloom (always kept).
     */
   private def attachKeyBlooms(meta: TableMetadata, moved: Seq[DataFile]): Seq[DataFile] = {
-    def intProp(name: String): Int = meta.props.get(name).map { v =>
-      try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"table property $name must be an integer, got '$v'")
-      }
-    }.getOrElse(0)
-    val keyBits = intProp("write.key-bloom.bits")
-    val colBits = intProp("write.column-bloom.bits")
+    val keyBits = bloomBits(meta, "write.key-bloom.bits")
+    val colBits = bloomBits(meta, "write.column-bloom.bits")
     if (moved.isEmpty || (keyBits <= 0 && colBits <= 0)) return moved
-    val sidecarMode = meta.props.get("write.key-bloom.location")
-      .map(_.trim.toLowerCase) match {
-      case None | Some("inline") => false
-      case Some("sidecar") => true
-      case Some(other) => throw new IllegalArgumentException(
-        s"table property write.key-bloom.location must be 'inline' or 'sidecar', got '$other'")
-    }
+    val sidecarMode = sidecarBlooms(meta)
     val frozen = StructType.fromDDL(meta.schemaDdl)
     val identitySources =
       meta.defaultSpec.fields.filter(_.transform == "identity").map(_.source).toSet
@@ -3435,14 +3410,56 @@ final class LakehouseTable(
     * or lower — the same knob Iceberg exposes via worker-pool sizing.
     */
   private def moveParallelism(meta: TableMetadata): Int =
-    meta.props.get("write.move-parallelism").map { v =>
-      val n = try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"table property write.move-parallelism must be an integer, got '$v' — " +
-            "unset or fix the property (writes are refused until then)")
-      }
-      math.min(64, math.max(1, n))
-    }.getOrElse(16)
+    intProperty(meta, "write.move-parallelism").fold(16)(n => math.min(64, math.max(1, n)))
+
+  /** Checks the write property `key` of `meta` with the parser the
+    * write path reads it with, so `setProperty` refuses a bad value,
+    * naming the key, before any write trips on it.
+    */
+  private def checkWriteProperty(meta: TableMetadata, key: String): Unit = key match {
+    case "write.key-bloom.bits" | "write.column-bloom.bits" => bloomBits(meta, key)
+    case "write.key-bloom.location" => sidecarBlooms(meta)
+    case "write.move-parallelism" => moveParallelism(meta)
+    case "write.distribution-mode" => distributionMode(meta)
+    case "write.sort-order" => sortOrder(meta)
+    case _ =>
+  }
+
+  private def intProperty(meta: TableMetadata, key: String): Option[Int] =
+    meta.props.get(key).map(v => v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"table property $key must be an integer, got '$v'")))
+
+  /** Bits per file of a key or column bloom (`write.key-bloom.bits`,
+    * `write.column-bloom.bits`); 0 or less records none.
+    */
+  private def bloomBits(meta: TableMetadata, key: String): Int = intProperty(meta, key).getOrElse(0)
+
+  /** Whether blooms live in sidecar files (`write.key-bloom.location`). */
+  private def sidecarBlooms(meta: TableMetadata): Boolean =
+    meta.props.get("write.key-bloom.location").map(_.trim.toLowerCase) match {
+      case None | Some("inline") => false
+      case Some("sidecar") => true
+      case Some(other) => throw new IllegalArgumentException(
+        s"table property write.key-bloom.location must be 'inline' or 'sidecar', got '$other'")
+    }
+
+  /** `write.distribution-mode`: none (the default), hash or range. */
+  private def distributionMode(meta: TableMetadata): String =
+    meta.props.getOrElse("write.distribution-mode", "none") match {
+      case m @ ("none" | "hash" | "range") => m
+      case other => throw new IllegalArgumentException(
+        s"unknown write.distribution-mode '$other' (one of: none, hash, range)")
+    }
+
+  /** `write.sort-order`: the table columns each written file sorts on. */
+  private def sortOrder(meta: TableMetadata): Seq[String] = {
+    val cols = meta.props.get("write.sort-order")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val known = StructType.fromDDL(meta.schemaDdl).fieldNames ++ meta.defaultSpec.fieldNames
+    cols.foreach(c => require(known.contains(c),
+      s"write.sort-order column '$c' is not a column of the table (columns: ${known.mkString(", ")})"))
+    cols
+  }
 
   /** The table's declared `write.stats-columns` — every rewrite path
     * (append, compact, binpack, z-order) records bounds + null counts

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.planning.ScanOperation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -28,6 +28,12 @@ import scala.reflect.ClassTag
   * [[OneTaskScanExec]]. Aggregates, global sorts and windows above it
   * then need no exchange, and the query runs one job. Any other plan
   * is left to Spark's strategies.
+  *
+  * The filter above the scan compares against [[ParamLiteral]]s, so a
+  * query with new filter values compiles no new class: a compile of
+  * tens of milliseconds is large next to a one-task scan. The scan's
+  * own data and partition filters keep the real literals, so file
+  * pruning and parquet pushdown see them as before.
   */
 case class OneTaskScan(session: SparkSession) extends SparkStrategy {
 
@@ -35,7 +41,10 @@ case class OneTaskScan(session: SparkSession) extends SparkStrategy {
     case ScanOperation(_, _, _,
         LogicalRelation(fs @ HadoopFsRelation(idx: ManifestFileIndex, _, _, _, _, _), _, _, false, _))
         if idx.onePartition(session, fs).isDefined =>
-      FileSourceStrategy(plan).map(_.transformUp { case s: FileSourceScanExec => OneTaskScanExec(s) })
+      FileSourceStrategy(plan).map(_.transformUp {
+        case s: FileSourceScanExec => OneTaskScanExec(s)
+        case f: FilterExec => f.copy(condition = ParamLiteral.params(f.condition))
+      })
     case _ => Nil
   }
 }

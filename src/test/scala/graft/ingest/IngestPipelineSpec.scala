@@ -83,4 +83,19 @@ class IngestPipelineSpec extends SparkSpec {
     assert(run.totalRowsAppended == 120)
     assert(p.catalog.loadTable("gold.eurusd").read().count() == 120)
   }
+
+  test("file-at-a-time and batched runs leave the caller's nanosAsLong as it was") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(key)
+    try for (batched <- Seq(false, true); value <- Seq(None, Some("false"))) {
+      value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      val prior = spark.conf.getOption(key)
+      val root = tmpDir("data")
+      writeSymbolFile(root, "EURUSD", "a.parquet", 0 until 100)
+      writeSymbolFile(root, "EURUSD", "b.parquet", 80 until 120)
+      val run = new IngestPipeline(spark, cfg(tmpDir("wh")).copy(batchedIngest = batched)).run(root)
+      assert(run.totalRowsAppended == 120)
+      assert(spark.conf.getOption(key) == prior, s"batched=$batched, before the run $prior")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -190,8 +190,7 @@ class BloomSidecarSpec extends SparkSpec {
   }
 
   test("an unknown location value refuses loudly") {
-    val t = mkTable("bs5", Some("puffin"))
-    val e = intercept[IllegalArgumentException](t.append(residue(0)))
+    val e = intercept[IllegalArgumentException](mkTable("bs5", Some("puffin")))
     assert(e.getMessage.contains("write.key-bloom.location"))
   }
 }

@@ -54,12 +54,12 @@ class TablePropertiesSpec extends SparkSpec {
     t.setProperty("write.move-parallelism", "10000")
     t.append(df(40 until 44).coalesce(1))
     assert(t.read().count() == 44L)
-    // a non-numeric value refuses writes with a message NAMING the
-    // property (not a bare NumberFormatException)
-    t.setProperty("write.move-parallelism", "4x")
-    val e = intercept[IllegalArgumentException](t.append(df(44 until 46).coalesce(1)))
+    // a non-numeric value is refused when set, with a message NAMING
+    // the property (not a bare NumberFormatException); the last valid
+    // value stays
+    val e = intercept[IllegalArgumentException](t.setProperty("write.move-parallelism", "4x"))
     assert(e.getMessage.contains("write.move-parallelism"), e.getMessage)
-    t.unsetProperty("write.move-parallelism")
+    assert(t.properties("write.move-parallelism") == "10000")
     t.append(df(44 until 46).coalesce(1))
     assert(t.read().count() == 46L)
   }
@@ -133,10 +133,9 @@ class TablePropertiesSpec extends SparkSpec {
     val cells = 12 // 3 symbols × 4 days
     assert(hashed == cells, s"hash distribution → one file per cell, got $hashed")
     assert(sprayed > hashed, s"none-mode sprays ($sprayed) more files than hash ($hashed)")
-    // unknown mode fails loudly
+    // an unknown mode is refused when set
     val t = fresh("dist-bad")
-    t.setProperty("write.distribution-mode", "nope")
-    val e = intercept[IllegalArgumentException](t.append(df(Seq(1))))
+    val e = intercept[IllegalArgumentException](t.setProperty("write.distribution-mode", "nope"))
     assert(e.getMessage.contains("distribution-mode"))
   }
 
@@ -181,9 +180,29 @@ class TablePropertiesSpec extends SparkSpec {
         .select("Bid").collect().map(_.getDouble(0)).toSeq
       assert(bids == bids.sorted, s"rows in ${f.path} must be sorted on Bid")
     }
-    // unknown sort column fails loudly at write
-    t.setProperty("write.sort-order", "Nope")
-    val e = intercept[IllegalArgumentException](t.append(df(Seq(1))))
+    // an unknown sort column is refused when set
+    val e = intercept[IllegalArgumentException](t.setProperty("write.sort-order", "Nope"))
     assert(e.getMessage.contains("write.sort-order"))
+    assert(t.properties("write.sort-order") == "Bid")
+  }
+
+  test("the checked write properties refuse a bad value when set, naming the key") {
+    val t = fresh("write-props")
+    val valid = Seq(
+      "write.key-bloom.bits" -> "4096", "write.column-bloom.bits" -> "0",
+      "write.key-bloom.location" -> "sidecar", "write.move-parallelism" -> "8",
+      "write.distribution-mode" -> "range", "write.sort-order" -> "EventId, DateTime_year")
+    val bad = Seq(
+      "write.key-bloom.bits" -> "4k", "write.column-bloom.bits" -> "", "write.key-bloom.location" -> "puffin",
+      "write.move-parallelism" -> "1.5", "write.distribution-mode" -> "HASH", "write.sort-order" -> "EventId,Nope")
+    bad.foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException](t.setProperty(k, v))
+      assert(e.getMessage.contains(k), s"$k=$v: ${e.getMessage}")
+    }
+    assert(t.properties.isEmpty, "a refused value is not recorded")
+    valid.foreach { case (k, v) => t.setProperty(k, v) }
+    assert(t.properties == valid.toMap)
+    t.append(df(0 until 8).coalesce(1))
+    assert(t.read().count() == 8L && t.currentDataFiles.forall(_.keyBloomRef.isDefined))
   }
 }

@@ -172,6 +172,17 @@ class OneTaskScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a read whose manifest planning leaves no file plans as one stage") {
+    val ref = ticks()
+    val q = s"SELECT count(*) AS n FROM $ref WHERE DateTime >= ${lit(1000)} AND Bid > 0"
+    withSqlConf(oneTask, "spark.graft.sql.metadata-aggregates" -> "false") {
+      val df = spark.sql(q)
+      val (rows, jobs) = jobsDuring(df.collect().toSeq)
+      assert(rows == Seq(Row(0L)) && jobs <= 1, s"$rows in $jobs jobs")
+      assert(plannedFiles(df) == 0 && oneTaskScans(df) == 1 && shuffles(df) == 0, plan(df))
+    }
+  }
+
   test("the exec always yields exactly one partition, rows and batches alike") {
     val three = spark.range(0, 30, 1, 3).queryExecution.executedPlan
     assert(three.execute().getNumPartitions == 3)
