@@ -3455,7 +3455,7 @@ final class LakehouseTable(
   private def sortOrder(meta: TableMetadata): Seq[String] = {
     val cols = meta.props.get("write.sort-order")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val known = StructType.fromDDL(meta.schemaDdl).fieldNames ++ meta.defaultSpec.fieldNames
+    lazy val known = StructType.fromDDL(meta.schemaDdl).fieldNames ++ meta.defaultSpec.fieldNames
     cols.foreach(c => require(known.contains(c),
       s"write.sort-order column '$c' is not a column of the table (columns: ${known.mkString(", ")})"))
     cols

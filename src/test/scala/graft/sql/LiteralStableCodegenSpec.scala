@@ -46,7 +46,7 @@ class LiteralStableCodegenSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def plan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan
 
-  test("range queries with new windows and point lookups with new keys compile no class") {
+  test("range and bars queries with new windows and point lookups with new keys compile no class") {
     val (cat, wh) = freshCatalog()
     def tick(keys: Range) = keys.map(k => (tsOf(k), 1.0 + k * 0.125, 1.5 + k * 0.125, k * 2.0))
       .toDF("DateTime", "Bid", "Ask", "BidVolume")
@@ -57,13 +57,19 @@ class LiteralStableCodegenSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def range(a: Int, b: Int) = spark.sql(
       s"""SELECT count(*) AS n, min(Bid) AS lo, max(Ask) AS hi, sum(BidVolume) AS vol
          |FROM $ref WHERE DateTime >= ${lit(a)} AND DateTime < ${lit(b)}""".stripMargin)
+    def bars(a: Int, b: Int) = spark.sql(
+      s"""SELECT date_trunc('HOUR', DateTime) AS hour, min_by(Bid, DateTime) AS open,
+         |  max(Bid) AS high, min(Bid) AS low, max_by(Bid, DateTime) AS close, count(*) AS ticks
+         |FROM $ref WHERE DateTime >= ${lit(a)} AND DateTime < ${lit(b)} GROUP BY 1 ORDER BY 1""".stripMargin)
     def point(k: Int) = spark.sql(s"SELECT DateTime, Bid, Ask, BidVolume FROM $ref WHERE DateTime = ${lit(k)}")
     withSqlConf(oneTask, "spark.sql.adaptive.enabled" -> "true") {
       assert(range(10, 250).collect().head.getLong(0) == 240L)
       assert(point(7).collect().map(_.getTimestamp(0)).toSeq == Seq(tsOf(7)))
+      assert(bars(0, 144).collect().length == 24)
       val before = compiles()
       (1 to 5).foreach { i =>
         assert(range(3 * i, 100 + 29 * i).collect().head.getLong(0) == 100 + 26 * i)
+        assert(bars(6 * i, 120 + 6 * i).collect().map(_.getLong(5)).sum == 120)
         assert(point(40 * i + 1).collect().map(_.getTimestamp(0)).toSeq == Seq(tsOf(40 * i + 1)))
       }
       val compiled = compiles() - before
